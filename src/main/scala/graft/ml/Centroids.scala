@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -134,6 +135,13 @@ object Centroids {
     founders.join(vecs, "founder_id")
       .select(col("semantic_group"), col("center"), col("n"))
   }
+
+  /** [[fitCentroids]]'s schema as parquet reads it back (every column
+    * nullable), for schema-given loads through ModelStore. */
+  val StateSchema: StructType = StructType(Seq(
+    StructField("semantic_group", StringType),
+    StructField("center", ArrayType(FloatType)),
+    StructField("n", LongType)))
 
   /** Scale-out variant: stable shard key → parallel per-shard folds with
     * per-shard namespaces. Trades the reference's single global namespace

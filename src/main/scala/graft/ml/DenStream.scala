@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -154,17 +155,27 @@ object DenStream {
       .toDF("cluster_id", "center", "weight", "last_t", "epsilon", "lambda")
   }
 
+  /** [[stateDF]]'s schema as parquet reads it back (every column
+    * nullable), for schema-given loads through ModelStore. */
+  val StateSchema: StructType = StructType(Seq(
+    StructField("cluster_id", IntegerType),
+    StructField("center", ArrayType(DoubleType)),
+    StructField("weight", DoubleType),
+    StructField("last_t", LongType),
+    StructField("epsilon", DoubleType),
+    StructField("lambda", DoubleType)))
+
   /** Rebuild a model from persisted state. Persisted hyperparameters (if
-    * present — older state tables may lack the columns) override the
-    * arguments, so inference always uses the training-time epsilon. */
+    * present — older state tables may lack the columns, which a
+    * [[StateSchema]] read yields as nulls) override the arguments, so
+    * inference always uses the training-time epsilon. */
   def fromStateDF(df: DataFrame, epsilon: Double = 1.0,
       lambda: Double = 0.0005): Model = {
     val rows = df.collect()
-    val hasHyper = df.columns.contains("epsilon")
-    val eps = if (hasHyper && rows.nonEmpty)
-      rows.head.getAs[Double]("epsilon") else epsilon
-    val lam = if (hasHyper && rows.nonEmpty)
-      rows.head.getAs[Double]("lambda") else lambda
+    val hasHyper = df.columns.contains("epsilon") && rows.nonEmpty &&
+      !rows.head.isNullAt(rows.head.fieldIndex("epsilon"))
+    val eps = if (hasHyper) rows.head.getAs[Double]("epsilon") else epsilon
+    val lam = if (hasHyper) rows.head.getAs[Double]("lambda") else lambda
     val m = new Model(eps, lam)
     rows.foreach { r =>
       m.clusters += MicroCluster(r.getInt(0), r.getSeq[Double](1).toArray,

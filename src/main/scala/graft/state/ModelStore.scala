@@ -3,7 +3,8 @@ package graft.state
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Versioned model/state persistence with blue/green publication.
   *
@@ -172,12 +173,23 @@ object ModelStore {
     * missing (covers a crash between publish()'s two renames — prod was
     * moved aside but staging never landed). */
   def load(spark: SparkSession, root: String, name: String): DataFrame =
-    if (Files.exists(Paths.get(root, name)))
-      spark.read.parquet(s"$root/$name")
-    else if (Files.exists(Paths.get(root, s"${name}_backup")))
-      spark.read.parquet(s"$root/${name}_backup")
+    loadWith(spark.read, root, name)
+
+  /** [[load]] of a table whose schema the caller fixes (e.g.
+    * [[graft.ml.DenStream.StateSchema]]): no schema-inference job, which
+    * `spark.read.parquet` otherwise runs on every read to merge footers.
+    * Same backup fallback. */
+  def load(spark: SparkSession, root: String, name: String,
+      schema: StructType): DataFrame =
+    loadWith(spark.read.schema(schema), root, name)
+
+  private def loadWith(reader: DataFrameReader, root: String,
+      name: String): DataFrame =
+    if (!Files.exists(Paths.get(root, name)) &&
+        Files.exists(Paths.get(root, s"${name}_backup")))
+      reader.parquet(s"$root/${name}_backup")
     else
-      spark.read.parquet(s"$root/$name") // surface the original error
+      reader.parquet(s"$root/$name") // a missing table surfaces its error
 
   def exists(root: String, name: String): Boolean =
     Files.exists(Paths.get(root, name))

@@ -55,6 +55,39 @@ class StateRoundtripSpec extends AnyFunSuite {
     assert(enriched.count() > 0)
   }
 
+  test("schema-given ModelStore.load: no inference job, backup " +
+      "fallback, old state without hyperparameters (A12/A13)") {
+    val root = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    def state(eps: Double) = {
+      val m = new DenStream.Model(eps, 0.0005)
+      m.learnOne(Array(1f, 0f))
+      DenStream.stateDF(spark, m)
+    }
+    def load(name: String) =
+      ModelStore.load(spark, root, name, DenStream.StateSchema)
+    ModelStore.save(state(1.0), root, "denstream") // v1
+    ModelStore.save(state(2.0), root, "denstream") // v2; v1 is the backup
+    assert(org.apache.spark.TestJobs.count(spark.sparkContext)(
+      load("denstream")) == 0)
+    assert(load("denstream").schema == DenStream.StateSchema)
+    assert(DenStream.fromStateDF(load("denstream")).epsilon == 2.0)
+
+    // crash window: prod vanished mid-publish -> the schema-given read
+    // falls back to the backup exactly like the inferring one
+    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root, "denstream"))
+    assert(DenStream.fromStateDF(load("denstream")).epsilon == 1.0)
+    // neither copy: the read error surfaces
+    graft.util.Fs.deleteRecursively(
+      java.nio.file.Paths.get(root, "denstream_backup"))
+    intercept[org.apache.spark.sql.AnalysisException](load("denstream"))
+
+    // state written before the hyperparameter columns existed reads them
+    // as nulls; the arguments stay the fallback
+    ModelStore.save(state(2.0).drop("epsilon", "lambda"), root, "old")
+    val old = DenStream.fromStateDF(load("old"), epsilon = 0.7)
+    assert(old.epsilon == 0.7 && old.clusters.length == 1)
+  }
+
   test("partitioned sink: partition pruning reaches the scan (A7 at scale)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
