@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** "q57_dedup_components" -> "q57" — the stdout metric-line key.
     * Object-level (not local to main) so EdgeCasesSpec's tail-budget
@@ -17,26 +16,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The whitelisted k-bounded unpartitioned windows (q75's category
-    // dictionary, the per-source wsum frames, the n_flagged guards —
-    // each justified in PlanAuditSpec's whitelist) spam `WindowExec: No
-    // Partition Defined` into the bench tail and bury the one JSON line
-    // the driver parses (r11 tail unparseable, r12 flooded). Silence
-    // that one logger — observability only, zero plan changes.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
-    // Same fix, round 3 (r13 verdict item 5): the streaming-sink queries
-    // each emit several micro-batch warnings ("Disabling AQE since AQE is
-    // not supported in stateful workloads" from MicroBatchExecution /
-    // IncrementalExecution, ResolveWriteToStream's checkpoint notes) and
+    val spark =
+      Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    // Same fix as Session.local's window logger: the streaming-sink
+    // queries each emit several micro-batch warnings ("Disabling AQE
+    // since AQE is not supported in stateful workloads" from
+    // MicroBatchExecution / IncrementalExecution, ResolveWriteToStream's
+    // checkpoint notes) and
     // stop() emits DAGScheduler "Failed to cancel job group" — all
     // benign per-query noise that floods the captured tail around the
     // one JSON line. Prefix loggers cover the runtime subpackage too.

@@ -89,10 +89,8 @@ object SimSearch {
 
   /** Exact squared-L2 top-k under a FIXED-POINT total order
     * (`floor(d·1e6 + 0.5)` longs, ties by cid) — the hash-exact eval
-    * ground truth the PQ report card ranks against (q189 and
-    * tools/ProfilePqRecall share THIS definition, so the shipped eval
-    * and the m/ksub tuning sweep can never measure against different
-    * truths). Labeled O(|q|·N) eval baseline: queries broadcast, the
+    * ground truth the PQ report card ranks against (q189 and the
+    * m/ksub tuning sweep in BASELINE.md share THIS definition). Labeled O(|q|·N) eval baseline: queries broadcast, the
     * corpus streams through one fused distance + k-bounded rank. Emits
     * `(qid, cid, l2_fp, rn)`. */
   def knnBruteL2Fp(queries: DataFrame, candidates: DataFrame,

@@ -2417,7 +2417,7 @@ object LlmQueries {
     * nothing all-pairs anywhere — candidate generation is k·|sources|
     * exploded rows, estimates are array HOFs over 128-long sketches,
     * the exact pass joins only the ≤ 40 sources the top pairs name.
-    * [[graft.tools.ProfileQ237]] measures candidate count vs the
+    * BASELINE.md (ProfileQ237) records candidate count vs the
     * quadratic all-pairs count across the stress decades. */
   def q237KmvBandedPairs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -2694,10 +2694,10 @@ object LlmQueries {
     * fixtures the data is unskewed (max key share 86 bp at sf0.01,
     * 9 bp at sf0.1 — CMS collision bias adds < 40 bp at width 256,
     * an order below the threshold) so the decision is `plain` at
-    * every verified decade; [[graft.tools.ProfileQ233]] materializes a
-    * hot-key twin of the events table (30% of rows remapped to one
-    * user) and shows the SAME query flipping to `salted`, with the
-    * measured plain/salted ladder beside it. Driver state is two longs
+    * every verified decade; on a hot-key twin of the events table (30%
+    * of rows remapped to one user) the SAME query flips to `salted`
+    * (BASELINE.md, ProfileQ233, with the measured plain/salted
+    * ladder). Driver state is two longs
     * (the q230 precedent); everything else stays in the plan. */
   def q233SkewPlanner(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -2899,7 +2899,7 @@ object LlmQueries {
     * replicates facts into DISJOINT user-id spaces while the seed
     * cohort stays constant, so both seed pairs hold at their sf0.1
     * mass while clicks⋈purchases grows 100× — the SAME query plans
-    * seed-first ([[graft.tools.ProfileQ236]] measures the flip).
+    * seed-first (BASELINE.md, ProfileQ236, records the flip).
     * Driver state is three estimate longs + three side counts (the
     * q230 precedent); everything else stays in the plan. The reference
     * delegates join ordering to Postgres' planner
@@ -7366,9 +7366,8 @@ object LlmQueries {
       |  CAST(MAX(cnt) AS BIGINT) AS top_2gram_count
       |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  /** q97's intermediate stages, exposed so `tools.ProfileQ97` times the
-    * EXACT plans the query runs (a hand-copied profiler would silently
-    * drift from the pipeline it claims to attribute). */
+  /** q97's intermediate stages, shared by q97 and its sibling corpus
+    * queries so each runs the EXACT same plans. */
   final case class CorpusStages(clean: DataFrame, reps: DataFrame,
       pairs: DataFrame, keepers: DataFrame, decon: DataFrame)
 

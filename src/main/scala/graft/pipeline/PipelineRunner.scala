@@ -25,14 +25,8 @@ object PipelineRunner {
 
   def main(args: Array[String]): Unit = {
     val mode = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     try mode match {
       case "train" => train(spark, args(1), args(2), args(3))
       case "incremental" =>

@@ -18,14 +18,8 @@ object QualityRunner {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val limit = if (args.length > 1) args(1).toInt else 2000
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     try run(spark, sfDir, limit) finally spark.stop()
   }
 

@@ -7,7 +7,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
@@ -17,16 +16,8 @@ object ProfileJobs {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileJobs <queryName> [more...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark =
+      graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     Seq("org.apache.spark.sql.execution.streaming",
         "org.apache.spark.scheduler.DAGScheduler").foreach(l =>
       org.apache.logging.log4j.core.config.Configurator.setLevel(

@@ -75,8 +75,7 @@ class PlanAuditSpec extends AnyFunSuite {
     "q230_join_planner")     // 1-row estimate/stat crossJoins per pair
 
   test("no unintended cartesian or nested-loop joins anywhere") {
-    val skip = Set("q60_stream_volume", "q61_stream_semantic",
-      "q63_stream_stream_join", "q72_csv_roundtrip") // streaming/side-effect
+    val skip = Set("q72_csv_roundtrip") // side-effect
     val offenders = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(skip.contains)
       .flatMap { name =>
@@ -606,8 +605,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // whitelisted per-source/per-category aggregation cardinality.
     import org.apache.spark.sql.catalyst.plans.logical.{
       GlobalLimit, LocalLimit, Window => LWindow}
-    val skip = Set("q60_stream_volume", "q61_stream_semantic",
-      "q63_stream_stream_join", "q72_csv_roundtrip")
+    val skip = Set("q72_csv_roundtrip")
     val offenders = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(skip.contains)
       .flatMap { name =>
