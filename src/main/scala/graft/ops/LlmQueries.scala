@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Corpus, Dedup, Keyword, Layout, Multimodal, SimSearch, Sketch, TextOps}
+import graft.util.Fixtures
 import Tables._
 
 /** LLM-training-data operator surface: dedup, similarity search, text
@@ -1904,8 +1905,8 @@ object LlmQueries {
     * clustered data) emits files_z = 0 without scanning. */
   def q223StoredLayoutPruning(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // the shared fixture's v1 IS this store (§76 policy — one
-    // saveLayout lifecycle serves the whole q223/q226/q238-q250 family)
+    // the shared mutation store's v1 IS this store (one saveLayout
+    // lifecycle serves the whole q223/q226/q238-q250 family)
     val (rows, zm) = Layout.loadLayout(s, mutStore.root(s, d))
     // the reader's metadata cache: file-count-sized BY CONSTRUCTION
     val zones = zm.select($"file_id", $"min_ub", $"max_ub",
@@ -1979,9 +1980,9 @@ object LlmQueries {
         Seq("file_t"), "left")
       .withColumn("file_h",
         when($"rw".isNotNull, $"file_z" + 1000L).otherwise($"file_t"))
-    // before (events_t) and zorder (events_z) are the SHARED fixture's
-    // incumbents (§76 policy); only the query-specific hybrid 'after'
-    // store is built here, itself once per JVM per dataset dir
+    // before (events_t) and zorder (events_z) are the shared mutation
+    // store's incumbents; only the query-specific hybrid 'after' store
+    // is built here, as a sibling store fixture
     val rootB = mutStore.tStore(s, d)
     val rootA = mutStore.ensureStore(s, d, "events_h") { r =>
       Layout.saveLayout(hybrid, r, "events_h", "file_h")
@@ -3018,11 +3019,11 @@ object LlmQueries {
     * (/root/reference/src/db/connection.py:10-19) and lets Postgres
     * own storage; on an immutable parquet lake the rewrite IS the
     * delete — north-star extension. */
-  /** The shared mutation-store lifecycle backing the q238–q250 family
-    * (the §71/§76 shared-store policy extended per the r14 verdict):
-    * ONE memoized store root per dataset dir with the v1 incumbent
-    * saved once, and each mutation LINEAGE published lazily exactly
-    * once under its own version name — so eight queries stop paying
+  /** The shared mutation-store lifecycle backing the q238–q250 family,
+    * a store fixture ([[graft.util.Fixtures]]): ONE store root per
+    * dataset dir with the v1 incumbent saved once, and each mutation
+    * LINEAGE published lazily exactly once under its own version name,
+    * registered as its own store fixture — so eight queries stop paying
     * eight private saveLayout lifecycles and instead compose read
     * surfaces over one store, exactly how a real lakehouse is used.
     * Lineages (all copy-on-write, all pair-atomic):
@@ -3032,29 +3033,24 @@ object LlmQueries {
     *   events_z_p2   v1 − RTBF purge                    (q238/245)
     *   events_z_e2   v1 + schema-evolving delta         (q248/249/259)
     *   events_z_e3   e2 with weight updated in place    (q249/259)
-    * Every build is deterministic, so results are identical whichever
-    * query triggers it; oracles replay each lineage from the source
-    * table and are unaffected by the sharing. */
+    * Oracles replay each lineage from the source table and are
+    * unaffected by the sharing. */
   private[ops] final case class MutVersion(res: Layout.PurgeResult,
     cohort: Seq[Long])
 
   private[ops] object mutStore {
     /** the standard re-keying offset for late-insert deltas */
     val Off = 1000000000000L
-    private val rootCache = scala.collection.mutable.Map[String, String]()
-    private val verCache =
-      scala.collection.mutable.Map[(String, String), MutVersion]()
 
     /** Store root with the v1 incumbent (`events_z`) saved, once per
       * dataset dir. */
-    def root(s: SparkSession, d: String): String = rootCache.synchronized {
-      rootCache.getOrElseUpdate(d, {
+    def root(s: SparkSession, d: String): String =
+      Fixtures.store("mutstore", d) {
         val laid = Layout.eventLayout(Tables.events(s, d))
         val r = graft.util.Fs.tempRoot("graft_mutstore").toString
         Layout.saveLayout(laid, r)
         r
-      })
-    }
+      }
 
     def load(s: SparkSession, d: String, name: String,
         mergeSchema: Boolean = false): DataFrame =
@@ -3062,15 +3058,13 @@ object LlmQueries {
 
     def v1(s: SparkSession, d: String): DataFrame = load(s, d, "events_z")
 
-    /** q240's merge delta: genuinely new late inserts (re-keyed +Off)
-      * plus re-delivered duplicates of stored events. */
-    def mergeDelta(s: SparkSession, d: String): DataFrame = {
-      import s.implicits._
-      val rows = v1(s, d)
-      rows.filter($"event_id" % 131 === 3)
-        .withColumn("event_id", $"event_id" + Off)
-        .unionByName(rows.filter($"event_id" % 131 === 5))
-    }
+    /** q240's merge delta over a stored v1: genuinely new late inserts
+      * (`event_id % 131 == 3`, re-keyed +Off) plus re-delivered
+      * duplicates of stored events (`event_id % 131 == 5`). */
+    def mergeDelta(v1: DataFrame): DataFrame =
+      v1.filter(col("event_id") % 131 === 3)
+        .withColumn("event_id", col("event_id") + Off)
+        .unionByName(v1.filter(col("event_id") % 131 === 5))
 
     /** q248's evolution delta: late inserts carrying the evolved
       * `weight` column the v1 schema lacks. */
@@ -3091,24 +3085,16 @@ object LlmQueries {
         .collect().map(_.getLong(0)).toSeq
     }
 
-    // verCache's monitor is re-entrant, so a lineage builder may ensure
-    // its base lineage from inside its own build; builds serialize,
-    // which is exactly the once-per-JVM contract
     private def ensure(s: SparkSession, d: String, name: String)(
         build: String => MutVersion): MutVersion =
-      verCache.synchronized {
-        verCache.getOrElseUpdate((d, name), build(root(s, d)))
-      }
+      Fixtures.store(s"mutstore/$name", d)(build(root(s, d)))
 
-    // non-lineage sibling stores on the same root (the layout-eval
-    // family's incumbents), each saved at most once per JVM per dir
-    private val builtCache = scala.collection.mutable.Set[(String, String)]()
+    /** A non-lineage sibling store on the same root (the layout-eval
+      * family's incumbents), saved at most once per dir. */
     private[ops] def ensureStore(s: SparkSession, d: String,
         name: String)(build: String => Unit): String = {
       val r = root(s, d)
-      builtCache.synchronized {
-        if (!builtCache((d, name))) { build(r); builtCache += ((d, name)) }
-      }
+      Fixtures.store(s"mutstore.sibling/$name", d)(build(r))
       r
     }
 
@@ -3123,7 +3109,7 @@ object LlmQueries {
     /** v1 + [[mergeDelta]] → `events_z_m2`. */
     def merged(s: SparkSession, d: String): MutVersion =
       ensure(s, d, "events_z_m2") { r =>
-        val delta = mergeDelta(s, d).localCheckpoint()
+        val delta = mergeDelta(v1(s, d)).localCheckpoint()
         MutVersion(Layout.upsertRows(s, r, "events_z", "file_z", delta,
           "events_z_m2"), Nil)
       }
@@ -3616,12 +3602,11 @@ object LlmQueries {
   def q244IncrementalView(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, d).select($"event_id", $"user_id")
-    val off = 1000000000000L
     val viewBase = ev.groupBy($"user_id")
       .agg(count(lit(1)).as("n_events"), sum($"event_id").as("e_mass"))
     // the arriving commit (in production: q243's feed; derived here)
     val ins = ev.filter($"event_id" % 131 === 3)
-      .withColumn("event_id", $"event_id" + off)
+      .withColumn("event_id", $"event_id" + mutStore.Off)
     val dels = ev.unionByName(ins).filter($"user_id" % 499 === 7)
     val feed = ins
       .select(lit("insert").as("op"), $"event_id", $"user_id")
@@ -4017,10 +4002,9 @@ object LlmQueries {
     * full logs table every batch
     * (/root/reference/src/db/pattern_ops.py:37-39) — north-star
     * extension. */
-  /** q259's maintained fold, executed on EVERY invocation (r16: the
-    * r15 verdict de-gamed the once-per-JVM memo — a query named for
-    * its maintenance must execute it; only the cross-query STORE
-    * versions stay shared via [[mutStore]]). Returns (maintained view,
+  /** q259's maintained fold, executed on EVERY invocation: a query
+    * named for its maintenance must execute it; the [[mutStore]]
+    * versions it folds over are fixtures. Returns (maintained view,
     * feed users, n_updates), frames checkpointed within the
     * invocation because fold + totals + emit all consume them. */
   private def valFold(s: SparkSession, d: String)
@@ -4138,10 +4122,9 @@ object LlmQueries {
     * and hash-fails on w_max; one that repaired by rescanning
     * everything fails the files_scanned gate. 100 TB shape:
     * maintenance ∝ feed + damaged-group fan-out. */
-  /** q263's maintained chain, executed on EVERY invocation (r16: the
-    * r15 verdict de-gamed the once-per-JVM memo — the MAX fold and its
-    * bounded repair are what the query is named for; only the shared
-    * [[mutStore]] versions it folds OVER stay cross-query fixtures).
+  /** q263's maintained chain, executed on EVERY invocation: the MAX
+    * fold and its bounded repair are what the query is named for; the
+    * [[mutStore]] versions it folds OVER are fixtures.
     * Returns (final view, changed users, n_damaged, files_scanned,
     * files_total), the first two localCheckpointed because the totals
     * aggregate and the changed-row emit both consume them. */
@@ -4296,38 +4279,40 @@ object LlmQueries {
     * The reference deletes only from Postgres and its pickled sklearn
     * index never forgets (/root/reference/src/ml/vector_engine.py:
     * 47-61) — north-star extension. */
-  private val ivfPurgeCache =
-    scala.collection.mutable.Map[String, (Seq[Int], Seq[Int])]()
   def q251IndexPurge(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = embeddings(s, d)
-    val root = ivfFixture(s, d) // shared v1: ivfsq (+ id-Blooms)
-    val tombVecs = e.filter($"vec_id" % 89 === 13).localCheckpoint()
-    require(tombVecs.count() > 0, s"q251: no tombstoned vectors at $d")
-    val (lists0, _) = graft.llm.Ivf.loadIndex(s, root)
-    // the purge publishes once per JVM per dataset dir on the shared
-    // root; its (touched, untouched) audit memoizes beside it
-    val (touched, untouched) = ivfPurgeCache.synchronized {
-      ivfPurgeCache.getOrElseUpdate(d,
-        graft.llm.Ivf.purgeIndex(s, root, tombVecs, "vec_id",
-          "embedding", "ivfsq", "ivfsq_purged"))
-    }
-    // audit stays partition-pruned: the exact router puts every stored
-    // tombstone in a touched list
-    val nPurged = lists0.filter($"list_id".isin(touched: _*))
-      .join(broadcast(tombVecs.select($"vec_id".as("id"))), Seq("id"))
-      .count()
-    val (lists, storedCents) = graft.llm.Ivf.loadIndex(s, root,
-      "ivfsq_purged")
-    graft.llm.Ivf.knnQuantizedServe(e.filter($"vec_id" < 10), lists,
-        storedCents, "vec_id", "embedding", k = 5, nprobe = 4,
-        materializeIndex = false)
-      .select($"qid", $"cid", $"dot_q", round($"cos_q", 6).as("cos_q"),
-        $"rn", lit(nPurged).as("n_purged"),
-        lit(touched.size.toLong).as("lists_touched"),
-        lit(touched.size.toLong + untouched.size.toLong)
-          .as("lists_total"))
-      .orderBy($"qid", $"rn")
+    // the purge runs on every invocation, on a private copy of the
+    // shared v1 index (+ id-Blooms), released once the result is built
+    val rootPath = graft.util.Fs.tempRoot("graft_ivfpurge")
+    val root = rootPath.toString
+    try {
+      graft.util.Fs.copyRecursively(
+        java.nio.file.Paths.get(ivfFixture(s, d), "ivfsq"),
+        rootPath.resolve("ivfsq"))
+      val tombVecs = e.filter($"vec_id" % 89 === 13).localCheckpoint()
+      require(tombVecs.count() > 0, s"q251: no tombstoned vectors at $d")
+      val (lists0, _) = graft.llm.Ivf.loadIndex(s, root)
+      val (touched, untouched) = graft.llm.Ivf.purgeIndex(s, root,
+        tombVecs, "vec_id", "embedding", "ivfsq", "ivfsq_purged")
+      // audit stays partition-pruned: the exact router puts every
+      // stored tombstone in a touched list
+      val nPurged = lists0.filter($"list_id".isin(touched: _*))
+        .join(broadcast(tombVecs.select($"vec_id".as("id"))), Seq("id"))
+        .count()
+      val (lists, storedCents) = graft.llm.Ivf.loadIndex(s, root,
+        "ivfsq_purged")
+      graft.llm.Ivf.knnQuantizedServe(e.filter($"vec_id" < 10), lists,
+          storedCents, "vec_id", "embedding", k = 5, nprobe = 4,
+          materializeIndex = false)
+        .select($"qid", $"cid", $"dot_q", round($"cos_q", 6).as("cos_q"),
+          $"rn", lit(nPurged).as("n_purged"),
+          lit(touched.size.toLong).as("lists_touched"),
+          lit(touched.size.toLong + untouched.size.toLong)
+            .as("lists_total"))
+        .orderBy($"qid", $"rn")
+        .localCheckpoint()
+    } finally graft.util.Fs.releaseTempRoot(rootPath)
   }
   val q251Sql: String =
     ivfSqBuildSql(embeddingsAllpts, nlist = 16, nprobe = 4,
@@ -4380,12 +4365,10 @@ object LlmQueries {
     * re-pickles its whole sklearn index on every training run
     * (/root/reference/src/ml/vector_engine.py:47-61) — north-star
     * extension. */
-  /** q254's maintenance lifecycle, executed on EVERY invocation (r16:
-    * the r15 verdict de-gamed the once-per-JVM memo — the incremental
-    * index/view maintenance and the CAS commit are what the query is
-    * named for). The v1 index is a filesystem copy of the SHARED ivfsq
-    * fixture (identical build: same fit sample, same quantization) —
-    * the sanctioned cross-query artifact; the copy exists because
+  /** q254's maintenance lifecycle, executed on EVERY invocation: the
+    * incremental index/view maintenance and the CAS commit are what the
+    * query is named for. The v1 index is a filesystem copy of the
+    * shared ivfsq store fixture; the copy exists because
     * [[graft.llm.Ivf.maintainIndex]] mutates versions on its own root
     * and each invocation's catalog chain must stay private to it
     * (fresh root ⇒ the deterministic 0→1→2 txn chain every time).
@@ -4632,45 +4615,35 @@ object LlmQueries {
     * no layout concept (/root/reference/src/db/connection.py:10-19) —
     * north-star extension. */
   /** The shared split-store lifecycle backing q256 (write/route gate)
-    * and q257 (read gate) — the §71 shared-store policy: built once
-    * per JVM per dataset dir, deterministic, so results are identical
-    * whichever query triggers it. Versions: v1 base grid → v2
-    * `events_z_sp` (physical split) → v3 `events_z_sp_up` (routed
-    * merge). */
-  private[ops] final case class SplitFixture(root: String, budget: Long,
+    * and q257 (read gate), a store fixture ([[graft.util.Fixtures]]).
+    * Versions: v1 base grid → v2 `events_z_sp` (physical split) → v3
+    * `events_z_sp_up` (routed merge). */
+  private[ops] final case class SplitFixture(root: String,
     filesBefore: Long, nIns: Long, nRep: Long,
     sp: Layout.SplitResult, up: Layout.PurgeResult)
 
-  private val splitFixtureCache =
-    scala.collection.mutable.Map[String, SplitFixture]()
-
   private[ops] def splitFixture(s: SparkSession, d: String): SplitFixture =
-    splitFixtureCache.synchronized {
-      splitFixtureCache.getOrElseUpdate(d, {
-        import s.implicits._
-        val laid = Layout.eventLayout(Tables.events(s, d))
-        val root = graft.util.Fs.tempRoot("graft_splitstore").toString
-        Layout.saveLayout(laid, root) // v1: base 64-tile grid
-        val (v1, _) = Layout.loadLayout(s, root)
-        val total = v1.count()
-        val budget = total / 100 + 1
-        val filesBefore = v1.select($"file_z").distinct().count()
-        val sp = Layout.splitOnBudget(s, root, "events_z", "file_z",
-          budget, "events_z_sp") // v2: physical split, content untouched
-        // q240's mutation mix, RE-ROUTED to the refined tiles before
-        // the merge (the stored manifest is the routing truth now)
-        val off = 1000000000000L
-        val delta0 = v1.filter($"event_id" % 131 === 3)
-          .withColumn("event_id", $"event_id" + off)
-          .unionByName(v1.filter($"event_id" % 131 === 5))
-        val delta = Layout.routeToStore(s, root, "events_z_sp", delta0,
-          "file_z").localCheckpoint() // audit counts + merge scan it
-        val nIns = delta.filter($"event_id" >= off).count()
-        val nRep = delta.filter($"event_id" < off).count()
-        val up = Layout.upsertRows(s, root, "events_z_sp", "file_z",
-          delta, "events_z_sp_up") // v3
-        SplitFixture(root, budget, filesBefore, nIns, nRep, sp, up)
-      })
+    Fixtures.store("splitstore", d) {
+      import s.implicits._
+      val laid = Layout.eventLayout(Tables.events(s, d))
+      val root = graft.util.Fs.tempRoot("graft_splitstore").toString
+      Layout.saveLayout(laid, root) // v1: base 64-tile grid
+      val (v1, _) = Layout.loadLayout(s, root)
+      val total = v1.count()
+      val budget = total / 100 + 1
+      val filesBefore = v1.select($"file_z").distinct().count()
+      val sp = Layout.splitOnBudget(s, root, "events_z", "file_z",
+        budget, "events_z_sp") // v2: physical split, content untouched
+      // q240's mutation mix, RE-ROUTED to the refined tiles before
+      // the merge (the stored manifest is the routing truth now)
+      val delta = Layout.routeToStore(s, root, "events_z_sp",
+        mutStore.mergeDelta(v1), "file_z")
+        .localCheckpoint() // audit counts + merge scan it
+      val nIns = delta.filter($"event_id" >= mutStore.Off).count()
+      val nRep = delta.filter($"event_id" < mutStore.Off).count()
+      val up = Layout.upsertRows(s, root, "events_z_sp", "file_z",
+        delta, "events_z_sp_up") // v3
+      SplitFixture(root, filesBefore, nIns, nRep, sp, up)
     }
 
   def q256SplitBudget(s: SparkSession, d: String): DataFrame = {
@@ -4768,7 +4741,7 @@ object LlmQueries {
   /** q257 — point lookups THROUGH the SPLIT store's metadata: the read
     * side of the adaptive fan-out (q256 gates the write/route side;
     * this gates what a reader gains). The q235 planner runs against
-    * the post-merge split store (shared fixture — §71 policy, no new
+    * the post-merge split store (the shared store fixture, no new
     * lifecycle): the ROUTED per-key consult keeps for each probe user
     * the tiles whose filter contains it (driver bit-test at this
     * fixture's tile count; the distributed membership join past the
@@ -4992,11 +4965,10 @@ object LlmQueries {
     * consistency story — Postgres rows and the pickled model drift
     * apart between training runs (/root/reference/scripts/
     * run_training_batch.py:243-257) — north-star extension. */
-  /** The governed CAS lifecycle, executed on EVERY invocation (r16:
-    * the r15 verdict de-gamed the once-per-JVM memo — the governance
-    * TRANSACTION is what q253 is named for) and composed ON the shared
-    * mutation store (§76/§79 policy): the RTBF table version the swap
-    * points at IS the shared `events_z_p2` lineage — the catalog makes
+  /** The governed CAS lifecycle, executed on EVERY invocation (the
+    * governance TRANSACTION is what q253 is named for) and composed ON
+    * the shared mutation store: the RTBF table version the swap points
+    * at IS the shared `events_z_p2` lineage — the catalog makes
     * governance a pointer over the store every other query already
     * shares. The catalog + view artifacts live on a PRIVATE per-
     * invocation root (a catalog maps artifact → version NAME; where
@@ -5259,31 +5231,25 @@ object LlmQueries {
     * norms, ids and list tags are integers and centroids are doubles,
     * all exact through parquet, so the stored-index search must equal
     * the batch build bit for bit: q112's SQL replay is the oracle. */
-  /** The shared stored IVF-SQ index v1 (§76 policy applied to the
-    * index shelf): ONE fit + assign + quantize + saveIndex (with
-    * id-Blooms) serves every query that reads or mutates the standard
-    * `ivfsq` artifact — q115/q116 read it, q251 purges it (its purge
-    * result memoized beside it so re-invocations in one JVM replay the
-    * audit without re-publishing). Deterministic, so results are
-    * identical whichever query triggers the build. */
-  private val ivfFixtureCache =
-    scala.collection.mutable.Map[String, String]()
+  /** The shared stored IVF-SQ index v1, a store fixture
+    * ([[graft.util.Fixtures]]): ONE fit + assign + quantize + saveIndex
+    * (with id-Blooms) serves every query that reads the standard
+    * `ivfsq` artifact (q115/q116), and q251/q254 mutate private copies
+    * of it. */
   private[ops] def ivfFixture(s: SparkSession, d: String): String =
-    ivfFixtureCache.synchronized {
-      ivfFixtureCache.getOrElseUpdate(d, {
-        import s.implicits._
-        val e = embeddings(s, d)
-        val sample = e.filter(pmod($"vec_id", lit(10)) === 0)
-        val cents = graft.llm.Ivf.fitCentroids(sample, "vec_id",
-          "embedding", nlist = 16)
-        val idx = graft.llm.Quantize.withInt8(
-            graft.llm.Ivf.assignIndex(e, "vec_id", "embedding", cents),
-            "v")
-          .drop("v")
-        val root = graft.util.Fs.tempRoot("graft_ivffix").toString
-        graft.llm.Ivf.saveIndex(idx, cents, root)
-        root
-      })
+    Fixtures.store("ivfindex", d) {
+      import s.implicits._
+      val e = embeddings(s, d)
+      val sample = e.filter(pmod($"vec_id", lit(10)) === 0)
+      val cents = graft.llm.Ivf.fitCentroids(sample, "vec_id",
+        "embedding", nlist = 16)
+      val idx = graft.llm.Quantize.withInt8(
+          graft.llm.Ivf.assignIndex(e, "vec_id", "embedding", cents),
+          "v")
+        .drop("v")
+      val root = graft.util.Fs.tempRoot("graft_ivffix").toString
+      graft.llm.Ivf.saveIndex(idx, cents, root)
+      root
     }
 
   def q115StoredIndexKnn(s: SparkSession, d: String): DataFrame = {
@@ -5781,10 +5747,9 @@ object LlmQueries {
     * never change in compaction; only file layout does — which is why
     * the hash gate is exactly the right instrument here. */
   /** q130's build→ingest-delta→compact lifecycle, executed on EVERY
-    * invocation (r16: the r15 verdict de-gamed the once-per-JVM memo —
-    * compaction is what the query is named for, so each invocation
-    * builds, ingests the delta, compacts on a fresh private root, and
-    * serves over the artifact it just published). */
+    * invocation: compaction is what the query is named for, so each
+    * invocation builds, ingests the delta, compacts on a fresh private
+    * root, and serves over the artifact it just published. */
   private def ivfCompactBuild(s: SparkSession, d: String): String = {
     import s.implicits._
     val e = embeddings(s, d)

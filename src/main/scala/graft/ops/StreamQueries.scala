@@ -7,6 +7,9 @@ import graft.llm.{Dedup, Layout}
 import graft.streaming.StreamOps
 import graft.streaming.StreamHarness.{fourBatchSource, runForeachBatch,
   runToMemory, tiledSource, tile4}
+import graft.util.Fixtures
+import LlmQueries.mutStore
+import LlmQueries.mutStore.Off
 
 /** Streaming surface exposed through the driver contract: each query runs
   * a real Structured Streaming job synchronously (memory sink, all data
@@ -1849,12 +1852,11 @@ object StreamQueries {
     audit: Seq[(Long, String, Long, Long)], nIns: Long, nRep: Long,
     ftTouched: Long)
 
-  /** r16: the r15 verdict de-gamed the once-per-JVM chain memo — the
-    * WRITE surfaces re-execute their maintenance arm on every
-    * invocation, on a fresh private root: q242 (the streamed upsert
-    * chain it is named for) and q252 (the writer-emitted CDC feeds it
-    * is named for; feed emission happens AT COMMIT TIME, so the feeds
-    * exist only by running the commits). `withFeeds` keeps each
+  /** The WRITE surfaces run their maintenance arm on every invocation,
+    * on a fresh private root: q242 (the streamed upsert chain it is
+    * named for) and q252 (the writer-emitted CDC feeds it is named for;
+    * feed emission happens AT COMMIT TIME, so the feeds exist only by
+    * running the commits). `withFeeds` keeps each
     * query's rebuild to ITS OWN lifecycle: q242's oracle gates the
     * merged store, not the feeds, so its chain skips the per-commit
     * feed classify+write; q252's chain emits them.
@@ -1862,18 +1864,8 @@ object StreamQueries {
     * q255 (streaming time travel) is the chain's pure READ surface —
     * AS OF scans over already-published versions, the exact shape of
     * q245's sanctioned time travel over the shared mutation store —
-    * so it reads a once-per-JVM chain-store FIXTURE (the §76
-    * shared-store policy: the store is the fixture, the query's own
-    * work — four pinned-version scans — runs on every invocation). */
-  private val chainStoreCache =
-    scala.collection.mutable.Map[String, UpsertChain]()
-  private[ops] def chainStoreFixture(s: SparkSession,
-      d: String): UpsertChain =
-    chainStoreCache.synchronized {
-      chainStoreCache.getOrElseUpdate(d,
-        buildUpsertChain(s, d, withFeeds = false))
-    }
-
+    * so it reads the chain store as a store fixture; its own work,
+    * four pinned-version scans, runs on every invocation. */
   private def buildUpsertChain(s: SparkSession, d: String,
       withFeeds: Boolean = true): UpsertChain = {
     import s.implicits._
@@ -1886,20 +1878,16 @@ object StreamQueries {
     // per invocation (the copy-on-write "carry" move applied to the
     // fixture; the maintenance arm itself re-executes below)
     graft.util.Fs.copyRecursively(
-      java.nio.file.Paths.get(LlmQueries.mutStore.root(s, d), "events_z"),
+      java.nio.file.Paths.get(mutStore.root(s, d), "events_z"),
       java.nio.file.Paths.get(root, "events_z"))
-    val off = 1000000000000L
-    // the delta derives from the SHARED store's v1 (content-identical
-    // to this root's copied incumbent) so its plan canonicalizes the
-    // same on every invocation: the 4-split stream fixture and the
-    // ntile boundaries then cache per JVM (the sanctioned stream-INPUT
-    // fixture shape) instead of re-writing behind an invocation-unique
-    // checkpoint plan. Deliberately NOT checkpointed for that reason.
-    val delta = LlmQueries.mutStore.mergeDelta(s, d)
+    // from the SHARED store's v1 (content-identical to the copied
+    // incumbent), not a checkpoint: a stable plan keeps the stream
+    // input a fixture
+    val delta = mutStore.mergeDelta(mutStore.v1(s, d))
     // all three audit constants in ONE action
     val auditHead = delta.agg(
-      sum(when($"event_id" >= off, 1L).otherwise(0L)),
-      sum(when($"event_id" < off, 1L).otherwise(0L)),
+      sum(when($"event_id" >= Off, 1L).otherwise(0L)),
+      sum(when($"event_id" < Off, 1L).otherwise(0L)),
       countDistinct($"file_z")).head
     val nIns = auditHead.getLong(0)
     val nRep = auditHead.getLong(1)
@@ -1979,7 +1967,7 @@ object StreamQueries {
     * pair-atomic store version, chaining v1 → s1 → s2 → s3 → s4 (the
     * lakehouse streaming-sink pattern: bounded copy-on-write commits,
     * one per trigger, a reader always on a complete version; built
-    * per invocation since r16 — the de-gamed maintenance arm). The delta is q240's exact mutation mix
+    * per invocation). The delta is q240's exact mutation mix
     * (late inserts + re-delivered duplicates) split into 4 ascending
     * batches; because upserts of disjoint key sets compose, the
     * STREAMED store must serve bit-identically to q240's single-shot
@@ -1992,8 +1980,8 @@ object StreamQueries {
     * fan-out; versions retire under the blue/green rule. */
   def q242StreamUpsert(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // the streamed merge lifecycle re-executes per invocation (r16
-    // de-game); feeds are q252's surface, not this oracle's
+    // the streamed merge lifecycle runs per invocation; feeds are
+    // q252's surface, not this oracle's
     val chain = buildUpsertChain(s, d, withFeeds = false)
     // the streamed store must serve identically to q240's batch
     // merge: scan the FINAL version back; audit rows pin the chain
@@ -2037,20 +2025,19 @@ object StreamQueries {
     import s.implicits._
     import org.apache.spark.sql.types._
     val ev = Tables.events(s, d).select($"event_id", $"user_id")
-    val off = 1000000000000L
     val viewBase = ev.groupBy($"user_id")
       .agg(count(lit(1)).as("n_events"), sum($"event_id").as("e_mass"))
       .localCheckpoint() // bootstrap state + merge-on-read serve share it
     val ins = ev.filter($"event_id" % 131 === 3)
-      .withColumn("event_id", $"event_id" + off)
+      .withColumn("event_id", $"event_id" + Off)
     val dels = ev.unionByName(ins).filter($"user_id" % 499 === 7)
+    // not checkpointed: a stable plan keeps the stream input a fixture
     val feed = ins
       .select(lit("insert").as("op"), $"event_id", $"user_id")
       .unionByName(dels
         .select(lit("delete").as("op"), $"event_id", $"user_id"))
       .withColumn("feed_id", $"event_id" * 2 +
         when($"op" === "delete", 1L).otherwise(0L))
-      .localCheckpoint() // the 4-way split scans it twice
     val schema = new StructType()
       .add("op", StringType).add("event_id", LongType)
       .add("user_id", LongType).add("feed_id", LongType)
@@ -2103,8 +2090,8 @@ object StreamQueries {
     * version diff ever runs on the hot path. */
   def q252StreamCdc(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // the feed-emitting commit chain re-executes per invocation (r16
-    // de-game): the writer-emitted CDC is this query's lifecycle
+    // the feed-emitting commit chain runs per invocation: the
+    // writer-emitted CDC is this query's lifecycle
     val chain = buildUpsertChain(s, d, withFeeds = true)
     s.read.option("recursiveFileLookup", "true")
       .parquet(chain.feedDir)
@@ -2135,10 +2122,8 @@ object StreamQueries {
     * extension. */
   def q255StreamAsOf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // AS OF is the chain's READ surface (the q245 time-travel shape):
-    // the store is a once-per-JVM fixture, the four pinned-version
-    // scans below run on every invocation
-    val chain = chainStoreFixture(s, d)
+    val chain = Fixtures.store("chainstore", d)(
+      buildUpsertChain(s, d, withFeeds = false))
     chain.audit.map { case (commitId, version, nDelta, _) =>
       // AS OF commit k: resolve the sink-emitted mapping, scan the
       // pinned version
@@ -2200,8 +2185,8 @@ object StreamQueries {
   /** q258 — the STREAMING MERGE running ON the ADAPTIVE (split) store:
     * the q242 sink composed with the q256 fan-out, closing the seam
     * between the two shelves. The shared split fixture provides the
-    * refined store (v1 base grid → `events_z_sp`, the §76 policy — no
-    * new base lifecycle); mutation batches then arrive as a real
+    * refined store (v1 base grid → `events_z_sp`, no new base
+    * lifecycle); mutation batches then arrive as a real
     * 4-batch file-source stream carrying the BASE-grid arithmetic
     * `file_z`, and the sink re-routes EVERY batch against the
     * incumbent's stored tile manifest
@@ -2214,8 +2199,8 @@ object StreamQueries {
     * content: the oracle replays the whole split arithmetic + range
     * routing (the q256 CTE verbatim) and aggregates per tile, so ONE
     * row routed to a wrong tile in ANY commit shifts two tiles'
-    * aggregates and hash-fails. The sink is idempotent the §71 way
-    * (id-derived version names; already-published commits skipped).
+    * aggregates and hash-fails. The sink is idempotent (id-derived
+    * version names; already-published commits skipped).
     * 100 TB shape: each commit rewrites only the right-sized tiles
     * its rows land in — the de-saturated form of the q242 wall. */
   def q258SplitStreamMerge(s: SparkSession, d: String): DataFrame = {
@@ -2226,13 +2211,12 @@ object StreamQueries {
     val chainDone = new java.util.concurrent.ConcurrentHashMap[
       Long, Long]()
     val (v1, _) = Layout.loadLayout(s, root) // the base fixed-grid v1
-    val off = 1000000000000L
-    val delta = v1.filter($"event_id" % 131 === 3)
-      .withColumn("event_id", $"event_id" + off)
-      .unionByName(v1.filter($"event_id" % 131 === 5))
-      .localCheckpoint()
-    val nIns = delta.filter($"event_id" >= off).count()
-    val nRep = delta.filter($"event_id" < off).count()
+    // not checkpointed: a stable plan keeps the stream input a fixture
+    val delta = mutStore.mergeDelta(v1)
+    val counts = delta.agg(
+      sum(when($"event_id" >= Off, 1L).otherwise(0L)),
+      sum(when($"event_id" < Off, 1L).otherwise(0L))).head
+    val (nIns, nRep) = (counts.getLong(0), counts.getLong(1))
     val schema = new StructType()
       .add("event_id", LongType).add("user_id", LongType)
       .add("ub", LongType).add("tb", LongType)
@@ -2317,22 +2301,19 @@ object StreamQueries {
     val fx = LlmQueries.splitFixture(s, d)
     val root = fx.root
     val (v1, _) = Layout.loadLayout(s, root) // content == the split store
-    val off = 1000000000000L
     val W = 512L
     def zl(k: Int) = k * 16384L + 256L
     val stripes = (0 until 4).map(k => (zl(k), zl(k) + W - 1))
     // ONE pass over the store instead of 8 per-stripe filters unioned
     // (r16: the old 8-arm union planned a 256-partition checkpoint and
-    // ~10 jobs; the stripe id is arithmetic on zkey). Deliberately NOT
-    // checkpointed: the stable plan is the split-fixture cache key, so
-    // the four stream files write once per JVM (the sanctioned
-    // stream-INPUT fixture shape) instead of once per invocation.
+    // ~10 jobs; the stripe id is arithmetic on zkey). Not checkpointed:
+    // a stable plan keeps the stream input a fixture.
     val inStripes = v1.filter(
         stripes.map { case (lo, hi) => $"zkey" >= lo && $"zkey" <= hi }
           .reduce(_ || _))
       .withColumn("tile", expr("CAST((zkey - 256) DIV 16384 + 1 AS INT)"))
     val delta = inStripes
-      .withColumn("event_id", $"event_id" + off) // localized inserts
+      .withColumn("event_id", $"event_id" + Off) // localized inserts
       .unionByName(inStripes.filter($"event_id" % 2 === 0)) // re-deliveries
       .drop("file_t")
     val schema = new StructType()
@@ -2437,10 +2418,9 @@ object StreamQueries {
     * a self-contained signed contribution — the StreamingSpec torn-
     * update pin); convergence is what this gate checks. 100 TB shape:
     * state is the view row per user, per-batch work ∝ the feed. */
-  /** q262's streamed fold, executed on EVERY invocation (r16: the r15
-    * verdict de-gamed the once-per-JVM memo — the live maintenance
-    * stream is what the query is named for; only the [[LlmQueries
-    * .mutStore]] versions it folds over stay cross-query fixtures).
+  /** q262's streamed fold, executed on EVERY invocation: the live
+    * maintenance stream is what the query is named for; the
+    * [[LlmQueries.mutStore]] versions it folds over are fixtures.
     * Returns (maintained view, feed users, update count), frames
     * localCheckpointed because totals + emit both consume them. */
   private def valViewChain(s: SparkSession, d: String)
@@ -2448,10 +2428,10 @@ object StreamQueries {
           Long) = {
         import s.implicits._
         import org.apache.spark.sql.types._
-        val e2 = LlmQueries.mutStore.evolved(s, d).res
-        val e3 = LlmQueries.mutStore.updated(s, d).res
-        val root = LlmQueries.mutStore.root(s, d)
-        val v1 = LlmQueries.mutStore.v1(s, d)
+        val e2 = mutStore.evolved(s, d).res
+        val e3 = mutStore.updated(s, d).res
+        val root = mutStore.root(s, d)
+        val v1 = mutStore.v1(s, d)
         // base view and feed read disjoint published versions —
         // materialize both concurrently (guide §2.6, as in q259)
         var viewBase: DataFrame = null

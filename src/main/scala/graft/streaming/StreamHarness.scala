@@ -1,11 +1,12 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+
+import graft.util.{Fixtures, Fs}
 
 /** The one place a query stream starts, drains and stops.
   *
@@ -103,37 +104,6 @@ object StreamHarness {
     df.select(col(idCol),
       tileExpr(col(idCol), ntileSplitIds(df, idCol, 4)).as("batch_id"))
 
-  /** Collision-proof cache key for a frame's CONTENT identity. A
-    * canonicalized plan's string form normalizes exprIds and DROPS the
-    * scan's file paths (`Relation [cols] parquet`), so two reads of
-    * different dataset dirs with the same shape (sf0.001 vs sf0.01 vs a
-    * test's twin fixture) would collide in the caches below, and the
-    * later query would stream the earlier input's split files. The key
-    * therefore appends each leaf's identity: scan roots for file
-    * relations, the RDD id for checkpointed frames (a fresh checkpoint
-    * is a fresh input and never hits). */
-  private[graft] def planKey(df: DataFrame): String = {
-    val plan = df.queryExecution.optimizedPlan
-    val leaves = plan.collectLeaves().map {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => fs.location.rootPaths.mkString(",")
-          case other => other.toString
-        }
-      case rdd: org.apache.spark.sql.execution.LogicalRDD =>
-        s"rdd:${rdd.rdd.id}"
-      case leaf => leaf.toString
-    }
-    plan.canonicalized.toString + "\n#leaves:" + leaves.mkString("|")
-  }
-
-  /** [[ntileSplitIds]] results per (input plan, idCol, n) per JVM: each
-    * invocation computes the same boundaries twice (stream-side tiling
-    * and the finish side's [[tile4]]), and the bench re-runs each query;
-    * the boundary ids are a pure function of the input. */
-  private val ntileCache = new ConcurrentHashMap[String, Array[Long]]
-
   /** Exact `NTILE(n) OVER (ORDER BY idCol)` boundary ids WITHOUT a global
     * window, which would funnel every input row through one task. Ids
     * must be distinct. Dense ids need one bounded (min, max, count)
@@ -145,13 +115,7 @@ object StreamHarness {
     * scan-local CASE of [[tileExpr]], bit-identical to the oracles'
     * NTILE(n) by the cumulative-count construction. */
   private def ntileSplitIds(df: DataFrame, idCol: String,
-      n: Int): Array[Long] = {
-    val key = s"$idCol|$n|" + planKey(df)
-    ntileCache.computeIfAbsent(key, _ => ntileSplitIdsUncached(df, idCol, n))
-  }
-
-  private def ntileSplitIdsUncached(df: DataFrame, idCol: String,
-      n: Int): Array[Long] = {
+      n: Int): Array[Long] = Fixtures.input(s"ntile|$idCol|$n", df) {
     val head = df.agg(min(col(idCol)).cast("long").as("mn"),
       max(col(idCol)).cast("long").as("mx"),
       count(lit(1)).as("cnt")).head()
@@ -192,22 +156,12 @@ object StreamHarness {
       case ((b, i), acc) => when(id <= b, lit(i + 1)).otherwise(acc)
     }
 
-  /** Split-file fixture cache: one written four-split directory per
-    * distinct input frame per JVM, keyed by [[planKey]] (which includes
-    * the tile boundary literals), so queries streaming the same
-    * deterministic selection of a fixture table share one on-disk copy
-    * instead of each rewriting it (the write and split jobs cost 0.3–0.5 s
-    * per invocation). The shared artifact is the arriving-files fixture,
-    * never a query result: every query still runs its own full streaming
-    * computation over it. Entries live for the JVM, bounded by the ~10
-    * distinct input shapes, and their directories are deleted at exit. */
-  private val splitDirCache = new ConcurrentHashMap[String, Path]
-
-  private def fourSplitDir(tiled: DataFrame, tag: String): Path = {
-    import scala.jdk.CollectionConverters._
-    splitDirCache.computeIfAbsent(planKey(tiled), _ => {
-      // the entry lives for the JVM; the exit hook deletes the dir
-      val streamDir = graft.util.Fs.tempRoot(s"graft_${tag}_in")
+  /** [[fourBatchSource]]'s directory, one parquet file per tile: an
+    * input fixture of `tiled`, whose plan carries the tile boundaries. */
+  private def fourSplitDir(tiled: DataFrame, tag: String): Path =
+    Fixtures.input("splitdir", tiled) {
+      import scala.jdk.CollectionConverters._
+      val streamDir = Fs.tempRoot(s"graft_${tag}_in")
       val stageDir = Files.createTempDirectory(s"graft_${tag}_stage")
       try {
         // one job writes all four splits (partitionBy drops the tile
@@ -232,10 +186,9 @@ object StreamHarness {
         }
         streamDir
       } catch { case t: Throwable =>
-        // a half-written fixture must not survive into the cache's dir
-        graft.util.Fs.releaseTempRoot(streamDir)
+        // a half-written fixture must not outlive its failed build
+        Fs.releaseTempRoot(streamDir)
         throw t
-      } finally graft.util.Fs.deleteRecursively(stageDir)
-    })
-  }
+      } finally Fs.deleteRecursively(stageDir)
+    }
 }

@@ -1,0 +1,120 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.util.{Fixtures, Fs}
+
+/** The rules of [[graft.util.Fixtures]]: once per key, nothing
+  * registered by a failed build, nested builds, one build under
+  * contention; and that the registered fixtures stay bounded across
+  * invocations and do not depend on the order queries run in. */
+class FixturesSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  val sf = "/root/testdata/sf0.001"
+  private implicit val ec: ExecutionContext = ExecutionContext.global
+
+  /** A dataset-dir key no query ever uses. */
+  private def freshDir(): String =
+    "fixtures-spec/" + java.util.UUID.randomUUID()
+
+  test("a throwing build registers nothing; the next call builds again") {
+    val d = freshDir()
+    val builds = new AtomicInteger
+    val thrown = intercept[IllegalStateException] {
+      Fixtures.store("spec", d) {
+        builds.incrementAndGet()
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(thrown.getMessage == "build failed")
+    assert(Fixtures.store("spec", d) { builds.incrementAndGet(); "built" }
+      == "built")
+    assert(Fixtures.store("spec", d) { builds.incrementAndGet(); "again" }
+      == "built")
+    assert(builds.get == 2)
+  }
+
+  test("a build that requests other keys on the same thread completes") {
+    // a chain of nested builds, each requesting the next key from inside
+    // its own build: deep enough that a registry handing builds to
+    // ConcurrentHashMap.computeIfAbsent hits a reserved bin or a resize
+    val d = freshDir()
+    def level(k: Int): Int =
+      Fixtures.store(s"spec.nested$k", d) {
+        if (k == 64) k else level(k + 1)
+      }
+    assert(Await.result(Future(level(0)), 60.seconds) == 64)
+    // every level registered: a second walk builds nothing
+    assert(Fixtures.store("spec.nested0", d)(-1) == 64)
+    assert(Fixtures.store("spec.nested64", d)(-1) == 64)
+  }
+
+  test("two threads requesting one key run the build once") {
+    val d = freshDir()
+    val builds = new AtomicInteger
+    val started = new CountDownLatch(1)
+    def request() = Fixtures.store("spec", d) {
+      builds.incrementAndGet()
+      started.countDown()
+      Thread.sleep(300)
+      new Object
+    }
+    val first = Future(request())
+    assert(started.await(60, TimeUnit.SECONDS))
+    val second = Future(request())
+    val (a, b) = Await.result(first.zip(second), 60.seconds)
+    assert(builds.get == 1)
+    assert(a eq b)
+  }
+
+  /** Temp dirs of input (`graft_<tag>_in…`) and store
+    * (`graft_<name>store…`) fixtures under `java.io.tmpdir`. */
+  private def fixtureDirs(): Set[String] = {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    scala.util.Using.resource(Files.list(tmp)) { ls =>
+      ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches("graft_\\w+?(_in|store)\\d+")).toSet
+    }
+  }
+
+  test("a second invocation of q101, q247, q255, q256 and q258 makes no " +
+      "new input or store fixture dir") {
+    val names = Seq("q101_stream_dedup", "q247_stream_view",
+      "q255_stream_asof", "q256_split_budget", "q258_split_stream_merge")
+    names.foreach(n => SparkEntry.queries(n)(spark, sf).collect())
+    val added = names.map { n =>
+      val before = fixtureDirs()
+      SparkEntry.queries(n)(spark, sf).collect()
+      n -> (fixtureDirs() -- before)
+    }.filter(_._2.nonEmpty)
+    assert(added.isEmpty, s"second invocations made new dirs: $added")
+  }
+
+  test("store fixtures give the same results whichever query builds them") {
+    // a copy of the dataset is a fresh key space: every store and input
+    // fixture on it is built by the first query that asks
+    val copy = Fs.tempRoot("graft_fixtures_spec_sf")
+    try {
+      Fs.copyRecursively(Paths.get(sf), copy)
+      def run(d: String, names: Seq[String]) = names.map(n =>
+        n -> SparkEntry.queries(n)(spark, d).collect().toSeq).toMap
+      val forward = run(sf, Seq("q256_split_budget",
+        "q257_split_point_lookup", "q242_stream_upsert",
+        "q255_stream_asof"))
+      val reversed = run(copy.toString, Seq("q257_split_point_lookup",
+        "q256_split_budget", "q255_stream_asof", "q242_stream_upsert"))
+      forward.foreach { case (n, rows) =>
+        assert(rows.nonEmpty, n)
+        assert(reversed(n) == rows, s"$n differs when built in reverse order")
+      }
+    } finally Fs.releaseTempRoot(copy)
+  }
+}

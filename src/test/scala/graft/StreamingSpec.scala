@@ -459,17 +459,17 @@ class StreamingSpec extends AnyFunSuite {
       "data dirs (the r15 flake: canonicalized plans drop scan paths)") {
     def feed(d: String) = graft.ops.Tables.events(spark, d)
       .select(col("event_id"), col("user_id"), col("event_type"))
-    val k1 = graft.streaming.StreamHarness.planKey(feed("/root/testdata/sf0.001"))
-    val k2 = graft.streaming.StreamHarness.planKey(feed("/root/testdata/sf0.01"))
+    val k1 = graft.util.Fixtures.planKey(feed("/root/testdata/sf0.001"))
+    val k2 = graft.util.Fixtures.planKey(feed("/root/testdata/sf0.01"))
     assert(k1 != k2, "same-shaped frames over different dirs must not " +
       "share a fixture cache key")
     // the canonical-string PREFIX alone is what used to collide — pin
     // that the leaf identity is what separates them
     assert(k1.contains("sf0.001") && k2.contains("sf0.01"))
     // two checkpoints of the same frame are distinct inputs (fresh RDD)
-    val c1 = graft.streaming.StreamHarness.planKey(
+    val c1 = graft.util.Fixtures.planKey(
       feed("/root/testdata/sf0.001").localCheckpoint())
-    val c2 = graft.streaming.StreamHarness.planKey(
+    val c2 = graft.util.Fixtures.planKey(
       feed("/root/testdata/sf0.001").localCheckpoint())
     assert(c1 != c2)
   }
