@@ -11,8 +11,10 @@ import graft.functions.{ArrayCosine, ArrayMinkowski, ArraySqEuclidean, SortedInt
 
 /** SparkSessionExtensions entry point: makes the engine installable into
   * any session via `--conf spark.sql.extensions=graft.GraftExtensions`
-  * (the deployment story for a shared cluster; the in-code
-  * `VectorExprs.register` path covers driver-created sessions).
+  * (the deployment story for a shared cluster). It is the only route by
+  * which SQL text reaches the fused vector expressions by name; the
+  * DataFrame API builds them as plain Columns
+  * ([[graft.functions.VectorExprs]]) and needs no registration.
   *
   * Injects:
   *  - the fused vector expressions as SQL functions;

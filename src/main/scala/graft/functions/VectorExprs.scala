@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expressions for hot-path vector math.
@@ -16,11 +15,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * near-dup pair scan). These generate a single fused whole-stage-codegen
   * loop per pair: no virtual calls, no per-element allocation.
   *
-  * Exposure: Spark 4 made `Column(expression)` private[sql], so the
-  * expressions register in the session FunctionRegistry (public API) and
-  * surface through `call_function` — [[VectorExprs.register]] is invoked
-  * lazily by every table load (graft.ops.Tables) and by the df-taking
-  * library entry points.
+  * Exposure: [[VectorExprs]] wraps each expression directly in a Column
+  * (through `org.apache.spark.sql.CatalystColumns`), so building a
+  * vector column needs nothing done to the session first. SQL text
+  * reaches the same expressions by name only through
+  * [[graft.GraftExtensions]].
   */
 abstract class ArrayPairFold extends BinaryExpression {
   // callers cast operands to array<double>; no ExpectsInputTypes (that
@@ -29,7 +28,7 @@ abstract class ArrayPairFold extends BinaryExpression {
 }
 
 /** Cosine similarity in one fused pass (dot + both norms together);
-  * 1e-12 denominator floor matches Distance.cosineHof. */
+  * 1e-12 denominator floor matches Distance.cosineS. */
 case class ArrayCosine(left: Expression, right: Expression)
     extends ArrayPairFold {
   override def nullSafeEval(a: Any, b: Any): Any = {
@@ -301,69 +300,29 @@ case class ArrayQuantizeInt8(child: Expression) extends UnaryExpression {
 }
 
 object VectorExprs {
+  import org.apache.spark.sql.CatalystColumns.{column, expression => e}
 
-  /** Idempotent per-session registration of the vector expressions. */
-  // Sessions already registered — createOrReplaceTempFunction logs a
-  // "replaced a previously registered function" warning on every repeat
-  // call, and register() is invoked lazily from every table load, so
-  // without this guard a bench run emits thousands of them. Weak keys:
-  // must not pin a stopped session. The whole check-register-mark runs
-  // under one lock: concurrent callers (Pq.fitCodebooks' parallel
-  // subspace fits all call register) must not return before the
-  // functions actually exist, and a registration that throws must NOT
-  // leave the session marked done.
-  private val registered: java.util.Set[SparkSession] =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (registered.contains(spark)) return
-    doRegister(spark)
-    registered.add(spark)
-    ()
-  }
-
-  private def doRegister(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_cosine",
-      exprs => ArrayCosine(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sq_euclidean",
-      exprs => ArraySqEuclidean(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_minkowski15",
-      exprs => ArrayMinkowski(exprs(0), exprs(1), 1.5), "built-in")
-    reg.createOrReplaceTempFunction("graft_sorted_intersect_size",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot_long",
-      exprs => ArrayDotLong(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_quantize_int8",
-      exprs => ArrayQuantizeInt8(exprs(0)), "built-in")
-  }
-
-  def cosine(a: Column, b: Column): Column =
-    call_function("graft_cosine", a, b)
+  def cosine(a: Column, b: Column): Column = column(ArrayCosine(e(a), e(b)))
 
   def sqEuclidean(a: Column, b: Column): Column =
-    call_function("graft_sq_euclidean", a, b)
+    column(ArraySqEuclidean(e(a), e(b)))
 
   def euclidean(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.sqrt(sqEuclidean(a, b))
 
-  /** Only p=1.5 (the reference's constant) is pre-registered; other p
-    * fall back to the HOF formulation. */
+  /** Only p=1.5 (the reference's constant) has the fused expression;
+    * other p fall back to the HOF formulation. */
   def minkowski(a: Column, b: Column, p: Double): Column =
-    if (p == 1.5) call_function("graft_minkowski15", a, b)
+    if (p == 1.5) column(ArrayMinkowski(e(a), e(b), 1.5))
     else graft.ml.Distance.minkowskiHof(a, b, p)
 
   /** Requires both operands pre-sorted (array_sort). */
   def sortedIntersectSize(a: Column, b: Column): Column =
-    call_function("graft_sorted_intersect_size", a, b)
+    column(SortedIntersectSize(e(a), e(b)))
 
   /** Exact integer dot over int arrays (quantized-vector hot loop). */
-  def dotLong(a: Column, b: Column): Column =
-    call_function("graft_dot_long", a, b)
+  def dotLong(a: Column, b: Column): Column = column(ArrayDotLong(e(a), e(b)))
 
   /** One-pass int8 quantization: struct<q: array<int>, n: bigint>. */
-  def quantizeInt8(v: Column): Column =
-    call_function("graft_quantize_int8", v)
+  def quantizeInt8(v: Column): Column = column(ArrayQuantizeInt8(e(v)))
 }

@@ -78,7 +78,6 @@ object Dedup {
     * verify with the codegen sorted-merge intersection. */
   private def verifyCandidates(df: DataFrame, candidates: DataFrame,
       idCol: String, textCol: String, threshold: Double): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     val toks = df.select(col(idCol).as("id"),
       array_sort(tokensOf(col(textCol))).as("toks"))
     val inter = graft.functions.VectorExprs
@@ -836,7 +835,6 @@ object Dedup {
     * block first with [[SimSearch.withLshBucket]] and join on bucket. */
   def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     val a = df.select(col(idCol).as("id_a"),
       col(vecCol).cast("array<double>").as("v_a"))
     val b = df.select(col(idCol).as("id_b"),

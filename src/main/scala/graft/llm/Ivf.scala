@@ -71,7 +71,6 @@ object Ivf {
   private def fitCentroidsLocal(df: DataFrame, idCol: String,
       vecCol: String, nlist: Int, iters: Int): Seq[(Int, Seq[Double])] = {
     val spark = df.sparkSession
-    graft.functions.VectorExprs.register(spark)
     val pts = df.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v")).cache()
     // try/finally: the guard's throw is this feature's DESIGNED failure
@@ -110,7 +109,7 @@ object Ivf {
           // bit-reproducible across partitionings (double avg() is not —
           // partial-aggregation order would leak into the last ulps and
           // Lloyd iterations would amplify the divergence). Cast to double
-          // BEFORE the division (the repo's davg convention): exact decimal
+          // BEFORE the division: exact decimal
           // sum, then one IEEE division — the same two steps DuckDB's
           // CAST(SUM(DECIMAL) AS DOUBLE)/COUNT performs, so the oracle
           // (q59) reproduces the centroids bit for bit
@@ -206,10 +205,6 @@ object Ivf {
     * (nlist rows) and is collected to drive the expression. */
   def assignIndex(df: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, carryCols: Seq[String] = Nil): DataFrame = {
-    // df-taking library entry point: must self-register (VectorExprs
-    // convention) — a fresh session that never ran fitCentroids would
-    // otherwise fail call_function("graft_sq_euclidean") resolution
-    graft.functions.VectorExprs.register(df.sparkSession)
     val cents = centroids.collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
     // carryCols ride the assign pass so filterable attributes land in
@@ -244,8 +239,6 @@ object Ivf {
   /** Approximate top-k: probe the nprobe nearest lists per query. */
   def knn(queries: DataFrame, index: DataFrame, centroids: DataFrame,
       qId: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    graft.functions.VectorExprs.register(spark)
     val q = queries.select(col(qId).as("qid"),
       col(vecCol).cast("array<double>").as("qv"))
     val wProbe = Window.partitionBy(col("qid"))
@@ -293,8 +286,6 @@ object Ivf {
   def knnQuantized(queries: DataFrame, index: DataFrame,
       centroids: DataFrame, qId: String, vecCol: String, k: Int,
       nprobe: Int, materializeIndex: Boolean = true): DataFrame = {
-    val spark = queries.sparkSession
-    graft.functions.VectorExprs.register(spark)
     val q = Quantize.withInt8(
         queries.select(col(qId).as("qid"),
           col(vecCol).cast("array<double>").as("qv")),
@@ -378,8 +369,6 @@ object Ivf {
   def knnQuantizedServe(queries: DataFrame, index: DataFrame,
       centroids: DataFrame, qId: String, vecCol: String, k: Int,
       nprobe: Int, materializeIndex: Boolean = true): DataFrame = {
-    val spark = queries.sparkSession
-    graft.functions.VectorExprs.register(spark)
     val cents = centroids.collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
     val probes = Quantize.withInt8(

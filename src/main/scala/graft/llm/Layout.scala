@@ -342,26 +342,6 @@ object Layout {
       }
   }
 
-  /** One-time per-session listing tune (guide §6, r16): a stored
-    * version's `rows/` holds one partition dir per file (64 at the
-    * base grid), which sits just past Spark's default
-    * parallelPartitionDiscovery threshold of 32 — so EVERY
-    * version-read of EVERY store planned a distributed file-listing
-    * JOB (measured r16: ~0.13 s each, ~10 per lifecycle invocation,
-    * dozens per bench pass) to list 64 local directories the driver
-    * stats in under a millisecond. Raising the threshold to 128 keeps
-    * small-store listings on the driver; any store past 128 partition
-    * dirs (the split store's ×100 decades, any real deployment) still
-    * takes the distributed listing path unchanged — the knob is
-    * scale-adaptive by its own semantics. Respects an explicit user
-    * override (only replaces the untouched default). */
-  private val ListingThresholdKey =
-    "spark.sql.sources.parallelPartitionDiscovery.threshold"
-  private def tuneListing(
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    if (spark.conf.get(ListingThresholdKey) == "32")
-      spark.conf.set(ListingThresholdKey, "128")
-
   /** Load the stored layout pair saved by [[saveLayout]]; falls back to
     * the backup PAIR if prod is missing (the pair-level crash-window
     * rule, as in [[graft.llm.Ivf.loadIndex]]). Returns
@@ -370,7 +350,6 @@ object Layout {
   def loadLayout(spark: org.apache.spark.sql.SparkSession, root: String,
       name: String = "events_z", fileCol: String = "file_z",
       mergeSchema: Boolean = false): (DataFrame, DataFrame) = {
-    tuneListing(spark)
     val base = baseName(root, name)
     // mergeSchema reconciles files written under different schema
     // versions (q248's evolved column): files missing an added column

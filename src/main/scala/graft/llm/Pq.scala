@@ -92,7 +92,6 @@ object Pq {
   def encode(df: DataFrame, idCol: String, vecCol: String,
       codebooks: Seq[Seq[(Int, Seq[Double])]],
       carryCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     val clash = carryCols.filter(Set("id", "codes"))
     require(clash.isEmpty,
       s"Pq.encode: carryCols ${clash.mkString(", ")} collide with the " +
@@ -138,7 +137,6 @@ object Pq {
       vecCol: String, codebooks: Seq[Seq[(Int, Seq[Double])]],
       k: Int): DataFrame = {
     require(k > 0, s"top-k needs k > 0, got $k")
-    graft.functions.VectorExprs.register(queries.sparkSession)
     val q = queries.select(col(idCol).as("qid"),
       dtabExpr(col(vecCol).cast("array<double>"), codebooks).as("dtab"))
     // fanOutSmall: the m-lookup ADC sum per (candidate, query) rides the
@@ -233,7 +231,6 @@ object Pq {
       nprobe: Int): DataFrame = {
     require(k > 0, s"top-k needs k > 0, got $k")
     require(nprobe > 0, s"nprobe must be positive, got $nprobe")
-    graft.functions.VectorExprs.register(queries.sparkSession)
     val q = queries.select(col(idCol).as("qid"),
       col(vecCol).cast("array<double>").as("qv"))
       .withColumn("dtab", dtabExpr(col("qv"), codebooks))

@@ -45,7 +45,6 @@ object Quantize {
     * [[graft.ops.LlmQueries]] q111 does) to keep 0/0 out of the plan. */
   def withInt8(df: DataFrame, vecCol: String, qCol: String = "qvec",
       normCol: String = "qnorm"): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     // one fused codegen pass (max-abs + quantize + norm together,
     // ArrayQuantizeInt8); the struct binds in its own projection so the
     // two field extractions don't re-evaluate it (CollapseProject keeps

@@ -73,7 +73,6 @@ object SimSearch {
   /** Exact top-k cosine neighbors of `queries` among `candidates`. */
   def knnBrute(queries: DataFrame, candidates: DataFrame, qId: String,
       cId: String, vecCol: String, k: Int): DataFrame = {
-    graft.functions.VectorExprs.register(queries.sparkSession)
     val q = queries.select(col(qId).as("qid"),
       col(vecCol).cast("array<double>").as("qv"))
     val c = candidates.select(col(cId).as("cid"),
@@ -95,9 +94,6 @@ object SimSearch {
     * `(qid, cid, l2_fp, rn)`. */
   def knnBruteL2Fp(queries: DataFrame, candidates: DataFrame,
       qId: String, cId: String, vecCol: String, k: Int): DataFrame = {
-    // df-taking entry point using call_function distances → must
-    // self-register (the Ivf.assignIndex convention)
-    graft.functions.VectorExprs.register(queries.sparkSession)
     val q = queries.select(col(qId).as("qid"),
       col(vecCol).cast("array<double>").as("__qv"))
     val c = candidates.select(col(cId).as("cid"),
@@ -196,9 +192,6 @@ object SimSearch {
     require(shortlist >= k,
       s"shortlist ($shortlist) must be >= k ($k) or the rerank can " +
         "never return k rows")
-    // self-register: the full-width rerank below uses the
-    // call_function sqEuclidean
-    graft.functions.VectorExprs.register(queries.sparkSession)
     // Loud size guard: a vector shorter than prefixDims would make
     // zip_with null-pad the prefix, c_fp go null, and null-first
     // ascending ordering silently promote the broken candidate to the
@@ -242,7 +235,6 @@ object SimSearch {
     * cosine joins back. */
   def knnLshSql(queries: DataFrame, candidates: DataFrame, qId: String,
       cId: String, vecCol: String, k: Int, tables: Int = 8): DataFrame = {
-    graft.functions.VectorExprs.register(queries.sparkSession)
     def buckets(vf: org.apache.spark.sql.Column) =
       array((0 until tables).map(t =>
         (0 until 4).map(i =>
@@ -288,7 +280,6 @@ object SimSearch {
   def knnLsh(queries: DataFrame, candidates: DataFrame, qId: String,
       cId: String, vecCol: String, k: Int, bits: Int = 4,
       tables: Int = 8): DataFrame = {
-    graft.functions.VectorExprs.register(queries.sparkSession)
     val bucketsUdf = udf((v: Array[Float]) => lshBuckets(v, bits, tables))
     val qB = queries
       .select(col(qId).as("qid"), col(vecCol).cast("array<float>").as("qvf"))

@@ -33,11 +33,6 @@ object Distance {
 
   def euclidean(a: Column, b: Column): Column = sqrt(sqEuclidean(a, b))
 
-  def dot(a: Column, b: Column): Column = zsum(a, b, (x, y) => x * y)
-
-  def norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
-
   /** THE fixed-point scale of every hash-exact distance oracle in the
     * repo (RP projection, k-center, prefix rerank, the L2 eval truth):
     * one definition so a precision change can never drift between
@@ -61,9 +56,6 @@ object Distance {
     * codegen (dot + both norms in a single loop). */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExprs.cosine(a, b)
-
-  def cosineHof(a: Column, b: Column): Column =
-    dot(a, b) / greatest(norm(a) * norm(b), lit(1e-12))
 
   /** Unboxed pair-distance SAM for the sequential folds. A plain
     * `(Array[Float], Array[Float]) => Double` would box the Double return

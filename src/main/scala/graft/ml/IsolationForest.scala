@@ -43,8 +43,16 @@ object IsolationForest {
     else if (n == 2) 1.0
     else 2.0 * (math.log(n - 1.0) + EulerGamma) - 2.0 * (n - 1.0) / n
 
-  private def build(data: Array[Array[Double]], idx: Array[Int],
-      height: Int, maxHeight: Int, rnd: Random): Node = {
+  /** A node's split choice from its candidate features (those with
+    * spread), their per-feature bounds `lo`/`hi`, and the node's path
+    * from the root ("" at the root, then one L/R per level). */
+  private type Choose =
+    (IndexedSeq[Int], Array[Double], Array[Double], String) => (Int, Double)
+
+  /** Grows one tree depth-first, left subtree before right; only
+    * `choose` differs between [[fit]] and [[fitMd5]]. */
+  private def grow(data: Array[Array[Double]], idx: Array[Int],
+      path: String, height: Int, maxHeight: Int, choose: Choose): Node = {
     if (height >= maxHeight || idx.length <= 1) Leaf(idx.length)
     else {
       val nf = data(0).length
@@ -66,14 +74,24 @@ object IsolationForest {
       val candidates = (0 until nf).filter(f => hi(f) > lo(f))
       if (candidates.isEmpty) Leaf(idx.length)
       else {
-        val f = candidates(rnd.nextInt(candidates.length))
-        val split = lo(f) + rnd.nextDouble() * (hi(f) - lo(f))
+        val (f, split) = choose(candidates, lo, hi, path)
         val (l, r) = idx.partition(i => data(i)(f) < split)
         Split(f, split,
-          build(data, l, height + 1, maxHeight, rnd),
-          build(data, r, height + 1, maxHeight, rnd))
+          grow(data, l, path + "L", height + 1, maxHeight, choose),
+          grow(data, r, path + "R", height + 1, maxHeight, choose))
       }
     }
+  }
+
+  /** `trees` with the threshold set to the (1 − contamination)-quantile
+    * of the training scores. */
+  private def withThreshold(trees: Seq[Node], psi: Int,
+      data: Array[Array[Double]], contamination: Double): Model = {
+    val m = Model(trees, psi, threshold = 0.0)
+    val scores = data.map(x => score(m, x)).sorted
+    val k = math.min(scores.length - 1, math.max(0,
+      math.ceil((1.0 - contamination) * scores.length).toInt - 1))
+    m.copy(threshold = scores(k))
   }
 
   def fit(data: Array[Array[Double]], nTrees: Int = 100, seed: Long = 42L,
@@ -84,15 +102,15 @@ object IsolationForest {
     val maxH = math.max(1,
       math.ceil(math.log(psi.toDouble) / math.log(2.0)).toInt)
     val all = (0 until data.length).toVector
+    val choose: Choose = (candidates, lo, hi, _) => {
+      val f = candidates(rnd.nextInt(candidates.length))
+      (f, lo(f) + rnd.nextDouble() * (hi(f) - lo(f)))
+    }
     val trees = (0 until nTrees).map { _ =>
       val sample = rnd.shuffle(all).take(psi).toArray
-      build(data, sample, 0, maxH, rnd)
+      grow(data, sample, "", 0, maxH, choose)
     }
-    val m = Model(trees, psi, threshold = 0.0)
-    val scores = data.map(x => score(m, x)).sorted
-    val k = math.min(scores.length - 1, math.max(0,
-      math.ceil((1.0 - contamination) * scores.length).toInt - 1))
-    m.copy(threshold = scores(k))
+    withThreshold(trees, psi, data, contamination)
   }
 
   /** md5-derived deterministic forest (the q98 twin): identical
@@ -119,13 +137,20 @@ object IsolationForest {
     while ((1L << maxH) < psi) maxH += 1
     maxH = math.max(1, maxH)
     val all = (0 until data.length).toArray
-    val trees = (0 until nTrees).map(t =>
-      buildMd5(data, all, t, "", 0, maxH, tag))
-    val m = Model(trees, psi, threshold = 0.0)
-    val scores = data.map(x => score(m, x)).sorted
-    val k = math.min(scores.length - 1, math.max(0,
-      math.ceil((1.0 - contamination) * scores.length).toInt - 1))
-    m.copy(threshold = scores(k))
+    val trees = (0 until nTrees).map { t =>
+      val choose: Choose = (candidates, lo, hi, path) => {
+        val bf = md5Long60(s"$tag:$t:$path:f")
+        val f = candidates((bf % candidates.length).toInt)
+        val bs = md5Long60(s"$tag:$t:$path:s")
+        // 30 hash bits over 2^30: a dyadic rational, exact in binary64 —
+        // split = lo + u·(hi−lo) is then the same fixed IEEE op sequence
+        // in both engines
+        val u = (bs % 1073741824L).toDouble / 1073741824.0
+        (f, lo(f) + u * (hi(f) - lo(f)))
+      }
+      grow(data, all, "", 0, maxH, choose)
+    }
+    withThreshold(trees, psi, data, contamination)
   }
 
   /** First 15 hex chars of md5 as a non-negative Long — the engine-side
@@ -136,44 +161,6 @@ object IsolationForest {
       .digest(s.getBytes("UTF-8"))
     val hex = d.map(b => f"$b%02x").mkString.take(15)
     java.lang.Long.parseLong(hex, 16)
-  }
-
-  private def buildMd5(data: Array[Array[Double]], idx: Array[Int],
-      tree: Int, path: String, height: Int, maxHeight: Int,
-      tag: String): Node = {
-    if (height >= maxHeight || idx.length <= 1) Leaf(idx.length)
-    else {
-      val nf = data(0).length
-      val lo = new Array[Double](nf)
-      val hi = new Array[Double](nf)
-      java.util.Arrays.fill(lo, Double.MaxValue)
-      java.util.Arrays.fill(hi, Double.MinValue)
-      idx.foreach { i =>
-        val row = data(i)
-        var f = 0
-        while (f < nf) {
-          if (row(f) < lo(f)) lo(f) = row(f)
-          if (row(f) > hi(f)) hi(f) = row(f)
-          f += 1
-        }
-      }
-      val candidates = (0 until nf).filter(f => hi(f) > lo(f))
-      if (candidates.isEmpty) Leaf(idx.length)
-      else {
-        val bf = md5Long60(s"$tag:$tree:$path:f")
-        val f = candidates((bf % candidates.length).toInt)
-        val bs = md5Long60(s"$tag:$tree:$path:s")
-        // 30 hash bits over 2^30: a dyadic rational, exact in binary64 —
-        // split = lo + u·(hi−lo) is then the same fixed IEEE op sequence
-        // in both engines
-        val u = (bs % 1073741824L).toDouble / 1073741824.0
-        val split = lo(f) + u * (hi(f) - lo(f))
-        val (l, r) = idx.partition(i => data(i)(f) < split)
-        Split(f, split,
-          buildMd5(data, l, tree, path + "L", height + 1, maxHeight, tag),
-          buildMd5(data, r, tree, path + "R", height + 1, maxHeight, tag))
-      }
-    }
   }
 
   private def pathLength(node: Node, x: Array[Double], depth: Int): Double =

@@ -55,7 +55,6 @@ object Quality {
     * are singleton clusters (s(i) := 0 per sklearn convention). */
   def silhouette(df: DataFrame, idCol: String, vecCol: String,
       clusterCol: String): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     val pts = df.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("v"),
       col(clusterCol).cast("long").as("cl"))
@@ -92,7 +91,6 @@ object Quality {
     * one broadcast join for distances, no pairwise self-join. */
   def silhouetteSimplified(df: DataFrame, idCol: String, vecCol: String,
       clusterCol: String): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     val pts = df.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("v"),
       col(clusterCol).cast("long").as("cl"))

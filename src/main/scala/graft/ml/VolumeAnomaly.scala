@@ -47,13 +47,23 @@ object VolumeAnomaly {
     * (volume_analyzer.py:125-139 before thresholding). `zdevRound`
     * stabilizes the flag set for oracle-differential comparison. */
   def scoredFeatures(feats: DataFrame,
-      zdevRound: Option[Int] = None): DataFrame = {
+      zdevRound: Option[Int] = None): DataFrame =
+    withScoreZ(zdevScored(feats, zdevRound))
+
+  /** `feats` with score = −|z_dev|. The batch stats aggregate AND the
+    * main side both consume it — lazy checkpoint so the window pipeline
+    * upstream materializes once (per-cluster rows, tiny) instead of
+    * twice. */
+  private def zdevScored(feats: DataFrame,
+      zdevRound: Option[Int]): DataFrame = {
     val zdev = zdevRound.map(sc => round(col("z_dev"), sc))
       .getOrElse(col("z_dev"))
-    // the batch stats aggregate AND the main side both consume `scored`
-    // — lazy checkpoint so the window pipeline upstream materializes
-    // once (per-cluster rows, tiny) instead of twice
-    val scored = feats.withColumn("score", -abs(zdev)).localCheckpoint(false)
+    feats.withColumn("score", -abs(zdev)).localCheckpoint(false)
+  }
+
+  /** `scored` plus its batch stats (`mu`, `sigma`, `n_eval`) and the
+    * batch-relative `score_z` of its `score` column. */
+  private def withScoreZ(scored: DataFrame): DataFrame = {
     val stats = scored.agg(
       avg("score").as("mu"), stddev_pop("score").as("sigma"),
       count(lit(1)).as("n_eval"))
@@ -62,20 +72,24 @@ object VolumeAnomaly {
         (col("score") - col("mu")) / (col("sigma") + lit(1e-5)))
   }
 
-  /** Batch-relative ranking: flag score-z < zThresh; guard if
-    * flagged/evaluated > maxRatio; keep worst `cap`. */
-  def rankAnomalies(feats: DataFrame, zThresh: Double = -1.0,
-      cap: Int = 3, maxRatio: Double = 0.3,
-      zdevRound: Option[Int] = None): DataFrame = {
-    val flagged = scoredFeatures(feats, zdevRound)
+  /** The batch-relative gate both scorers share: flag score-z < zThresh;
+    * guard if flagged/evaluated > maxRatio; keep worst `cap`. */
+  private def zGate(scored: DataFrame, zThresh: Double, cap: Int,
+      maxRatio: Double): DataFrame =
+    withScoreZ(scored)
       .filter(col("score_z") < zThresh)
       .withColumn("n_flagged", count(lit(1)).over(Window.partitionBy()))
       // J6 sanity guard: >30% flagged ⇒ assume miscalibration, emit none
       .filter(col("n_flagged") <= col("n_eval") * maxRatio)
       .orderBy(col("score"), col("cluster_id"))
       .limit(cap)
-    flagged.select("cluster_id", "batch_ts", "log_count", "score", "score_z")
-  }
+      .select("cluster_id", "batch_ts", "log_count", "score", "score_z")
+
+  /** Batch-relative ranking by score = −|z_dev| through [[zGate]]. */
+  def rankAnomalies(feats: DataFrame, zThresh: Double = -1.0,
+      cap: Int = 3, maxRatio: Double = 0.3,
+      zdevRound: Option[Int] = None): DataFrame =
+    zGate(zdevScored(feats, zdevRound), zThresh, cap, maxRatio)
 
   /** [[rankAnomalies]] with the reference's actual model: an
     * IsolationForest (volume_analyzer.py:19-24 — 100 trees, contamination
@@ -114,21 +128,10 @@ object VolumeAnomaly {
     val bc = spark.sparkContext.broadcast(model)
     val scoreUdf = udf((lc: Double, v: Double, rm: Double, zd: Double) =>
       -IsolationForest.score(bc.value, Array(lc, v, rm, zd)))
-    val scored = f.withColumn("score",
-      scoreUdf(col("log_count").cast("double"),
-        col("velocity").cast("double"), col("roll_mean"), col("z_dev")))
-    val stats = scored.agg(
-      avg("score").as("mu"), stddev_pop("score").as("sigma"),
-      count(lit(1)).as("n_eval"))
-    scored.crossJoin(stats)
-      .withColumn("score_z",
-        (col("score") - col("mu")) / (col("sigma") + lit(1e-5)))
-      .filter(col("score_z") < zThresh)
-      .withColumn("n_flagged", count(lit(1)).over(Window.partitionBy()))
-      .filter(col("n_flagged") <= col("n_eval") * maxRatio)
-      .orderBy(col("score"), col("cluster_id"))
-      .limit(cap)
-      .select("cluster_id", "batch_ts", "log_count", "score", "score_z")
+    zGate(f.withColumn("score",
+        scoreUdf(col("log_count").cast("double"),
+          col("velocity").cast("double"), col("roll_mean"), col("z_dev"))),
+      zThresh, cap, maxRatio)
   }
 
   /** Incident merge (reference A8/C2, incident_ops.py:6-41): split flagged

@@ -371,7 +371,6 @@ object LlmQueries {
     * order-independent; the float steps are fixed IEEE sequences). */
   def q111QuantizedKnn(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExprs.register(s)
     val e = graft.llm.Quantize.withInt8(embeddings(s, d), "embedding")
       .filter($"qnorm" > 0)
     val q = e.filter($"vec_id" < 10)
@@ -4372,12 +4371,11 @@ object LlmQueries {
     * [[graft.llm.Ivf.maintainIndex]] mutates versions on its own root
     * and each invocation's catalog chain must stay private to it
     * (fresh root ⇒ the deterministic 0→1→2 txn chain every time).
-    * Returns (root, touched, untouched, nDel, nUpd, nIns, txn2). */
-  private def idxMaint(s: SparkSession, d: String)
-      : (String, Seq[Int], Seq[Int], Long, Long, Long, Long) = {
+    * Returns (touched, untouched, nDel, nUpd, nIns, txn2). */
+  private def idxMaint(s: SparkSession, d: String, root: String)
+      : (Seq[Int], Seq[Int], Long, Long, Long, Long) = {
         import s.implicits._
         val e = embeddings(s, d)
-        val root = graft.util.Fs.tempRoot("graft_idxmaint").toString
         // the index COPY and the corpus→view publish chain share no
         // artifact — overlap them (guide §2.6); txn1 commits after both
         graft.util.Par.inParallel(
@@ -4476,7 +4474,7 @@ object LlmQueries {
           Seq(("corpus", "corpus_v2"), ("view", "vecview_v2"),
             ("index", "ivfsq_m2"))
             .toDF("artifact", "version"), root, expectedTxn = txn1)
-        (root, touched, untouched, nDel, nUpd, nIns, txn2)
+        (touched, untouched, nDel, nUpd, nIns, txn2)
       }
 
   /** The derived aggregate view of q254: per-bucket id count + mass
@@ -4487,50 +4485,55 @@ object LlmQueries {
 
   def q254IndexMaintain(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (root, touched, untouched, nDel, nUpd, nIns, txn2) =
-      idxMaint(s, d)
-    def bucketView(c: DataFrame): DataFrame = q254BucketView(c)
-    // a reader: resolve the live catalog, cross-check all three, serve
-    val cat = graft.state.Catalog.live(s, root)._2
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val corpus = graft.state.ModelStore.load(s, root, cat("corpus"))
-      .localCheckpoint() // consistency joins + query vectors share it
-    val (lists, storedCents) = graft.llm.Ivf.loadIndex(s, root,
-      cat("index"))
-    // the three audits scan only the checkpointed corpus and published
-    // artifacts — independent counts, overlapped (guide §2.6)
-    var nBadIdx = 0L
-    var nBadView = 0L
-    var vStats: org.apache.spark.sql.Row = null
-    graft.util.Par.inParallel(
-      () => nBadIdx = corpus.select($"vec_id".as("id"), lit(1).as("c"))
-        .join(lists.select($"id", lit(1).as("i")), Seq("id"),
-          "full_outer")
-        .filter($"c".isNull || $"i".isNull).count(),
-      // a maintained view row must equal a recount over the resolved
-      // corpus, bucket for bucket (the q253 cross-check discipline)
-      () => nBadView = graft.state.ModelStore.load(s, root, cat("view"))
-        .join(bucketView(corpus)
-            .select($"bucket", $"n_vecs".as("tn"), $"id_mass".as("tm")),
-          Seq("bucket"), "full_outer")
-        .filter(!($"n_vecs" <=> $"tn") || !($"id_mass" <=> $"tm"))
-        .count(),
-      () => vStats = graft.state.ModelStore.load(s, root, cat("view"))
-        .agg(count(lit(1)).as("vb"),
-          coalesce(sum($"n_vecs"), lit(0L)).as("vm")).head)
-    val nBad = nBadIdx + nBadView
-    graft.llm.Ivf.knnQuantizedServe(corpus.filter($"vec_id" < 10),
-        lists, storedCents, "vec_id", "v", k = 5, nprobe = 4,
-        materializeIndex = false)
-      .select($"qid", $"cid", $"dot_q", round($"cos_q", 6).as("cos_q"),
-        $"rn", lit(nDel).as("n_deleted"), lit(nUpd).as("n_updated"),
-        lit(nIns).as("n_inserted"),
-        lit(touched.size.toLong).as("lists_touched"),
-        lit((touched ++ untouched).distinct.size.toLong).as("lists_total"),
-        lit(vStats.getLong(0)).as("view_buckets"),
-        lit(vStats.getLong(1)).as("view_mass"),
-        lit(nBad).as("n_inconsistent"), lit(txn2).as("txn"))
-      .orderBy($"qid", $"rn")
+    val rootPath = graft.util.Fs.tempRoot("graft_idxmaint")
+    val root = rootPath.toString
+    try {
+      val (touched, untouched, nDel, nUpd, nIns, txn2) =
+        idxMaint(s, d, root)
+      def bucketView(c: DataFrame): DataFrame = q254BucketView(c)
+      // a reader: resolve the live catalog, cross-check all three, serve
+      val cat = graft.state.Catalog.live(s, root)._2
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val corpus = graft.state.ModelStore.load(s, root, cat("corpus"))
+        .localCheckpoint() // consistency joins + query vectors share it
+      val (lists, storedCents) = graft.llm.Ivf.loadIndex(s, root,
+        cat("index"))
+      // the three audits scan only the checkpointed corpus and published
+      // artifacts — independent counts, overlapped (guide §2.6)
+      var nBadIdx = 0L
+      var nBadView = 0L
+      var vStats: org.apache.spark.sql.Row = null
+      graft.util.Par.inParallel(
+        () => nBadIdx = corpus.select($"vec_id".as("id"), lit(1).as("c"))
+          .join(lists.select($"id", lit(1).as("i")), Seq("id"),
+            "full_outer")
+          .filter($"c".isNull || $"i".isNull).count(),
+        // a maintained view row must equal a recount over the resolved
+        // corpus, bucket for bucket (the q253 cross-check discipline)
+        () => nBadView = graft.state.ModelStore.load(s, root, cat("view"))
+          .join(bucketView(corpus)
+              .select($"bucket", $"n_vecs".as("tn"), $"id_mass".as("tm")),
+            Seq("bucket"), "full_outer")
+          .filter(!($"n_vecs" <=> $"tn") || !($"id_mass" <=> $"tm"))
+          .count(),
+        () => vStats = graft.state.ModelStore.load(s, root, cat("view"))
+          .agg(count(lit(1)).as("vb"),
+            coalesce(sum($"n_vecs"), lit(0L)).as("vm")).head)
+      val nBad = nBadIdx + nBadView
+      graft.llm.Ivf.knnQuantizedServe(corpus.filter($"vec_id" < 10),
+          lists, storedCents, "vec_id", "v", k = 5, nprobe = 4,
+          materializeIndex = false)
+        .select($"qid", $"cid", $"dot_q", round($"cos_q", 6).as("cos_q"),
+          $"rn", lit(nDel).as("n_deleted"), lit(nUpd).as("n_updated"),
+          lit(nIns).as("n_inserted"),
+          lit(touched.size.toLong).as("lists_touched"),
+          lit((touched ++ untouched).distinct.size.toLong).as("lists_total"),
+          lit(vStats.getLong(0)).as("view_buckets"),
+          lit(vStats.getLong(1)).as("view_mass"),
+          lit(nBad).as("n_inconsistent"), lit(txn2).as("txn"))
+        .orderBy($"qid", $"rn")
+        .localCheckpoint()
+    } finally graft.util.Fs.releaseTempRoot(rootPath)
   }
   /** q254's mutated-corpus source: `base` = the stored embeddings,
     * `allpts` = the post-commit corpus (deletes removed, updates
@@ -4975,13 +4978,14 @@ object LlmQueries {
     * the version's bytes live is the store's business), which keeps
     * each invocation's CAS chain the deterministic 0→1→2 — re-running
     * the lifecycle against the shared root's catalog would CAS-fail on
-    * the first writer's surviving `catalog_t1`. Returns the private
-    * root; table versions resolve on the [[mutStore]] root. */
-  private def govLifecycle(s: SparkSession, d: String): String = {
+    * the first writer's surviving `catalog_t1`. Writes under the
+    * private root `gov`; table versions resolve on the [[mutStore]]
+    * root. */
+  private def govLifecycle(s: SparkSession, d: String,
+      gov: String): Unit = {
     import s.implicits._
     val pv = mutStore.purged(s, d) // ensures v1 + events_z_p2
     val root = mutStore.root(s, d)
-    val gov = graft.util.Fs.tempRoot("graft_gov").toString
     val (t1, _) = Layout.loadLayout(s, root)
     val view1 = t1.groupBy($"user_id")
       .agg(count(lit(1)).as("n_events"),
@@ -5000,37 +5004,41 @@ object LlmQueries {
     graft.state.Catalog.commit(
       Seq(("table", "events_z_p2"), ("view", "user_view_v2"))
         .toDF("artifact", "version"), gov, expectedTxn = txn1)
-    gov
   }
 
   def q253GovernedRtbf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val gov = govLifecycle(s, d)
-    val root = mutStore.root(s, d)
-    val tombs = mutStore.purged(s, d).cohort
-    require(tombs.nonEmpty, s"q253: no tombstoned users at $d")
-    // a reader: resolve the LIVE catalog txn, read both artifacts
-    // through it, cross-check
-    val cat = graft.state.Catalog.live(s, gov)._2
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val (table, _) = Layout.loadLayout(s, root, cat("table"))
-    val view = graft.state.ModelStore.load(s, gov, cat("view"))
-      .localCheckpoint() // summary + consistency join share it
-    val recount = table.groupBy($"user_id")
-      .agg(count(lit(1)).as("tn"), sum($"event_id").as("tm"))
-    val nBad = view.join(recount, Seq("user_id"), "full_outer")
-      .filter(!($"n_events" <=> $"tn") || !($"e_mass" <=> $"tm"))
-      .count()
-    val nTomb = lit(tombs.size.toLong)
-    table.agg(count(lit(1)).as("n_rows"),
-        coalesce(sum($"user_id"), lit(0L)).as("mass"))
-      .select(lit("table").as("artifact"), $"n_rows", $"mass",
-        nTomb.as("n_tomb_users"), lit(nBad).as("n_inconsistent"))
-      .unionByName(view.agg(count(lit(1)).as("n_rows"),
-          coalesce(sum($"n_events"), lit(0L)).as("mass"))
-        .select(lit("view").as("artifact"), $"n_rows", $"mass",
-          nTomb.as("n_tomb_users"), lit(nBad).as("n_inconsistent")))
-      .orderBy($"artifact")
+    val govPath = graft.util.Fs.tempRoot("graft_gov")
+    val gov = govPath.toString
+    try {
+      govLifecycle(s, d, gov)
+      val root = mutStore.root(s, d)
+      val tombs = mutStore.purged(s, d).cohort
+      require(tombs.nonEmpty, s"q253: no tombstoned users at $d")
+      // a reader: resolve the LIVE catalog txn, read both artifacts
+      // through it, cross-check
+      val cat = graft.state.Catalog.live(s, gov)._2
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val (table, _) = Layout.loadLayout(s, root, cat("table"))
+      val view = graft.state.ModelStore.load(s, gov, cat("view"))
+        .localCheckpoint() // summary + consistency join share it
+      val recount = table.groupBy($"user_id")
+        .agg(count(lit(1)).as("tn"), sum($"event_id").as("tm"))
+      val nBad = view.join(recount, Seq("user_id"), "full_outer")
+        .filter(!($"n_events" <=> $"tn") || !($"e_mass" <=> $"tm"))
+        .count()
+      val nTomb = lit(tombs.size.toLong)
+      table.agg(count(lit(1)).as("n_rows"),
+          coalesce(sum($"user_id"), lit(0L)).as("mass"))
+        .select(lit("table").as("artifact"), $"n_rows", $"mass",
+          nTomb.as("n_tomb_users"), lit(nBad).as("n_inconsistent"))
+        .unionByName(view.agg(count(lit(1)).as("n_rows"),
+            coalesce(sum($"n_events"), lit(0L)).as("mass"))
+          .select(lit("view").as("artifact"), $"n_rows", $"mass",
+            nTomb.as("n_tomb_users"), lit(nBad).as("n_inconsistent")))
+        .orderBy($"artifact")
+        .localCheckpoint()
+    } finally graft.util.Fs.releaseTempRoot(govPath)
   }
   val q253Sql: String =
     s"""WITH $layoutCte,
@@ -5749,8 +5757,9 @@ object LlmQueries {
   /** q130's build→ingest-delta→compact lifecycle, executed on EVERY
     * invocation: compaction is what the query is named for, so each
     * invocation builds, ingests the delta, compacts on a fresh private
-    * root, and serves over the artifact it just published. */
-  private def ivfCompactBuild(s: SparkSession, d: String): String = {
+    * root, serves over the artifact it just published, and releases
+    * the root once the result is built. */
+  def q130IvfCompaction(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = embeddings(s, d)
     val sample = e.filter(pmod($"vec_id", lit(10)) === 0)
@@ -5761,26 +5770,22 @@ object LlmQueries {
           graft.llm.Ivf.assignIndex(part, "vec_id", "embedding", cents),
           "v")
         .drop("v")
-    val root = graft.util.Fs.tempRoot("graft_ivfcompact")
-    graft.llm.Ivf.saveIndex(
-      stored(e.filter(pmod($"vec_id", lit(2)) === 0)),
-      cents, root.toString)
-    graft.llm.Ivf.compactIndex(s, root.toString,
-      stored(e.filter(pmod($"vec_id", lit(2)) === 1)))
-    root.toString
-  }
-
-  def q130IvfCompaction(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val e = embeddings(s, d)
-    val (lists, storedCents) =
-      graft.llm.Ivf.loadIndex(s, ivfCompactBuild(s, d))
-    graft.llm.Ivf.knnQuantizedServe(e.filter($"vec_id" < 10), lists,
-        storedCents, "vec_id", "embedding", k = 5, nprobe = 4,
-        materializeIndex = false)
-      .select($"qid", $"cid", $"dot_q", round($"cos_q", 6).as("cos_q"),
-        $"rn")
-      .orderBy($"qid", $"rn")
+    val rootPath = graft.util.Fs.tempRoot("graft_ivfcompact")
+    val root = rootPath.toString
+    try {
+      graft.llm.Ivf.saveIndex(
+        stored(e.filter(pmod($"vec_id", lit(2)) === 0)), cents, root)
+      graft.llm.Ivf.compactIndex(s, root,
+        stored(e.filter(pmod($"vec_id", lit(2)) === 1)))
+      val (lists, storedCents) = graft.llm.Ivf.loadIndex(s, root)
+      graft.llm.Ivf.knnQuantizedServe(e.filter($"vec_id" < 10), lists,
+          storedCents, "vec_id", "embedding", k = 5, nprobe = 4,
+          materializeIndex = false)
+        .select($"qid", $"cid", $"dot_q", round($"cos_q", 6).as("cos_q"),
+          $"rn")
+        .orderBy($"qid", $"rn")
+        .localCheckpoint()
+    } finally graft.util.Fs.releaseTempRoot(rootPath)
   }
 
   /** q131 — corpus-frequency token-rarity profile
@@ -5870,7 +5875,14 @@ object LlmQueries {
     * At 100 TB: a filtered search reads nprobe/nlist of the corpus
     * files AND row-group-skips within them on the attribute — no join,
     * no second index. */
-  def q134FilteredKnn(s: SparkSession, d: String): DataFrame = {
+  def q134FilteredKnn(s: SparkSession, d: String): DataFrame =
+    q134Serve(s, d)(_.localCheckpoint())
+
+  /** q134's index build on a private root, then `use` applied to the
+    * lazy serving frame over it; the root is released when `use`
+    * returns, so `use` must materialize whatever it keeps. */
+  private[graft] def q134Serve[T](s: SparkSession, d: String)(
+      use: DataFrame => T): T = {
     import s.implicits._
     val e = embeddings(s, d)
     val sample = e.filter(pmod($"vec_id", lit(10)) === 0)
@@ -5880,16 +5892,18 @@ object LlmQueries {
         graft.llm.Ivf.assignIndex(e, "vec_id", "embedding", cents,
           carryCols = Seq("label")), "v")
       .drop("v")
-    val root = graft.util.Fs.tempRoot("graft_ivffilter")
-    graft.llm.Ivf.saveIndex(idx, cents, root.toString,
-      extraCols = Seq("label"))
-    val (lists, storedCents) = graft.llm.Ivf.loadIndex(s, root.toString)
-    graft.llm.Ivf.knnQuantizedServe(e.filter($"vec_id" < 10),
-        lists.filter($"label" === 1), storedCents, "vec_id", "embedding",
-        k = 5, nprobe = 4, materializeIndex = false)
-      .select($"qid", $"cid", $"dot_q", round($"cos_q", 6).as("cos_q"),
-        $"rn")
-      .orderBy($"qid", $"rn")
+    val rootPath = graft.util.Fs.tempRoot("graft_ivffilter")
+    val root = rootPath.toString
+    try {
+      graft.llm.Ivf.saveIndex(idx, cents, root, extraCols = Seq("label"))
+      val (lists, storedCents) = graft.llm.Ivf.loadIndex(s, root)
+      use(graft.llm.Ivf.knnQuantizedServe(e.filter($"vec_id" < 10),
+          lists.filter($"label" === 1), storedCents, "vec_id",
+          "embedding", k = 5, nprobe = 4, materializeIndex = false)
+        .select($"qid", $"cid", $"dot_q", round($"cos_q", 6).as("cos_q"),
+          $"rn")
+        .orderBy($"qid", $"rn"))
+    } finally graft.util.Fs.releaseTempRoot(rootPath)
   }
   val q134Sql: String = {
     // q112's replay with the candidate set restricted to label = 1 —

@@ -9,45 +9,38 @@ import org.apache.spark.sql.types._
   * Every query compared against the DuckDB oracle must be deterministic at
   * the value level: double *sums* go through exact decimal arithmetic (sum
   * order independent) and come back out as doubles; timestamps are exposed
-  * as epoch microseconds (the testdata `events.ts` is parquet ns — Spark
-  * and DuckDB both truncate to us via the helpers below).
+  * as epoch microseconds (`events.ts` is read as a microsecond
+  * TimestampType; Spark's `unix_micros` and DuckDB's `epoch_us` agree on
+  * it).
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // lazy idempotent registration of the custom vector expressions —
-    // every query path loads at least one table through here
-    graft.functions.VectorExprs.register(spark)
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
-  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = table(s, d, "orders")
   def customer(s: SparkSession, d: String): DataFrame = table(s, d, "customer")
-  def supplier(s: SparkSession, d: String): DataFrame = table(s, d, "supplier")
   def part(s: SparkSession, d: String): DataFrame     = table(s, d, "part")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")
-  def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
-  /** Normalize `events.ts` to a microsecond TimestampType column
-    * regardless of the fixture generation's physical type:
-    *   - parquet TIMESTAMP(NANOS) (older fixtures): Spark's vectorized
-    *     reader rejects it, so read as raw long ns (legacy conf) and
-    *     rebuild via exact integer division — the same truncation DuckDB
-    *     applies in `CAST(ts AS TIMESTAMP)`;
-    *   - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) (current
-    *     fixtures): Spark infers TIMESTAMP_NTZ; re-type to TimestampType.
-    * Oracle parity is defined in UTC (every entry point pins the session
-    * timezone), so the NTZ→LTZ re-type is value-exact; pin it here too so
-    * an ad-hoc session can't drift. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = table(s, d, "events")
-    raw.schema("ts").dataType match {
-      case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _                => raw
-    }
-  }
+
+  /** The fixed schema of the `events` table, read by [[events]] and by
+    * `StreamOps.eventsStream`. The fixture writes `ts` as parquet
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false); reading it as
+    * TimestampType takes the stored microseconds as UTC instants with no
+    * zone shift, so `unix_micros(ts)` equals DuckDB's `epoch_us(ts)`
+    * under any session time zone. A copy written back from [[events]]
+    * (TIMESTAMP adjusted to UTC) reads back identically. A fixed schema
+    * also spares every read the footer schema-inference job. */
+  val EventsSchema: StructType = StructType(Seq(
+    StructField("event_id", LongType),
+    StructField("ts", TimestampType),
+    StructField("user_id", LongType),
+    StructField("event_type", StringType),
+    StructField("value", DoubleType),
+    StructField("props", StringType)))
+
+  def events(s: SparkSession, d: String): DataFrame =
+    s.read.schema(EventsSchema).parquet(s"$d/events.parquet")
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
@@ -55,8 +48,4 @@ object Tables {
     * DuckDB side: CAST(SUM(CAST(x AS DECIMAL(18,s))) AS DOUBLE). */
   def dsum(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(18, scale))).cast(DoubleType)
-
-  /** Deterministic average: exact decimal sum / count, divided as doubles. */
-  def davg(c: Column, scale: Int = 2): Column =
-    dsum(c, scale) / count(lit(1))
 }

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ml.{Centroids, DenStream, Embed, VolumeAnomaly}
+import graft.ml.{Centroids, DenStream, Embed}
 import graft.ops.Tables
 
 /** End-to-end enrichment pipelines — the engine's equivalents of the
@@ -80,19 +80,5 @@ object Enrich {
       "embedding", semThreshold)
     DenStream.withPredictions(withSem, model, "embedding")
       .drop("embed_text")
-  }
-
-  /** Incident detection over an enriched frame (§3.1 tail): per-cluster
-    * hourly volume → features → batch-relative ranking → incident rows. */
-  def detectIncidents(enriched: DataFrame,
-      openIncidents: DataFrame): DataFrame = {
-    val counts = enriched
-      .filter(col("cluster_id") >= 0)
-      .groupBy(col("cluster_id"),
-        unix_micros(date_trunc("hour", col("ts"))).as("batch_ts"))
-      .agg(count(lit(1)).as("log_count"))
-    val feats = VolumeAnomaly.features(counts)
-    val flagged = VolumeAnomaly.rankAnomalies(feats)
-    VolumeAnomaly.mergeIncidents(flagged, openIncidents)
   }
 }

@@ -81,24 +81,23 @@ object PipelineRunner {
   /** §3.1: inference-only scoring of [lo, hi] + volume history append +
     * incident merge + batch commit marker.
     *
-    * Every plan runs exactly once and every table the pipeline wrote
-    * itself is read with its fixed schema (no inference job). The
-    * batch's Spark jobs, in order (12 to 14; budget, pinned by
-    * RunnerSpec: at most 15):
+    * Every plan runs exactly once and every table is read with its
+    * fixed schema (no inference job; the `events` fixture's is
+    * `Tables.EventsSchema`). The batch's Spark jobs, in order (11 to 13;
+    * budget, pinned by RunnerSpec: at most 15):
     *   1. load `denstream` state (schema given) and collect it — 1 job
     *   2. load `centroids` state (schema given) and collect it — 1 job
-    *   3. infer the `events` fixture's schema — 1 job
-    *   4. score the id range, cache it, write `log_embeddings_incr` — 1 job
-    *   5. per-cluster counts over the cached batch, noise included, so
+    *   3. score the id range, cache it, write `log_embeddings_incr` — 1 job
+    *   4. per-cluster counts over the cached batch, noise included, so
     *      their sum is the row total — 1 job
-    *   6. append the non-noise counts to `cluster_volume_history` from a
+    *   5. append the non-noise counts to `cluster_volume_history` from a
     *      one-partition local frame — 1 job
-    *   7. volume features over the history (schema given) and
+    *   6. volume features over the history (schema given) and
     *      `VolumeAnomaly`'s scored checkpoint — 1 job
-    *   8. merge against open `incidents` (schema given) and collect the
+    *   7. merge against open `incidents` (schema given) and collect the
     *      ≤ 3 flagged rows — 3 to 5 jobs, one per adaptive query stage
-    *   9. append those rows to `incidents` from a local frame — 1 job
-    *  10. append the `batch_order` commit marker — 1 job
+    *   8. append those rows to `incidents` from a local frame — 1 job
+    *   9. append the `batch_order` commit marker — 1 job
     */
   def incremental(spark: SparkSession, sfDir: String, stateDir: String,
       outDir: String, lo: Long, hi: Long): Unit = {

@@ -19,46 +19,15 @@ import graft.ml.{Centroids, DenStream, Embed}
   */
 object StreamOps {
 
-  /** Raw schema of the current (round-7+) events fixture: ts is parquet
-    * TIMESTAMP(MICROS, isAdjustedToUTC=false) → TIMESTAMP_NTZ in Spark.
-    * Older fixture generations wrote TIMESTAMP(NANOS), which the batch
-    * reader handles by reading raw long ns ([[graft.ops.Tables.events]]);
-    * [[eventsStream]] picks between the two by peeking at the batch-read
-    * schema, so both paths accept both fixture vintages. */
-  def eventsRawSchema(tsType: org.apache.spark.sql.types.DataType =
-      TimestampNTZType): StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", tsType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** File-source stream over the events fixture with a proper event-time
-    * column. A streaming file source requires a user-supplied schema, so
-    * the fixture vintage (NTZ micros vs raw long nanos — see
-    * [[graft.ops.Tables.events]]) is detected from one batch-footer read
-    * and the stream schema + ts normalization branch on it, keeping the
-    * streaming path's fixture compatibility identical to batch. */
-  def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchTs = graft.ops.Tables.table(spark, sfDir, "events")
-      .schema("ts").dataType match {
-        case LongType => LongType // pre-round-7 NANOS fixture
-        case _        => TimestampNTZType
-      }
-    val raw = spark.readStream
-      .schema(eventsRawSchema(batchTs))
+  /** File-source stream over the events fixture, with the batch
+    * reader's fixed schema ([[graft.ops.Tables.EventsSchema]]), so `ts`
+    * is the same event-time column in both. */
+  def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
+    spark.readStream
+      .schema(graft.ops.Tables.EventsSchema)
       // file source needs a directory; glob-filter to the events table
       .option("pathGlobFilter", "events.parquet")
       .parquet(sfDir)
-    batchTs match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ => raw.withColumn("ts", col("ts").cast(TimestampType))
-    }
-  }
 
   /** I3 — tumbling event-time volume counts with a watermark (the
     * reference's per-batch `GROUP BY cluster_id COUNT(*)`,

@@ -98,6 +98,44 @@ class FixturesSpec extends AnyFunSuite {
     assert(added.isEmpty, s"second invocations made new dirs: $added")
   }
 
+  /** Every `graft_*` temp dir under `java.io.tmpdir`. */
+  private def graftDirs(): Set[String] = {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    scala.util.Using.resource(Files.list(tmp)) { ls =>
+      ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_")).toSet
+    }
+  }
+
+  test("a second invocation of q130, q134, q253 and q254 leaves no new " +
+      "graft_ dir") {
+    val names = Seq("q130_ivf_compaction", "q134_filtered_knn",
+      "q253_governed_rtbf", "q254_index_maintain")
+    names.foreach(n => SparkEntry.queries(n)(spark, sf).collect())
+    val added = names.map { n =>
+      val before = graftDirs()
+      SparkEntry.queries(n)(spark, sf).collect()
+      n -> (graftDirs() -- before)
+    }.filter(_._2.nonEmpty)
+    assert(added.isEmpty, s"second invocations left dirs: $added")
+  }
+
+  test("q258 and q260 publish no version on the shared split store") {
+    Seq("q258_split_stream_merge", "q260_localized_ingest").foreach(n =>
+      assert(SparkEntry.queries(n)(spark, sf).collect().nonEmpty, n))
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    val published = graftDirs().filter(_.startsWith("graft_splitstore"))
+      .toSeq.flatMap { st =>
+        scala.util.Using.resource(Files.list(tmp.resolve(st))) { ls =>
+          ls.iterator().asScala.map(_.getFileName.toString)
+            .filter(v => v.startsWith("events_z_sp_s") ||
+              v.startsWith("events_z_L"))
+            .map(v => s"$st/$v").toList
+        }
+      }
+    assert(published.isEmpty, s"versions left on the split store: $published")
+  }
+
   test("store fixtures give the same results whichever query builds them") {
     // a copy of the dataset is a fresh key space: every store and input
     // fixture on it is built by the first query that asks

@@ -83,7 +83,6 @@ class LlmSpec extends AnyFunSuite {
   test("graft_dot_long is the exact integer dot product") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    graft.functions.VectorExprs.register(spark)
     val df = Seq((Seq(64, -127, 32, 0), Seq(1, 2, 3, 4))).toDF("a", "b")
     val got = df.select(
         graft.functions.VectorExprs.dotLong(col("a"), col("b")))

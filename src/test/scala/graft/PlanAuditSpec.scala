@@ -191,8 +191,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // filter, while the probe join still prunes whole list directories
     // dynamically. Losing the pushdown means every probed row is decoded
     // just to be thrown away; losing the pruning means a full-index scan.
-    val plan = graft.ops.LlmQueries.q134FilteredKnn(spark, sf)
-      .queryExecution.executedPlan.toString
+    val plan = graft.ops.LlmQueries.q134Serve(spark, sf)(
+      _.queryExecution.executedPlan.toString)
     assert(plan.toLowerCase.contains("dynamicpruning"),
       s"q134 stored scan carries no dynamic pruning filter:\n$plan")
     val listScan = plan.linesIterator

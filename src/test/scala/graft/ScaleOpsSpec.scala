@@ -78,14 +78,18 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions: SQL functions injected, self-distance folded") {
-    // a separate session with the extensions class wired in
+    // a separate session with the extensions class wired in. The
+    // `spark.sql.extensions` conf takes effect only when the SparkContext
+    // starts, so on the shared context the class goes in through
+    // withExtensions, and create() builds a new session beside the
+    // shared one (which getOrCreate would return unchanged)
     val s2 = SparkSession.builder()
       .master("local[2]")
       .appName("graft-ext-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .create()
     try {
       val one = s2.sql(
         "SELECT graft_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
@@ -100,8 +104,10 @@ class ScaleOpsSpec extends AnyFunSuite {
       assert(df.collect()(0).getDouble(0) == 0.0)
     } finally {
       // do NOT s2.stop(): it would stop the JVM-shared SparkContext out
-      // from under the other suites' cached session
-      SparkSession.clearActiveSession()
+      // from under the other suites' cached session. create() made s2
+      // the default and active session; hand both back
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
     }
   }
 }
