@@ -118,18 +118,21 @@ object Centroids {
   /** Centroid state table `(semantic_group, center, n)` — the engine's
     * analog of centroids.pkl (vector_engine.py:47-61).
     *
-    * Derived relationally from [[assign]]'s output instead of a second
-    * sequential fold: because centroids never drift, each centroid IS the
-    * founder row's vector (`sem_grp_<founderId>`) and `n` is the group
-    * size — so one fold (the pipeline's sequential bottleneck) serves
-    * both assignment and state, and the two can never diverge. */
-  def fitCentroids(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, p: Double = 1.5): DataFrame = {
-    val assignments = assign(df, idCol, vecCol, threshold, p)
-    val founders = assignments.groupBy(col("semantic_group"))
-      .agg(min(col(idCol)).as("founder_id"),
+    * Derived relationally from a frame whose rows already carry
+    * [[assign]]'s `semantic_group` beside `idCol` and `vecCol`, instead
+    * of a second sequential fold: because centroids never drift, each
+    * centroid IS the founder row's vector (`sem_grp_<founderId>`, the
+    * group's minimum id) and `n` is the group size — so one fold (the
+    * pipeline's sequential bottleneck) serves both assignment and state,
+    * and the two can never diverge. Rows without a group (null vectors)
+    * found no centroid. */
+  def fitCentroids(assigned: DataFrame, idCol: String,
+      vecCol: String): DataFrame = {
+    val founders = assigned.filter(col("semantic_group").isNotNull)
+      .groupBy(col("semantic_group"))
+      .agg(min(col(idCol).cast("long")).as("founder_id"),
         count(lit(1)).as("n"))
-    val vecs = df.filter(col(vecCol).isNotNull)
+    val vecs = assigned.filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as("founder_id"),
         col(vecCol).cast("array<float>").as("center"))
     founders.join(vecs, "founder_id")

@@ -92,25 +92,28 @@ object DenStream {
   }
 
   /** Ordered training fold (reference training loop shape: bounded input,
-    * strict id order). Collects only (id, vec) pairs. */
+    * strict id order). Collects only (id, vec) pairs, in one job that
+    * reads `df` once, and orders them on the driver. */
   def fit(df: DataFrame, idCol: String, vecCol: String, epsilon: Double,
       lambda: Double = 0.0005): Model = {
     val m = new Model(epsilon, lambda)
     // Driver-side fold is bounded-parity only (reference caps training at
     // 5k rows) — enforce the contract BEFORE collecting: limit(max+1)
     // keeps the driver fetch bounded even when the input is 100 TB, and
-    // one extra row proves the bound was exceeded.
+    // one extra row proves the bound was exceeded. Under the bound the
+    // limit keeps every row, so sorting them here is the id order; a
+    // global sort in the plan would add a sampling job over the input.
     val max = math.min(Centroids.foldMaxRows(df), Int.MaxValue - 1L).toInt
     val rows = df.filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .orderBy(col(idCol))
       .limit(max + 1)
       .collect()
     if (rows.length > max) throw new IllegalStateException(
       s"DenStream.fit: input exceeds ${Centroids.FoldMaxRowsKey}=$max rows; " +
         "training is a bounded driver-side fold — pre-sample the batch or " +
         "raise the conf deliberately")
-    rows.foreach(r => m.learnOne(r.getSeq[Float](1).toArray))
+    rows.sortBy(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+      .foreach(r => m.learnOne(r.getSeq[Float](1).toArray))
     m
   }
 

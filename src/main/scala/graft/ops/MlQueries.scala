@@ -584,13 +584,20 @@ object MlQueries {
       .orderBy($"semantic_group")
   }
 
+  /** `df`'s rows as a local frame: a small result outlives the training
+    * batch's cache without a persisted RDD of its own. */
+  private def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
+
   /** q33 — DenStream fit + distributed predict (reference J3; rows-only). */
   def q33DenStream(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (enriched, _) = Enrich.trainingBatch(s, d, limit = 2000)
-    enriched.groupBy($"cluster_id", $"event_type")
-      .agg(count(lit(1)).as("n"))
-      .orderBy($"cluster_id", $"event_type")
+    // collected before the training batch releases its cache
+    Enrich.trainingBatch(s, d, limit = 2000) { (enriched, _) =>
+      local(enriched.groupBy($"cluster_id", $"event_type")
+        .agg(count(lit(1)).as("n"))
+        .orderBy($"cluster_id", $"event_type"))
+    }
   }
 
   /** q35 — approximate aggregates. HLL/quantile-sketch values are
@@ -649,15 +656,17 @@ object MlQueries {
     * flag/guard/merge tail is oracle-checked by q27/q28). */
   def q34PipelineE2E(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (enriched, _) = Enrich.trainingBatch(s, d, limit = 2000)
-    val counts = enriched.filter($"cluster_id" >= 0)
-      .groupBy($"cluster_id",
-        unix_micros(date_trunc("hour", $"ts")).as("batch_ts"))
-      .agg(count(lit(1)).as("log_count"))
-    VolumeAnomaly.scoredFeatures(VolumeAnomaly.features(counts))
-      .select($"cluster_id", $"log_count", $"score", $"score_z",
-        ($"score_z" < -1.0).as("flagged"))
-      .orderBy($"cluster_id")
+    // collected before the training batch releases its cache
+    Enrich.trainingBatch(s, d, limit = 2000) { (enriched, _) =>
+      val counts = enriched.filter($"cluster_id" >= 0)
+        .groupBy($"cluster_id",
+          unix_micros(date_trunc("hour", $"ts")).as("batch_ts"))
+        .agg(count(lit(1)).as("log_count"))
+      local(VolumeAnomaly.scoredFeatures(VolumeAnomaly.features(counts))
+        .select($"cluster_id", $"log_count", $"score", $"score_z",
+          ($"score_z" < -1.0).as("flagged"))
+        .orderBy($"cluster_id"))
+    }
   }
 
   /** q66 — oracle twin for q34's deterministic prefix (SURVEY §3.2 /
@@ -670,7 +679,7 @@ object MlQueries {
     * q34 stays rows-only for the learned cluster ids. */
   def q66PipelinePrefix(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // the exact trainingBatch sample semantics (Enrich.scala:54-57)
+    // the exact Enrich.trainingBatch sample semantics
     val logs = Enrich.logView(s, d)
       .filter($"level".isin("warning", "error"))
       .orderBy($"log_id").limit(2000)
@@ -910,7 +919,7 @@ object MlQueries {
     * pseudo-batches `doc_id % 4` (documents carry no timestamp — the
     * batch key just has to be deterministic on both engines). Output is
     * per-doc: the enriched row (semantic group + learned cluster id,
-    * trainingBatch's join shape, Enrich.scala:62-64) plus its cluster's
+    * as Enrich.trainingBatch enriches a row) plus its cluster's
     * latest-batch volume score — so the hash pins every doc's assignment
     * AND the scored tail in one result. */
   def q89PipelineFoldE2E(s: SparkSession, d: String): DataFrame = {

@@ -41,7 +41,18 @@ object Tables {
 
   def events(s: SparkSession, d: String): DataFrame =
     s.read.schema(EventsSchema).parquet(s"$d/events.parquet")
-  def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
+
+  /** The fixed schema of the `documents` table, read by [[documents]]:
+    * no footer schema-inference job on any read. */
+  val DocumentsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType),
+    StructField("lang", StringType),
+    StructField("source", StringType),
+    StructField("n_chars", LongType)))
+
+  def documents(s: SparkSession, d: String): DataFrame =
+    s.read.schema(DocumentsSchema).parquet(s"$d/documents.parquet")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
   /** Order-independent exact sum of a double column: route through decimal.

@@ -36,17 +36,29 @@ object Enrich {
       col("props").as("parsed_data"),
       col("event_type"))
 
-  /** Embedding text exactly as the reference composes it (H2). */
-  private def withText(logs: DataFrame): DataFrame =
-    logs.withColumn("embed_text",
-      concat(col("message"), lit(". Parsed: "), col("parsed_data")))
+  /** The embedding of the text exactly as the reference composes it
+    * (H2). One expression, with no text column of its own: over the
+    * training sample's `orderBy.limit` it then plans as one top-k pass
+    * over `events`, where a separate text column would plan a range
+    * sort with its own sampling scan. */
+  private def withEmbedding(logs: DataFrame): DataFrame =
+    logs.withColumn("embedding", Embed.embedCol(
+      concat(col("message"), lit(". Parsed: "), col("parsed_data"))))
 
   /** Training batch (§3.2): bounded ordered sample → embed → semantic
-    * grouping → DenStream fit → distributed predict; returns the enriched
-    * frame plus the fitted model for state persistence. */
-  def trainingBatch(spark: SparkSession, sfDir: String,
+    * grouping → DenStream fit → distributed predict. Runs `f` over the
+    * enriched frame (sample columns plus `embedding`, `cluster_id` and
+    * `semantic_group`) and the fitted model, and returns its result.
+    *
+    * The sample is embedded once and cached, and the semantic fold runs
+    * once, into a driver-side map of assignments looked up by id; so
+    * every plan `f` builds on the enriched frame reads the cache, never
+    * the `events` scan or the fold. The cache is released
+    * before this returns, so `f` must materialize whatever it keeps. */
+  def trainingBatch[T](spark: SparkSession, sfDir: String,
       limit: Int = DefaultLimit, epsilon: Double = DefaultEpsilon,
-      semThreshold: Double = DefaultSemThreshold): (DataFrame, DenStream.Model) = {
+      semThreshold: Double = DefaultSemThreshold)(
+      f: (DataFrame, DenStream.Model) => T): T = {
     // epsilon/semThreshold are calibrated for the hashing-embedder space
     // (CalibrateSpec sweep: eps=1.0 → homogeneity .99 vs event_type); the
     // reference's 0.9 / 0.35 are MiniLM-space values (model.py:10-15,
@@ -55,14 +67,22 @@ object Enrich {
       .filter(col("level").isin("warning", "error"))
       .orderBy("log_id")
       .limit(limit)
-    val embedded = Embed.withEmbedding(withText(logs), "embed_text")
+    val embedded = withEmbedding(logs)
     embedded.cache()
-    val sem = Centroids.assign(embedded, "log_id", "embedding", semThreshold)
-    val model = DenStream.fit(embedded, "log_id", "embedding", epsilon)
-    val enriched = DenStream
-      .withPredictions(embedded, model, "embedding")
-      .join(sem, Seq("log_id"), "left")
-    (enriched.drop("embed_text"), model)
+    try {
+      // the fit's collect fills the cache; the fold then reads it
+      val model = DenStream.fit(embedded, "log_id", "embedding", epsilon)
+      val groups = Centroids.assign(embedded, "log_id", "embedding",
+          semThreshold).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      // assignments joined back by id through a lookup (null: no group)
+      val group = udf((id: java.lang.Long) =>
+        if (id == null) null else groups.getOrElse(id.longValue, null))
+      val enriched = DenStream
+        .withPredictions(embedded, model, "embedding")
+        .withColumn("semantic_group", group(col("log_id")))
+      f(enriched, model)
+    } finally embedded.unpersist(blocking = true)
   }
 
   /** Incremental batch (§3.1): score a [lo, hi] id range with a frozen
@@ -75,10 +95,8 @@ object Enrich {
     val logs = logView(spark, sfDir)
       .filter(col("log_id").between(lo, hi) &&
         col("level").isin("warning", "error"))
-    val embedded = Embed.withEmbedding(withText(logs), "embed_text")
-    val withSem = Centroids.scoreAgainst(embedded, centroids,
+    val withSem = Centroids.scoreAgainst(withEmbedding(logs), centroids,
       "embedding", semThreshold)
     DenStream.withPredictions(withSem, model, "embedding")
-      .drop("embed_text")
   }
 }

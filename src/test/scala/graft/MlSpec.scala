@@ -122,10 +122,12 @@ class MlSpec extends AnyFunSuite {
   test("quality gate: pipeline clustering reaches the reference's 0.8 bar") {
     // the reference's own acceptance threshold (validate_quality.py:84-85)
     import spark.implicits._
-    val (enriched, model) = Enrich.trainingBatch(spark, sf, limit = 1000)
-    val scored = enriched.filter($"cluster_id" >= 0)
-    val h = Quality.homogeneityCompleteness(scored, "event_type", "cluster_id")
-      .collect()(0)
+    val (h, model) = Enrich.trainingBatch(spark, sf, limit = 1000) {
+      (enriched, model) =>
+        val scored = enriched.filter($"cluster_id" >= 0)
+        (Quality.homogeneityCompleteness(scored, "event_type", "cluster_id")
+          .collect()(0), model)
+    }
     assert(h.getDouble(0) > 0.8, s"homogeneity ${h.getDouble(0)}")
     assert(h.getDouble(1) > 0.5, s"completeness ${h.getDouble(1)}")
     assert(model.clusters.nonEmpty)

@@ -353,7 +353,7 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch enrichment sink is idempotent (A5 upsert analog)") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    val (_, model) = Enrich.trainingBatch(spark, sf, limit = 500)
+    val model = Enrich.trainingBatch(spark, sf, limit = 500)((_, m) => m)
     val centroids = Array.empty[graft.ml.Centroids.Centroid]
     StreamOps.enrichmentPipeline(spark, sf, s"$tmp/sink", s"$tmp/cp1",
       model, centroids)

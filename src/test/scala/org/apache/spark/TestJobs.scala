@@ -20,4 +20,8 @@ object TestJobs {
     finally sc.removeSparkListener(l)
     n.get
   }
+
+  /** Waits until the listeners have seen every event posted so far
+    * (block updates included, which the storage status is built from). */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
