@@ -14,6 +14,20 @@ object Bench {
     * per-query comparison — 20 keeps structural headroom. */
   val stdoutTopK = 20
 
+  /** JSON string-content escape: quotes, backslashes AND every control
+    * char (< 0x20). A raw newline or tab inside a JSON string is as
+    * fatal to a reader's parse as an unescaped quote. Bench escapes its
+    * env-supplied paths with it, and Verify its oracle SQL. */
+  def esc(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark =
@@ -85,18 +99,7 @@ object Bench {
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "bench_detail.json")
     // detail path AND sf dir are user-controlled env input interpolated
-    // into JSON — escape quotes, backslashes AND control chars (a raw
-    // newline/tab inside a JSON string is just as fatal to the driver's
-    // tail parse; same escape set as Verify's oracle_sql writer)
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+    // into JSON
     val detailJson = esc(detailPath)
     val sfJson = esc(sfDir)
     val fullQs = results.toSeq.sortBy(_._1)

@@ -493,7 +493,7 @@ object Ivf {
       // [[graft.llm.Layout.fileBlooms]] move applied to the inverted
       // file. Footer-stats-sized (nlist × 64 words).
       () => idBlooms(index).write.parquet(stage.resolve("idbloom").toString))
-    graft.state.ModelStore.publishFrom(root, name, stage)
+    graft.state.ModelStore.publish(root, name, stage)
   }
 
   /** Per-list Bloom over row IDS (k=3, 64 words — [[graft.llm.Layout]]'s
@@ -757,7 +757,7 @@ object Ivf {
           .unionByName(idBlooms(cleaned))
           .write.parquet(stage.resolve("idbloom").toString)
       })
-    graft.state.ModelStore.publishExclusiveFrom(root, purgedName, stage)
+    graft.state.ModelStore.publishExclusive(root, purgedName, stage)
     (touched, untouched)
   }
 
@@ -869,7 +869,7 @@ object Ivf {
           .unionByName(idBlooms(rewritten))
           .write.parquet(stage.resolve("idbloom").toString)
       })
-    graft.state.ModelStore.publishExclusiveFrom(root, newName, stage)
+    graft.state.ModelStore.publishExclusive(root, newName, stage)
     (touched, untouched)
   }
 }

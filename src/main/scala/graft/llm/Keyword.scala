@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.state.ModelStore
+
 /** Keyword (inverted-index) retrieval — the lexical complement to the
   * ANN stack (SimSearch/Ivf): RAG serving in practice is HYBRID, a
   * keyword candidate set fused with a vector candidate set, because
@@ -168,8 +170,9 @@ object Keyword {
   }
 
   /** Persist the postings store partitioned by TERM-SHARD bucket
-    * (md5-range of the token, `nBuckets` directories) under
-    * [[graft.state.ModelStore.publish]]'s blue/green atomic rename —
+    * (md5-range of the token, `nBuckets` directories), staged in a
+    * private attempt dir and published by [[ModelStore.publish]]'s
+    * blue/green atomic rename —
     * the lexical twin of the IVF list store. Partitioning by raw
     * token would mean one directory per vocabulary word (a metadata
     * storm at any real vocabulary); hash bucketing keeps the
@@ -178,12 +181,13 @@ object Keyword {
   def savePostings(pairs: DataFrame, root: String,
       name: String = "postings", nBuckets: Int = 16): Unit = {
     require(nBuckets >= 1, s"nBuckets must be positive, got $nBuckets")
-    pairs.select(col("token"), col("doc_id"), col("tf"))
-      .withColumn("bucket", pmod(xxhash64(col("token")),
-        lit(nBuckets.toLong)))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$root/_staging/$name/posts")
-    graft.state.ModelStore.publish(root, name)
+    ModelStore.publish(root, name, ModelStore.stageWith(root, name) { a =>
+      pairs.select(col("token"), col("doc_id"), col("tf"))
+        .withColumn("bucket", pmod(xxhash64(col("token")),
+          lit(nBuckets.toLong)))
+        .write.partitionBy("bucket")
+        .parquet(a.resolve("posts").toString)
+    })
   }
 
   /** Load the published postings store (falling back to the backup if

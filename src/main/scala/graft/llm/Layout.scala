@@ -175,7 +175,7 @@ object Layout {
         .parquet(stage.resolve("zonemaps").toString),
       () => fileBlooms(laid, fileCol).write
         .parquet(stage.resolve("bloom").toString))
-    graft.state.ModelStore.publishFrom(root, name, stage)
+    graft.state.ModelStore.publish(root, name, stage)
   }
 
   /** The stored per-file Bloom written by [[saveLayout]], as the dense
@@ -1053,10 +1053,9 @@ object Layout {
       s"cowRewrite: new store must not shadow the incumbent '$name'")
     val untouched = (allFiles -- touched).toSeq.sorted
     // attempt-PRIVATE staging (r13 ADVICE): racing commits to the same
-    // version name each stage under their own _staging/<name>.attempt-*
-    // dir, so a loser can neither delete nor half-overwrite the
-    // winner's staged bytes — the publishExclusiveFrom rename is the
-    // only arbiter
+    // version name each stage in their own attempt dir, so a loser can
+    // neither delete nor half-overwrite the winner's staged bytes — the
+    // publishExclusive rename is the only arbiter
     val stage = graft.state.ModelStore.newAttempt(root, newName)
     // core layout columns first, then any evolved columns the caller's
     // schema carries (q248) — carried files keep their stored schema
@@ -1118,7 +1117,7 @@ object Layout {
       })
     // first-writer-wins: a concurrent writer that derived the same new
     // version from the same base loses here and must rebase (OCC)
-    graft.state.ModelStore.publishExclusiveFrom(root, newName, stage)
+    graft.state.ModelStore.publishExclusive(root, newName, stage)
     PurgeResult(touched, untouched)
   }
 }

@@ -4001,21 +4001,31 @@ object LlmQueries {
     * full logs table every batch
     * (/root/reference/src/db/pattern_ops.py:37-39) — north-star
     * extension. */
-  /** q259's maintained fold, executed on EVERY invocation: a query
-    * named for its maintenance must execute it; the [[mutStore]]
-    * versions it folds over are fixtures. Returns (maintained view,
-    * feed users, n_updates), frames checkpointed within the
-    * invocation because fold + totals + emit all consume them. */
-  private def valFold(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, Long) = {
+  /** The inputs q259 and its streaming twin q262 fold, built on EVERY
+    * invocation: a query named for its maintenance must execute it; the
+    * [[mutStore]] versions they read are fixtures. Returns
+    *   - the base view from the v1 SCAN-BACK, checkpointed: v1 predates
+    *     the weight column, so its value aggregates are COUNT/SUM's
+    *     identities;
+    *   - the both-images feed over commit A (evolution) and commit B
+    *     (in-place update) as a plan over the published versions, whose
+    *     plan is the same on every invocation (q262's stream splits it);
+    *   - the same feed checkpointed, which the audit, the fold and the
+    *     emit share;
+    *   - the update count, audited: update images must be present and
+    *     paired — the arm under test. */
+  private[ops] def valInputs(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame, Long) = {
     import s.implicits._
-    val e2 = mutStore.evolved(s, d).res // commit A: evolution
-    val e3 = mutStore.updated(s, d).res // commit B: in-place update
+    val e2 = mutStore.evolved(s, d).res
+    val e3 = mutStore.updated(s, d).res
     val root = mutStore.root(s, d)
     val v1 = mutStore.v1(s, d)
-    // base view from the v1 SCAN-BACK: v1 predates the weight
-    // column, so its value aggregates are COUNT/SUM's identities.
-    // The base view and the feed read disjoint published versions —
+    val feedPlan = Layout.changeFeedCdf(s, root, "events_z",
+        "events_z_e2", "file_z", e2.touched)
+      .unionByName(Layout.changeFeedCdf(s, root, "events_z_e2",
+        "events_z_e3", "file_z", e3.touched))
+    // the base view and the feed read disjoint published versions —
     // materialize both concurrently (guide §2.6)
     var viewBase: DataFrame = null
     var feed: DataFrame = null
@@ -4024,36 +4034,30 @@ object LlmQueries {
         .agg(count(lit(1)).as("n_events"))
         .withColumn("n_weighted", lit(0L))
         .withColumn("w_mass", lit(0L))
-        .localCheckpoint(), // fold input; v1 never rescanned
-      () => feed = Layout.changeFeedCdf(s, root, "events_z",
-          "events_z_e2", "file_z", e2.touched)
-        .unionByName(Layout.changeFeedCdf(s, root, "events_z_e2",
-          "events_z_e3", "file_z", e3.touched))
-        .localCheckpoint()) // audit constants + fold + emit share it
-    // update images must be present and paired — the arm under test:
+        .localCheckpoint(),
+      () => feed = feedPlan.localCheckpoint())
     // both counts in ONE action over the checkpointed feed
     val upd = feed.agg(
       sum(when($"op" === "update_preimage", 1L).otherwise(0L)),
       sum(when($"op" === "update_postimage", 1L).otherwise(0L))).head
     val nUpd = upd.getLong(0)
-    require(nUpd > 0, s"q259: no update images in the feed at $d")
-    require(nUpd == upd.getLong(1), "q259: unpaired update images")
-    (maintainValueView(s, viewBase, feed, "weight")
-        .localCheckpoint(),
-      // feed users flow into exactly ONE consumer (the final emit
-      // join) — no checkpoint, they re-read the checkpointed feed
-      feed.select($"user_id").distinct(), nUpd)
+    require(nUpd > 0, s"value view: no update images in the feed at $d")
+    require(nUpd == upd.getLong(1), "value view: unpaired update images")
+    (viewBase, feedPlan, feed, nUpd)
   }
 
-  def q259ValueView(s: SparkSession, d: String): DataFrame = {
+  /** q259's and q262's result: the maintained `view` rows of the users
+    * the `feed` touched, plus whole-view totals and the update count as
+    * audit constants. */
+  private[ops] def emitValueView(s: SparkSession, view: DataFrame,
+      feed: DataFrame, nUpd: Long): DataFrame = {
     import s.implicits._
-    val (maintained, feedUsers, nUpd) = valFold(s, d)
-    val tot = maintained.agg(count(lit(1)).as("vu"),
+    val tot = view.agg(count(lit(1)).as("vu"),
       coalesce(sum($"n_events"), lit(0L)).as("vn"),
       coalesce(sum($"n_weighted"), lit(0L)).as("vc"),
       coalesce(sum($"w_mass"), lit(0L)).as("vm")).head
-    feedUsers
-      .join(maintained, Seq("user_id"), "left_outer")
+    feed.select($"user_id").distinct()
+      .join(view, Seq("user_id"), "left_outer")
       .select($"user_id",
         coalesce($"n_events", lit(0L)).as("n_events"),
         coalesce($"n_weighted", lit(0L)).as("n_weighted"),
@@ -4064,6 +4068,14 @@ object LlmQueries {
         lit(tot.getLong(2)).as("view_wc"),
         lit(tot.getLong(3)).as("view_wm"))
       .orderBy($"user_id")
+  }
+
+  def q259ValueView(s: SparkSession, d: String): DataFrame = {
+    val (viewBase, _, feed, nUpd) = valInputs(s, d)
+    emitValueView(s,
+      maintainValueView(s, viewBase, feed, "weight")
+        .localCheckpoint(), // totals + changed-row emit share it
+      feed, nUpd)
   }
   val q259Sql: String =
     s"""WITH $layoutCte,

@@ -179,13 +179,10 @@ object StreamQueries {
     * the production murmur + Minkowski stream (rows-only). */
   def q86StreamFoldSql(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val dense = graft.ml.Embed.denseSqlVectors(
         Tables.documents(s, d), "doc_id", "text", dim = 16)
       .select($"doc_id", $"vec".cast("array<float>").as("vec"))
-    val schema = new StructType()
-      .add("doc_id", LongType).add("vec", ArrayType(FloatType))
-    val source = fourBatchSource(dense, "doc_id", schema, "fold")
+    val source = fourBatchSource(dense, "doc_id", "fold")
     val pairs = source
       .select($"doc_id".as("_1"), $"vec".as("_2"))
       .as[(Long, Array[Float])]
@@ -210,12 +207,9 @@ object StreamQueries {
     * later copies arrive). */
   def q101StreamDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val hashed = Tables.documents(s, d)
       .select($"doc_id", md5($"text").as("content_hash"))
-    val schema = new StructType()
-      .add("doc_id", LongType).add("content_hash", StringType)
-    val source = fourBatchSource(hashed, "doc_id", schema, "dedup")
+    val source = fourBatchSource(hashed, "doc_id", "dedup")
     val pairs = source
       .select($"content_hash".as("_1"), $"doc_id".as("_2"))
       .as[(String, Long)]
@@ -244,14 +238,10 @@ object StreamQueries {
     * data. */
   def q120StreamPack(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d)
       .select($"doc_id", $"source",
         size(split($"text", " ")).cast("long").as("n_tokens"))
-    val schema = new StructType()
-      .add("doc_id", LongType).add("source", StringType)
-      .add("n_tokens", LongType)
-    val source = fourBatchSource(docs, "doc_id", schema, "pack")
+    val source = fourBatchSource(docs, "doc_id", "pack")
     val rows = source
       .select($"source".as("_1"), $"doc_id".as("_2"),
         $"n_tokens".as("_3"))
@@ -287,11 +277,8 @@ object StreamQueries {
     * data. */
   def q146StreamPostings(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d).select($"doc_id", $"text")
-    val schema = new StructType()
-      .add("doc_id", LongType).add("text", StringType)
-    val source = fourBatchSource(docs, "doc_id", schema, "postings")
+    val source = fourBatchSource(docs, "doc_id", "postings")
     val occ = source.select(
         explode(graft.llm.TextOps.regexTokens(lower($"text")))
           .as("_1"),
@@ -328,11 +315,8 @@ object StreamQueries {
     * q143's SQL replays them (the same twin logic as q110/q114). */
   def q154StreamQuality(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d).select($"doc_id", $"text")
-    val schema = new StructType()
-      .add("doc_id", LongType).add("text", StringType)
-    val source = fourBatchSource(docs, "doc_id", schema, "quality")
+    val source = fourBatchSource(docs, "doc_id", "quality")
     val toks = graft.llm.TextOps.regexTokens(lower($"text"))
     val scored = source.select($"doc_id",
         size(toks).cast("long").as("n_tokens"),
@@ -355,11 +339,8 @@ object StreamQueries {
     * can rank by hash; ingest can only rank by time). */
   def q156StreamSourceCap(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d).select($"doc_id", $"source")
-    val schema = new StructType()
-      .add("doc_id", LongType).add("source", StringType)
-    val source = fourBatchSource(docs, "doc_id", schema, "srccap")
+    val source = fourBatchSource(docs, "doc_id", "srccap")
     val rows = source.select($"source", $"doc_id")
       .as[(String, Long)]
     val out = StreamOps.streamSourceCap(rows, cap = 10)
@@ -387,11 +368,8 @@ object StreamQueries {
     * semantically — now has its ingest twin. */
   def q158StreamChunks(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d).select($"doc_id", $"text")
-    val schema = new StructType()
-      .add("doc_id", LongType).add("text", StringType)
-    val source = fourBatchSource(docs, "doc_id", schema, "chunks")
+    val source = fourBatchSource(docs, "doc_id", "chunks")
     val chunks = graft.llm.Corpus.chunkWithOverlap(
       source, "doc_id", "text", budget = 16, stride = 8)
     runToMemory(chunks, "append") { sinkDf =>
@@ -414,11 +392,8 @@ object StreamQueries {
     * this closes the loop by SERVING from what arrived. */
   def q164StreamBm25(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val docsAll = Tables.documents(s, d).select($"doc_id", $"text")
-    val schema = new StructType()
-      .add("doc_id", LongType).add("text", StringType)
-    val source = fourBatchSource(docsAll, "doc_id", schema, "bm25ix")
+    val source = fourBatchSource(docsAll, "doc_id", "bm25ix")
     val occ = source.select(
         explode(graft.llm.TextOps.regexTokens(lower($"text")))
           .as("_1"),
@@ -444,12 +419,8 @@ object StreamQueries {
     * groups — the q146 df_seen pattern on two counters. */
   def q170StreamSourceStats(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d).select($"doc_id", $"source", $"text")
-    val schema = new StructType()
-      .add("doc_id", LongType).add("source", StringType)
-      .add("text", StringType)
-    val source = fourBatchSource(docs, "doc_id", schema, "srcstats")
+    val source = fourBatchSource(docs, "doc_id", "srcstats")
     val rows = source.select($"source",
         size(split($"text", " ")).cast("long").as("n_tokens"))
       .as[(String, Long)]
@@ -490,11 +461,8 @@ object StreamQueries {
     * is first-tile-of-shingle arithmetic, no state replay needed. */
   def q177StreamNovelty(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d).select($"doc_id", $"text")
-    val schema = new StructType()
-      .add("doc_id", LongType).add("text", StringType)
-    val source = fourBatchSource(docs, "doc_id", schema, "novelty")
+    val source = fourBatchSource(docs, "doc_id", "novelty")
     // fanBatch: the 8-gram shingle explode is the batch's dominant
     // CPU and rode the 1-task file scan; the per-shingle fold
     // (first-seen bit + MIN doc id) is order-independent
@@ -550,11 +518,8 @@ object StreamQueries {
     * matter how much data arrives — the whole point of a sketch. */
   def q179StreamCms(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d).select($"doc_id", $"text")
-    val schema = new StructType()
-      .add("doc_id", LongType).add("text", StringType)
-    val source = fourBatchSource(docs, "doc_id", schema, "cmsingest")
+    val source = fourBatchSource(docs, "doc_id", "cmsingest")
     // fanBatch: tokenization + 4 md5 cells per token rode the
     // 1-task scan; the per-cell fold (count + MIN id) is
     // order-independent
@@ -614,12 +579,9 @@ object StreamQueries {
     * regardless of arrival volume. */
   def q190StreamQuantile(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d)
       .select($"doc_id", $"source", $"text")
-    val schema = new StructType().add("doc_id", LongType)
-      .add("source", StringType).add("text", StringType)
-    val source = fourBatchSource(docs, "doc_id", schema, "qsketch")
+    val source = fourBatchSource(docs, "doc_id", "qsketch")
     val bucketed = source.select($"doc_id", $"source",
         size(graft.llm.TextOps.tokens($"text")).cast("long").as("n"))
       .filter($"n" >= 1)
@@ -682,13 +644,10 @@ object StreamQueries {
     * per-tile replay (the q179 pattern). */
   def q203StreamCoverage(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val e = Tables.embeddings(s, d).select($"vec_id", $"embedding")
     val centers = graft.llm.Select.centersOf(e, "vec_id", "embedding",
       graft.llm.Select.kCenterGreedy(e, "vec_id", "embedding", k = 6))
-    val schema = new StructType().add("vec_id", LongType)
-      .add("embedding", ArrayType(FloatType))
-    val source = fourBatchSource(e, "vec_id", schema, "coverage")
+    val source = fourBatchSource(e, "vec_id", "coverage")
     val rows = source.select($"vec_id",
         graft.llm.Select.nearestCenter(
           graft.ml.Distance.fixedPointVec(
@@ -747,12 +706,9 @@ object StreamQueries {
     * never by rows. */
   def q210StreamZonemap(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val ev = Tables.events(s, d).select($"event_id", $"user_id",
       unix_micros($"ts").as("us"))
-    val schema = new StructType().add("event_id", LongType)
-      .add("user_id", LongType).add("us", LongType)
-    val source = fourBatchSource(ev, "event_id", schema, "zonemap")
+    val source = fourBatchSource(ev, "event_id", "zonemap")
     val rows = source.select(
         expr("event_id DIV 2048").as("_1"),
         $"user_id".as("_2"), $"us".as("_3"), $"event_id".as("_4"))
@@ -1008,13 +964,9 @@ object StreamQueries {
     * argument, and hash-checked here rather than asserted. */
   def q217StreamFunnel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val ev = Tables.events(s, d).select($"event_id", $"user_id",
       $"event_type", unix_micros($"ts").as("us"))
-    val schema = new StructType().add("event_id", LongType)
-      .add("user_id", LongType).add("event_type", StringType)
-      .add("us", LongType)
-    val source = fourBatchSource(ev, "event_id", schema, "funnel")
+    val source = fourBatchSource(ev, "event_id", "funnel")
     val rows = source.select($"user_id".as("_1"),
         $"event_type".as("_2"), $"us".as("_3"), $"event_id".as("_4"))
       .as[(Long, String, Long, Long)]
@@ -1124,12 +1076,9 @@ object StreamQueries {
     * arrived in tiles ≤ batch — the q179/q190 cumulative replay. */
   def q221StreamDau(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val ev = Tables.events(s, d).select($"event_id", $"user_id",
       expr("unix_micros(ts) DIV 86400000000").as("dy"))
-    val schema = new StructType().add("event_id", LongType)
-      .add("user_id", LongType).add("dy", LongType)
-    val source = fourBatchSource(ev, "event_id", schema, "dau")
+    val source = fourBatchSource(ev, "event_id", "dau")
     val rows = source.select(
         concat($"dy".cast("string"), lit("|"),
           $"user_id".cast("string")).as("_1"),
@@ -1334,11 +1283,8 @@ object StreamQueries {
       keysOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
       : DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d).select($"doc_id", $"text")
-    val schema = new StructType()
-      .add("doc_id", LongType).add("text", StringType)
-    streamKeepUnseenFrame(s, docs, "doc_id", "text", schema, tag, keysOf)
+    streamKeepUnseenFrame(s, docs, "doc_id", "text", tag, keysOf)
   }
 
   /** The modality-generic core of [[streamKeepUnseen]]: any frame with a
@@ -1346,12 +1292,11 @@ object StreamQueries {
     * an array of state keys (q106 text→minhash buckets, q108
     * text→simhash bands, q109 embedding→sign-LSH bands). */
   private def streamKeepUnseenFrame(s: SparkSession, frame: DataFrame,
-      idCol: String, valCol: String,
-      schema: org.apache.spark.sql.types.StructType, tag: String,
+      idCol: String, valCol: String, tag: String,
       keysOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
       : DataFrame = {
     import s.implicits._
-    val source = fourBatchSource(frame, idCol, schema, tag)
+    val source = fourBatchSource(frame, idCol, tag)
     val buckets = source
       .select(explode(keysOf(col(valCol))).as("_1"),
         col(idCol).as("_2"))
@@ -1445,14 +1390,9 @@ object StreamQueries {
     * derivation is pure codegen (when/element_at chains, no UDF, no
     * lambda), so the per-row cost at ingest is a scan-local expression. */
   def q109StreamEmbDedup(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"))
-    val schema = new StructType()
-      .add("vec_id", LongType)
-      .add("embedding", ArrayType(FloatType))
-    streamKeepUnseenFrame(s, emb, "vec_id", "embedding", schema,
-      "embdedup",
+    streamKeepUnseenFrame(s, emb, "vec_id", "embedding", "embdedup",
       v => Dedup.embeddingSignBandKeysSql(v.cast("array<double>")))
   }
   val q109Sql: String =
@@ -1485,7 +1425,6 @@ object StreamQueries {
     * ingest DECISION — contaminated or not — is per hit row anyway). */
   def q110StreamDecon(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val tier = regexp_extract($"source", "src([0-9]+)", 1).cast("long") % 4
     val lab = Tables.documents(s, d).withColumn("is_eval", tier === 3)
     val train = lab.filter(!$"is_eval").select($"doc_id", $"text")
@@ -1499,9 +1438,7 @@ object StreamQueries {
       .groupBy($"shingle")
       .agg(min($"eval_doc").as("eval_doc"))
       .localCheckpoint()
-    val schema = new StructType()
-      .add("doc_id", LongType).add("text", StringType)
-    val source = fourBatchSource(train, "doc_id", schema, "decon")
+    val source = fourBatchSource(train, "doc_id", "decon")
     // fanBatch: the arriving side's 8-gram explode rode the 1-task
     // scan; the join is stateless (order irrelevant, finish
     // re-aggregates per doc)
@@ -1536,15 +1473,11 @@ object StreamQueries {
     * one, so q112's SQL replay is the exact oracle. */
   def q114StreamIvfIngest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val e = Tables.embeddings(s, d).select($"vec_id", $"embedding")
     val sample = e.filter(pmod($"vec_id", lit(10)) === 0)
     val cents = graft.llm.Ivf.fitCentroids(sample, "vec_id", "embedding",
       nlist = 16)
-    val schema = new StructType()
-      .add("vec_id", LongType)
-      .add("embedding", ArrayType(FloatType))
-    val source = fourBatchSource(e, "vec_id", schema, "ivfingest")
+    val source = fourBatchSource(e, "vec_id", "ivfingest")
     val indexed = graft.llm.Quantize.withInt8(
         graft.llm.Ivf.assignIndex(source, "vec_id", "embedding", cents),
         "v")
@@ -1575,13 +1508,8 @@ object StreamQueries {
     * oracle replays each prefix as a ranked distinct re-sketch. */
   def q229StreamKmv(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d).select($"doc_id", $"source", $"text")
-    val schema = new StructType()
-      .add("doc_id", LongType)
-      .add("source", StringType)
-      .add("text", StringType)
-    val source = fourBatchSource(docs, "doc_id", schema, "kmvingest")
+    val source = fourBatchSource(docs, "doc_id", "kmvingest")
     // fanBatch: shingle explode + per-shingle md5 rode the 1-task
     // scan; the KMV merge is associative (order-independent)
     val rows = fanBatch(source).select($"source",
@@ -1650,16 +1578,13 @@ object StreamQueries {
     * feed can cluster-pack its corpus at any arrival rate. */
   def q234StreamAffinityPack(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d).select($"doc_id", $"text")
     val emb = graft.ml.Embed.denseSqlVectors(docs, "doc_id", "text",
       dim = 64)
     val cents = graft.llm.Ivf.fitCentroids(
       emb.filter(pmod($"doc_id", lit(10)) === 0), "doc_id", "vec",
       nlist = 8)
-    val schema = new StructType()
-      .add("doc_id", LongType).add("text", StringType)
-    val source = fourBatchSource(docs, "doc_id", schema, "affpack")
+    val source = fourBatchSource(docs, "doc_id", "affpack")
     // fanBatch: the 64-dim hash embed per doc rode the 1-task scan;
     // the pack fold sorts in-batch by id (streamingPackSequences),
     // so shuffle arrival order cannot change its output
@@ -1707,14 +1632,10 @@ object StreamQueries {
     * sketch-shelf bound. */
   def q239StreamPlanner(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val ev = Tables.events(s, d)
       .select($"event_id", $"user_id", $"event_type")
-    val schema = new StructType()
-      .add("event_id", LongType).add("user_id", LongType)
-      .add("event_type", StringType)
     val width = 256
-    val source = fourBatchSource(ev, "event_id", schema, "planfeed")
+    val source = fourBatchSource(ev, "event_id", "planfeed")
     val sided = source.withColumn("side",
         when($"event_type" === "click", "c")
           .when($"event_type" === "purchase", "p")
@@ -1869,7 +1790,6 @@ object StreamQueries {
   private def buildUpsertChain(s: SparkSession, d: String,
       withFeeds: Boolean = true): UpsertChain = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val root = graft.util.Fs.tempRoot("graft_chainstore").toString
     // v1 incumbent: byte-identical to the shared mutation store's
     // events_z (same eventLayout, same saveLayout) — carry it onto this
@@ -1892,15 +1812,11 @@ object StreamQueries {
     val nIns = auditHead.getLong(0)
     val nRep = auditHead.getLong(1)
     val ftTouched = auditHead.getLong(2)
-    val schema = new StructType()
-      .add("event_id", LongType).add("user_id", LongType)
-      .add("ub", LongType).add("tb", LongType)
-      .add("zkey", LongType).add("file_z", LongType)
     val feedDir = graft.util.Fs.tempRoot("graft_chainfeed").toString
     // audit keyed by batch id — idempotent under re-execution
     val audit = new java.util.concurrent.ConcurrentHashMap[
       Long, (String, Long, Long)]()
-    val source = fourBatchSource(delta, "event_id", schema, "chain")
+    val source = fourBatchSource(delta, "event_id", "chain")
     runForeachBatch(source) { (b, id) =>
       // ALL names derive from the batch id, not a counter
       val commitNo = id + 1
@@ -1929,7 +1845,7 @@ object StreamQueries {
       graft.util.Par.inParallel(
         // a re-executed batch whose version already committed is
         // skipped — versions are immutable, the publish WAS the
-        // transaction (publishExclusiveFrom would rightly refuse)
+        // transaction (publishExclusive would rightly refuse)
         () => if (!graft.state.ModelStore.exists(root, next))
           Layout.upsertRows(s, root, incumbent, "file_z", bb, next,
             preloaded = Some(inc)),
@@ -2023,7 +1939,6 @@ object StreamQueries {
     * work ∝ that batch's feed, the view never recomputed. */
   def q247StreamView(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val ev = Tables.events(s, d).select($"event_id", $"user_id")
     val viewBase = ev.groupBy($"user_id")
       .agg(count(lit(1)).as("n_events"), sum($"event_id").as("e_mass"))
@@ -2038,10 +1953,7 @@ object StreamQueries {
         .select(lit("delete").as("op"), $"event_id", $"user_id"))
       .withColumn("feed_id", $"event_id" * 2 +
         when($"op" === "delete", 1L).otherwise(0L))
-    val schema = new StructType()
-      .add("op", StringType).add("event_id", LongType)
-      .add("user_id", LongType).add("feed_id", LongType)
-    val typed = fourBatchSource(feed, "feed_id", schema, "viewmaint")
+    val typed = fourBatchSource(feed, "feed_id", "viewmaint")
       .select($"op", $"event_id", $"user_id")
       .as[(String, Long, Long)]
     val maintained = StreamOps.streamingViewMaintain(typed,
@@ -2207,7 +2119,6 @@ object StreamQueries {
     * its rows land in — the de-saturated form of the q242 wall. */
   def q258SplitStreamMerge(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val fx = LlmQueries.splitFixture(s, d)
     val chainDone = new java.util.concurrent.ConcurrentHashMap[
       Long, Long]()
@@ -2218,10 +2129,6 @@ object StreamQueries {
       sum(when($"event_id" >= Off, 1L).otherwise(0L)),
       sum(when($"event_id" < Off, 1L).otherwise(0L))).head
     val (nIns, nRep) = (counts.getLong(0), counts.getLong(1))
-    val schema = new StructType()
-      .add("event_id", LongType).add("user_id", LongType)
-      .add("ub", LongType).add("tb", LongType)
-      .add("zkey", LongType).add("file_z", LongType)
     val lastVersion = "events_z_sp_s4"
     val rootPath = graft.util.Fs.tempRoot("graft_splitmerge")
     val root = rootPath.toString
@@ -2230,7 +2137,7 @@ object StreamQueries {
         java.nio.file.Paths.get(fx.root, "events_z_sp"),
         rootPath.resolve("events_z_sp"))
       val source =
-        fourBatchSource(delta, "event_id", schema, "splitchain")
+        fourBatchSource(delta, "event_id", "splitchain")
       runForeachBatch(source) { (b, id) =>
         val commitNo = id + 1
         val incumbent =
@@ -2305,7 +2212,6 @@ object StreamQueries {
     * store's `events_z_sp`, released once the audit is collected. */
   def q260LocalizedIngest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
     val fx = LlmQueries.splitFixture(s, d)
     val (v1, _) = Layout.loadLayout(s, fx.root) // content == the split store
     val W = 512L
@@ -2323,10 +2229,6 @@ object StreamQueries {
       .withColumn("event_id", $"event_id" + Off) // localized inserts
       .unionByName(inStripes.filter($"event_id" % 2 === 0)) // re-deliveries
       .drop("file_t")
-    val schema = new StructType()
-      .add("event_id", LongType).add("user_id", LongType)
-      .add("ub", LongType).add("tb", LongType)
-      .add("zkey", LongType).add("file_z", LongType)
     val audit = new java.util.concurrent.ConcurrentHashMap[
       Long, (Long, Long)]()
     val rootPath = graft.util.Fs.tempRoot("graft_locingest")
@@ -2335,7 +2237,7 @@ object StreamQueries {
       graft.util.Fs.copyRecursively(
         java.nio.file.Paths.get(fx.root, "events_z_sp"),
         rootPath.resolve("events_z_sp"))
-      val source = tiledSource(delta, schema, "locingest")
+      val source = tiledSource(delta, "locingest")
       runForeachBatch(source) { (b, id) =>
         val commitNo = id + 1
         val next = s"events_z_L$commitNo"
@@ -2428,91 +2330,41 @@ object StreamQueries {
     * a self-contained signed contribution — the StreamingSpec torn-
     * update pin); convergence is what this gate checks. 100 TB shape:
     * state is the view row per user, per-batch work ∝ the feed. */
-  /** q262's streamed fold, executed on EVERY invocation: the live
-    * maintenance stream is what the query is named for; the
-    * [[LlmQueries.mutStore]] versions it folds over are fixtures.
-    * Returns (maintained view, feed users, update count), frames
-    * localCheckpointed because totals + emit both consume them. */
-  private def valViewChain(s: SparkSession, d: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-          Long) = {
-        import s.implicits._
-        import org.apache.spark.sql.types._
-        val e2 = mutStore.evolved(s, d).res
-        val e3 = mutStore.updated(s, d).res
-        val root = mutStore.root(s, d)
-        val v1 = mutStore.v1(s, d)
-        // base view and feed read disjoint published versions —
-        // materialize both concurrently (guide §2.6, as in q259)
-        var viewBase: DataFrame = null
-        var feed: DataFrame = null
-        graft.util.Par.inParallel(
-          () => viewBase = v1.groupBy($"user_id")
-            .agg(count(lit(1)).as("n_events"))
-            .withColumn("n_weighted", lit(0L))
-            .withColumn("w_mass", lit(0L))
-            .localCheckpoint(), // seed + serving snapshot + emit share it
-          () => feed = Layout.changeFeedCdf(s, root, "events_z",
-              "events_z_e2", "file_z", e2.touched)
-            .unionByName(Layout.changeFeedCdf(s, root, "events_z_e2",
-              "events_z_e3", "file_z", e3.touched))
-            .select($"op", $"event_id", $"user_id", $"weight")
-            .localCheckpoint()) // audit + stream split + emit share it
-        val nUpd = feed.filter($"op" === "update_preimage").count()
-        require(nUpd > 0, s"q262: no update images in the feed at $d")
-        val schema = new StructType()
-          .add("op", StringType).add("event_id", LongType)
-          .add("user_id", LongType).add("weight", LongType)
-        val pairs = fourBatchSource(feed, "event_id", schema, "valview")
-          .select($"op".as("_1"), $"event_id".as("_2"),
-            $"user_id".as("_3"), $"weight".as("_4"))
-          .as[(String, Long, Long, Option[Long])]
-        val base = viewBase
-          .select($"user_id".as("_1"), $"n_events".as("_2"),
-            $"n_weighted".as("_3"), $"w_mass".as("_4"))
-          .as[(Long, Long, Long, Long)]
-        val out = StreamOps.streamingValueViewMaintain(pairs, base)
-        val whole = runToMemory(out, "update") { sinkDf =>
-          import org.apache.spark.sql.expressions.Window
-          // the user's LAST emission is the maintained row; untouched
-          // users keep serving from the base snapshot (merge-on-read)
-          val last = sinkDf
-            .withColumn("rk", row_number().over(
-              Window.partitionBy($"user_id").orderBy($"seq".desc)))
-            .filter($"rk" === 1)
-            .select($"user_id", $"n_events".as("sn"),
-              $"n_weighted".as("sc"), $"w_mass".as("sm"))
-          viewBase.join(last, Seq("user_id"), "full_outer")
-            .select($"user_id",
-              coalesce($"sn", $"n_events").as("n_events"),
-              coalesce($"sc", $"n_weighted").as("n_weighted"),
-              coalesce($"sm", $"w_mass").as("w_mass"))
-            .filter($"n_events" > 0)
-        }
-        // feed users: one consumer (the final emit join) — no
-        // checkpoint, they re-read the checkpointed feed
-        (whole, feed.select($"user_id").distinct(), nUpd)
-      }
-
   def q262StreamValueView(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (whole, feedUsers, nUpd) = valViewChain(s, d)
-    val tot = whole.agg(count(lit(1)).as("vu"),
-      coalesce(sum($"n_events"), lit(0L)).as("vn"),
-      coalesce(sum($"n_weighted"), lit(0L)).as("vc"),
-      coalesce(sum($"w_mass"), lit(0L)).as("vm")).head
-    feedUsers
-      .join(whole, Seq("user_id"), "left_outer")
-      .select($"user_id",
-        coalesce($"n_events", lit(0L)).as("n_events"),
-        coalesce($"n_weighted", lit(0L)).as("n_weighted"),
-        coalesce($"w_mass", lit(0L)).as("w_mass"),
-        lit(nUpd).as("n_updates"),
-        lit(tot.getLong(0)).as("view_users"),
-        lit(tot.getLong(1)).as("view_n"),
-        lit(tot.getLong(2)).as("view_wc"),
-        lit(tot.getLong(3)).as("view_wm"))
-      .orderBy($"user_id")
+    val (viewBase, feedPlan, feed, nUpd) = LlmQueries.valInputs(s, d)
+    // the stream splits the feed's plan, not its per-invocation
+    // checkpoint, so the split fixture is keyed by the published
+    // versions and a second invocation reuses it
+    val pairs = fourBatchSource(
+        feedPlan.select($"op", $"event_id", $"user_id", $"weight"),
+        "event_id", "valview")
+      .select($"op".as("_1"), $"event_id".as("_2"),
+        $"user_id".as("_3"), $"weight".as("_4"))
+      .as[(String, Long, Long, Option[Long])]
+    val base = viewBase
+      .select($"user_id".as("_1"), $"n_events".as("_2"),
+        $"n_weighted".as("_3"), $"w_mass".as("_4"))
+      .as[(Long, Long, Long, Long)]
+    val out = StreamOps.streamingValueViewMaintain(pairs, base)
+    val whole = runToMemory(out, "update") { sinkDf =>
+      import org.apache.spark.sql.expressions.Window
+      // the user's LAST emission is the maintained row; untouched
+      // users keep serving from the base snapshot (merge-on-read)
+      val last = sinkDf
+        .withColumn("rk", row_number().over(
+          Window.partitionBy($"user_id").orderBy($"seq".desc)))
+        .filter($"rk" === 1)
+        .select($"user_id", $"n_events".as("sn"),
+          $"n_weighted".as("sc"), $"w_mass".as("sm"))
+      viewBase.join(last, Seq("user_id"), "full_outer")
+        .select($"user_id",
+          coalesce($"sn", $"n_events").as("n_events"),
+          coalesce($"sc", $"n_weighted").as("n_weighted"),
+          coalesce($"sm", $"w_mass").as("w_mass"))
+        .filter($"n_events" > 0)
+    }
+    LlmQueries.emitValueView(s, whole, feed, nUpd)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -25,7 +25,12 @@ object Enrich {
 
   /** Log-shaped view of events (SURVEY.md §7.2 step 3 recast). */
   def logView(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.events(spark, sfDir).select(
+    logColumns(Tables.events(spark, sfDir))
+
+  /** [[logView]]'s projection, over any frame with the `events`
+    * columns (a table scan or a stream's micro-batch). */
+  def logColumns(events: DataFrame): DataFrame =
+    events.select(
       col("event_id").as("log_id"),
       col("ts"),
       when(col("event_type") === "error", "error")
@@ -91,11 +96,19 @@ object Enrich {
   def incrementalBatch(spark: SparkSession, sfDir: String,
       model: DenStream.Model, centroids: Array[Centroids.Centroid],
       lo: Long, hi: Long,
+      semThreshold: Double = DefaultSemThreshold): DataFrame =
+    score(logView(spark, sfDir).filter(col("log_id").between(lo, hi)),
+      model, centroids, semThreshold)
+
+  /** The scoring step of an incremental batch, over any [[logColumns]]
+    * frame: keep the warning and error rows, embed them, then assign
+    * each its semantic group against `centroids` and its cluster
+    * against the frozen `model`. */
+  def score(logs: DataFrame, model: DenStream.Model,
+      centroids: Array[Centroids.Centroid],
       semThreshold: Double = DefaultSemThreshold): DataFrame = {
-    val logs = logView(spark, sfDir)
-      .filter(col("log_id").between(lo, hi) &&
-        col("level").isin("warning", "error"))
-    val withSem = Centroids.scoreAgainst(withEmbedding(logs), centroids,
+    val kept = logs.filter(col("level").isin("warning", "error"))
+    val withSem = Centroids.scoreAgainst(withEmbedding(kept), centroids,
       "embedding", semThreshold)
     DenStream.withPredictions(withSem, model, "embedding")
   }

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import scala.jdk.CollectionConverters._
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession,
   functions => F}
@@ -71,7 +71,8 @@ object PipelineRunner {
     *      stage `centroids`, founder and size per group joined to the
     *      founder's vector (2), and write `log_embeddings` (1)
     *   4. publish both state tables — renames, no job
-    * A failure in any of the three writes publishes no state. */
+    * A failure in any of the three writes publishes no state and
+    * leaves no staged attempt behind. */
   def train(spark: SparkSession, sfDir: String, stateDir: String,
       outDir: String): Unit =
     Enrich.trainingBatch(spark, sfDir) { (enriched, model) =>
@@ -80,18 +81,24 @@ object PipelineRunner {
       val written = Observation("log_embeddings")
       // persist model state (A12) with blue/green swap (A13): centroids
       // fit from the same enriched frame the model scored
-      Par.inParallel(
-        () => ModelStore.stage(DenStream.stateDF(spark, model), stateDir,
-          "denstream"),
-        () => ModelStore.stage(
+      var den, cen: Path = null
+      try Par.inParallel(
+        () => den = ModelStore.stage(DenStream.stateDF(spark, model),
+          stateDir, "denstream"),
+        () => cen = ModelStore.stage(
           Centroids.fitCentroids(enriched, "log_id", "embedding"),
           stateDir, "centroids"),
         () => enriched
           .observe(written, F.count(F.lit(1)).as("rows"))
           .withColumn("embedding", F.col("embedding").cast("array<float>"))
           .write.mode("overwrite").parquet(s"$outDir/log_embeddings"))
-      ModelStore.publish(stateDir, "denstream")
-      ModelStore.publish(stateDir, "centroids")
+      catch { case t: Throwable =>
+        // a write failed: the attempts that did stage are never published
+        Seq(den, cen).filter(_ != null).foreach(ModelStore.discard)
+        throw t
+      }
+      ModelStore.publish(stateDir, "denstream", den)
+      ModelStore.publish(stateDir, "centroids", cen)
       println(s"[train] micro-clusters=${model.clusters.length} " +
         s"rows=${written.get("rows")}")
     }

@@ -2,9 +2,9 @@ package graft.state
 
 /** The typed compare-and-swap loser signal for the OCC commit protocol.
   *
-  * Thrown by [[ModelStore.publishExclusiveFrom]] / [[ModelStore.publishExclusive]]
-  * when another writer already published the immutable version name, and
-  * by [[Catalog.commit]] when the live txn moved past `expectedTxn`. The
+  * Thrown by [[ModelStore.publishExclusive]] when another writer
+  * already published the immutable version name, and by
+  * [[Catalog.commit]] when the live txn moved past `expectedTxn`. The
   * caller contract is always the same: REBASE — resolve the newly live
   * base, re-derive the transaction, retry under a fresh attempt.
   *

@@ -20,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * monotone chain of IMMUTABLE versions `catalog_t<n>`, "live" is the
   * highest `n`, and a swap is compare-and-swap — a writer that derived
   * its new pointer from txn `e` may only create `catalog_t(e+1)`, and
-  * creation goes through [[ModelStore.publishExclusiveFrom]]'s single
+  * creation goes through [[ModelStore.publishExclusive]]'s single
   * no-replace rename, so of any number of racers from the same base
   * exactly one lands and every loser gets an error and must REBASE
   * (re-derive its maintenance off the new live base, then re-swap).
@@ -120,7 +120,7 @@ object Catalog {
   /** COMPARE-AND-SWAP commit: publish `pointer` as txn
     * `expectedTxn + 1`, failing if any other writer committed since the
     * caller read `expectedTxn`. The liveTxn require is the fast-fail;
-    * the arbiter is [[ModelStore.publishExclusiveFrom]]'s no-replace
+    * the arbiter is [[ModelStore.publishExclusive]]'s no-replace
     * rename on the immutable name `catalog_t(e+1)` — two racers from
     * the same base both pass the fast-fail, exactly one rename lands,
     * and the loser throws WITHOUT having disturbed the winner (its
@@ -138,20 +138,14 @@ object Catalog {
           s"live is $liveNow — rebase onto the live pointer and retry")
     val next = expectedTxn + 1
     val name = s"$Prefix$next"
-    val attempt = ModelStore.newAttempt(root, name)
     // A failed attempt (CAS loss or write error) must not orphan its
-    // staged pointer dir: vacuum maps `_staging/catalog_t<n>.attempt-*`
-    // to the winner's KEPT name, so the orphan would survive every
-    // sweep for as long as txn n stays in the keep-set.
-    try {
-      pointer.write.mode("overwrite").parquet(attempt.toString)
-      ModelStore.publishExclusiveFrom(root, name, attempt)
-    } catch {
-      case e: Throwable =>
-        try graft.util.Fs.deleteRecursively(attempt)
-        catch { case _: Exception => () } // best-effort; don't mask e
-        throw e
-    }
+    // staged pointer dir: vacuum maps a `catalog_t<n>` attempt to the
+    // winner's KEPT name, so the orphan would survive every sweep for
+    // as long as txn n stays in the keep-set. `stage` discards its own
+    // failed write; a lost publish discards here.
+    val attempt = ModelStore.stage(pointer, root, name)
+    try ModelStore.publishExclusive(root, name, attempt)
+    catch { case e: Throwable => ModelStore.discard(attempt); throw e }
     // the commit has LANDED; the checkpoint marker is advisory tail
     // compression (Delta §3.2) refreshed every CheckpointEvery commits
     if (next % CheckpointEvery == 0) writeCheckpoint(root, next)

@@ -1,7 +1,6 @@
 package graft.state
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -12,26 +11,38 @@ import org.apache.spark.sql.types.StructType
   * `vector_engine.py:47-61`) and the training script's staging-dir →
   * atomic-rename swap (`scripts/run_training_batch.py:30-36, 243-257`).
   * Engine form: state is ordinary parquet tables (micro-clusters,
-  * centroids, anomaly baselines) written to `<root>/_staging/<name>` and
-  * atomically moved over `<root>/<name>`, with the previous production
-  * copy kept as `<name>_backup`.
+  * centroids, anomaly baselines). Every write stages in a private
+  * attempt dir, `<root>/_staging/<name>.attempt-<uuid>` ([[newAttempt]]),
+  * which is then atomically moved over `<root>/<name>`, with the
+  * previous production copy kept as `<name>_backup` ([[publish]]), or
+  * moved only if `<name>` is new ([[publishExclusive]]). Concurrent
+  * writers to one name stage side by side, so only the publish rename
+  * arbitrates between them.
   */
 object ModelStore {
 
   private def rm(p: Path): Unit = graft.util.Fs.deleteRecursively(p)
 
-  /** Write `df` to the staging area of `root`.
-    *
-    * NOTE the shared-path caveat: two writers racing to the SAME name
-    * both stage here, and the second overwrite can tear the first's
-    * staged bytes before its publish rename — acceptable for the
-    * blue/green MUTABLE names this serves (their race is last-writer-
-    * wins by contract), but the OCC/copy-on-write paths must stage
-    * under a unique per-attempt directory instead ([[newAttempt]] +
-    * [[publishExclusiveFrom]]), so a losing attempt can never corrupt
-    * the winner's staged data. */
-  def stage(df: DataFrame, root: String, name: String): Unit =
-    df.write.mode("overwrite").parquet(s"$root/_staging/$name")
+  /** Writes `df` into a fresh attempt dir of `name` and returns the
+    * dir, for [[publish]] or [[publishExclusive]]. A write that throws
+    * deletes its attempt dir. */
+  def stage(df: DataFrame, root: String, name: String): Path =
+    stageWith(root, name)(a => df.write.mode("overwrite").parquet(a.toString))
+
+  /** [[stage]] for a caller that lays out the attempt dir itself:
+    * runs `write` over a fresh attempt dir of `name` and returns the
+    * dir, or deletes it and rethrows if `write` throws. */
+  def stageWith(root: String, name: String)(write: Path => Unit): Path = {
+    val attempt = newAttempt(root, name)
+    try write(attempt) catch { case t: Throwable => discard(attempt); throw t }
+    attempt
+  }
+
+  /** Deletes a staged attempt that will not be published. Best effort:
+    * a failure here must not mask the error that made the caller give
+    * the attempt up. */
+  def discard(attempt: Path): Unit =
+    try rm(attempt) catch { case scala.util.control.NonFatal(_) => () }
 
   /** The attempt-dir separator. A staged attempt lives at
     * `_staging/<name><sep><uuid>`; [[vacuum]] maps it back to its
@@ -39,12 +50,12 @@ object ModelStore {
   private[state] val AttemptSep = ".attempt-"
 
   /** A fresh, writer-private staging directory for one commit attempt
-    * of `name` — the fix for the shared-staging-path race: concurrent
-    * attempts at the same version name stage side by side and only the
-    * PUBLISH rename arbitrates, so a losing attempt can neither delete
-    * nor half-overwrite the winner's staged bytes. The caller writes
-    * its tables under the returned path, then publishes via
-    * [[publishFrom]] (blue/green) or [[publishExclusiveFrom]] (OCC). */
+    * of `name`: concurrent attempts at the same version name stage side
+    * by side and only the publish rename arbitrates, so a losing
+    * attempt can neither delete nor half-overwrite the winner's staged
+    * bytes. The caller writes its tables under the returned path, then
+    * publishes via [[publish]] (blue/green) or [[publishExclusive]]
+    * (OCC). */
   def newAttempt(root: String, name: String): Path = {
     val p = Paths.get(root, "_staging",
       s"$name$AttemptSep${java.util.UUID.randomUUID().toString}")
@@ -52,11 +63,10 @@ object ModelStore {
     p
   }
 
-  /** Blue/green publish from a private attempt dir ([[newAttempt]]):
-    * prod → backup, attempt → prod. Same two atomic renames as
-    * [[publish]], with the staged bytes immune to concurrent attempts
-    * at the same name. */
-  def publishFrom(root: String, name: String, attempt: Path): Unit = {
+  /** Blue/green publish from a staged attempt: prod → backup,
+    * attempt → prod, two atomic renames (mirroring
+    * run_training_batch.py:243-257). */
+  def publish(root: String, name: String, attempt: Path): Unit = {
     val prod = Paths.get(root, name)
     val backup = Paths.get(root, s"${name}_backup")
     require(Files.exists(attempt), s"no staged attempt at $attempt")
@@ -66,15 +76,15 @@ object ModelStore {
     Files.move(attempt, prod, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** First-writer-wins publish from a private attempt dir — the OCC
-    * commit primitive the copy-on-write mutation arms use. The
-    * existence check is the fast-fail; the arbiter is the single
-    * `Files.move` WITHOUT replace-existing: of any number of racing
-    * attempts at the same immutable version name, exactly one rename
-    * lands and every other throws [[CasConflictException]], with each
-    * loser's staged bytes private to it (nothing to tear — the r13
-    * shared-path hazard is structurally gone). A loser must REBASE onto
-    * the newly live version and retry under a fresh attempt.
+  /** First-writer-wins publish from a staged attempt — the OCC commit
+    * primitive for IMMUTABLE version names, which the copy-on-write
+    * mutation arms ([[graft.llm.Layout]]) and the catalog commit
+    * through. The existence check is the fast-fail; the arbiter is the
+    * single `Files.move` WITHOUT replace-existing: of any number of
+    * racing attempts at the same version name, exactly one rename lands
+    * and every other throws [[CasConflictException]], with each loser's
+    * staged bytes private to it. A loser must REBASE onto the newly
+    * live version and retry under a fresh attempt.
     *
     * Exclusivity rests on the rename REFUSING an existing target. The
     * Javadoc leaves existing-target behavior under ATOMIC_MOVE
@@ -84,18 +94,17 @@ object ModelStore {
     * inductively is "every published version is a non-empty directory":
     * it refuses to publish an attempt with no files, hence every target
     * a later racer can collide with is non-empty and the arbiter holds. */
-  def publishExclusiveFrom(root: String, name: String,
-      attempt: Path): Unit = {
+  def publishExclusive(root: String, name: String, attempt: Path): Unit = {
     require(Files.exists(attempt), s"no staged attempt at $attempt")
     require(children(attempt).nonEmpty,
-      s"publishExclusiveFrom: attempt at $attempt is empty — publishing " +
+      s"publishExclusive: attempt at $attempt is empty — publishing " +
         "it would break the non-empty-directory invariant the " +
         "first-writer-wins rename arbiter depends on")
     val target = Paths.get(root, name)
     if (Files.exists(target) ||
         Files.exists(Paths.get(root, s"${name}_backup")))
       throw new CasConflictException(
-        s"publishExclusiveFrom: version '$name' already exists at $root " +
+        s"publishExclusive: version '$name' already exists at $root " +
           "— rebase onto the latest version and retry")
     moveExclusive(attempt, target)
   }
@@ -129,45 +138,8 @@ object ModelStore {
       s.iterator().asScala.map(_.getFileName.toString).toSeq
     }
 
-  /** Blue/green publish: prod → backup, staging → prod (atomic per state
-    * table, mirroring run_training_batch.py:243-257). */
-  def publish(root: String, name: String): Unit = {
-    val prod = Paths.get(root, name)
-    val backup = Paths.get(root, s"${name}_backup")
-    val staging = Paths.get(root, "_staging", name)
-    require(Files.exists(staging), s"no staged state at $staging")
-    rm(backup)
-    if (Files.exists(prod))
-      Files.move(prod, backup, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(staging, prod, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  def save(df: DataFrame, root: String, name: String): Unit = {
-    stage(df, root, name)
-    publish(root, name)
-  }
-
-  /** [[publish]] with first-writer-wins semantics for IMMUTABLE
-    * version names — optimistic concurrency detected at commit: if the
-    * name was already published (prod or backup), the second of two
-    * writers that raced to derive the same new version from the same
-    * base gets an error instead of silently clobbering the first (the
-    * classic lost update), and must REBASE onto the latest version and
-    * retry — LayoutSpec pins the race and the rebase. The check is
-    * belt; the suspenders are the filesystem's own atomicity: with no
-    * prod to move aside, [[publish]] degenerates to the single
-    * staging→prod rename, and `Files.move` without REPLACE_EXISTING
-    * throws if the target appeared meanwhile — so even a cross-process
-    * race resolves to exactly one winner. The copy-on-write mutation
-    * arms ([[graft.llm.Layout]]) commit through this. */
-  def publishExclusive(root: String, name: String): Unit = {
-    if (Files.exists(Paths.get(root, name)) ||
-        Files.exists(Paths.get(root, s"${name}_backup")))
-      throw new CasConflictException(
-        s"publishExclusive: version '$name' already exists at $root — " +
-          "rebase onto the latest version and retry")
-    publish(root, name)
-  }
+  def save(df: DataFrame, root: String, name: String): Unit =
+    publish(root, name, stage(df, root, name))
 
   /** Load production state; falls back to the backup copy if prod is
     * missing (covers a crash between publish()'s two renames — prod was
@@ -207,20 +179,16 @@ object ModelStore {
   def vacuum(root: String, keep: Set[String]): Seq[String] = {
     def owner(dir: String): String =
       if (dir.endsWith("_backup")) dir.stripSuffix("_backup") else dir
-    // an attempt dir (_staging/<name>.attempt-<uuid>) belongs to <name>:
-    // a kept name's IN-FLIGHT attempt must survive the sweep
-    def stagingOwner(dir: String): String = {
-      val i = dir.indexOf(AttemptSep)
-      if (i >= 0) dir.substring(0, i) else dir
-    }
     // names starting with "_" are store metadata (_staging, the
     // catalog's _last_checkpoint marker), never published versions —
     // retention must not sweep them
     val top = children(Paths.get(root)).filterNot(_.startsWith("_"))
     val retired = top.filterNot(d => keep.contains(owner(d)))
     retired.foreach(d => rm(Paths.get(root, d)))
+    // an attempt dir (_staging/<name>.attempt-<uuid>) belongs to <name>:
+    // a kept name's IN-FLIGHT attempt must survive the sweep
     children(Paths.get(root, "_staging"))
-      .filterNot(d => keep.contains(stagingOwner(d)))
+      .filterNot(d => keep.exists(k => d.startsWith(k + AttemptSep)))
       .foreach(d => rm(Paths.get(root, "_staging", d)))
     retired.map(owner).distinct.sorted
   }

@@ -80,20 +80,21 @@ object StreamHarness {
   /** The streaming source over `df` split as exact `NTILE(4) OVER (ORDER
     * BY idCol)`: four single-file parquet splits in ascending `idCol`
     * ranges with backdated, strictly ascending mtimes, read one file per
-    * micro-batch (`maxFilesPerTrigger=1`, mtime-ordered) with `schema`.
+    * micro-batch (`maxFilesPerTrigger=1`, mtime-ordered) with `df`'s
+    * own schema, every field nullable as the file source reads it.
     * Ids must be distinct. */
-  def fourBatchSource(df: DataFrame, idCol: String, schema: StructType,
-      tag: String): DataFrame =
+  def fourBatchSource(df: DataFrame, idCol: String, tag: String): DataFrame =
     tiledSource(df.withColumn("tile",
-      tileExpr(col(idCol), ntileSplitIds(df, idCol, 4))), schema, tag)
+      tileExpr(col(idCol), ntileSplitIds(df, idCol, 4))), tag)
 
   /** [[fourBatchSource]] over a pre-tiled frame: `tiled` carries a `tile`
     * column with values 1..4 naming each row's micro-batch, for callers
     * whose batch boundaries are semantic (q260's localized zkey stripes)
-    * rather than an id-quartile split. */
-  def tiledSource(tiled: DataFrame, schema: StructType,
-      tag: String): DataFrame =
-    tiled.sparkSession.readStream.schema(schema)
+    * rather than an id-quartile split. The splits are read with the
+    * schema they were written with: `tiled`'s, without `tile`. */
+  def tiledSource(tiled: DataFrame, tag: String): DataFrame =
+    tiled.sparkSession.readStream
+      .schema(StructType(tiled.schema.filterNot(_.name == "tile")))
       .option("maxFilesPerTrigger", "1")
       .parquet(fourSplitDir(tiled, tag).toString)
 

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.ml.{Centroids, DenStream, Embed}
+import graft.ml.{Centroids, DenStream}
+import graft.pipeline.Enrich
 
 /** Structured Streaming interpretation of the reference's batch-simulated
   * stream (SURVEY.md §2.I).
@@ -672,9 +673,11 @@ object StreamOps {
       }
   }
 
-  /** §3.1 as a streaming pipeline: enrichment in foreachBatch with an
-    * idempotent (anti-join) sink — the A5 `ON CONFLICT DO NOTHING` analog.
-    * Runs with AvailableNow so callers can await completion. */
+  /** §3.1 as a streaming pipeline: each micro-batch runs the incremental
+    * batch's scoring step ([[Enrich.logColumns]], then [[Enrich.score]])
+    * into an idempotent (anti-join) sink — the A5 `ON CONFLICT DO
+    * NOTHING` analog. Runs with AvailableNow so callers can await
+    * completion. */
   def enrichmentPipeline(spark: SparkSession, sfDir: String, sinkDir: String,
       checkpointDir: String, model: DenStream.Model,
       centroids: Array[Centroids.Centroid]): Unit = {
@@ -684,24 +687,9 @@ object StreamOps {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val logs = batch.select(
-          col("event_id").as("log_id"), col("ts"),
-          when(col("event_type") === "error", "error")
-            .when(col("event_type").isin("signup", "purchase"), "warning")
-            .otherwise("info").as("level"),
-          concat(col("event_type"), lit(" user="), col("user_id"))
-            .as("message"),
-          col("props").as("parsed_data"))
-          .filter(col("level").isin("warning", "error"))
-        val embedded = Embed.withEmbedding(
-          logs.withColumn("embed_text",
-            concat(col("message"), lit(". Parsed: "), col("parsed_data"))),
-          "embed_text")
-        val withSem = Centroids.scoreAgainst(embedded, centroids,
-          "embedding", threshold = graft.pipeline.Enrich.DefaultSemThreshold)
-        val enriched = DenStream
-          .withPredictions(withSem, model, "embedding")
-          .drop("embed_text", "embedding")
+        val enriched = Enrich.score(Enrich.logColumns(batch), model,
+            centroids)
+          .drop("embedding")
         // idempotent append: drop rows whose log_id already reached the
         // sink. Only a genuinely absent sink counts as empty — any other
         // read failure must propagate, or replays would silently write

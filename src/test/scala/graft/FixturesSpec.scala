@@ -88,7 +88,8 @@ class FixturesSpec extends AnyFunSuite {
   test("a second invocation of q101, q247, q255, q256 and q258 makes no " +
       "new input or store fixture dir") {
     val names = Seq("q101_stream_dedup", "q247_stream_view",
-      "q255_stream_asof", "q256_split_budget", "q258_split_stream_merge")
+      "q255_stream_asof", "q256_split_budget", "q258_split_stream_merge",
+      "q262_stream_value_view")
     names.foreach(n => SparkEntry.queries(n)(spark, sf).collect())
     val added = names.map { n =>
       val before = fixtureDirs()

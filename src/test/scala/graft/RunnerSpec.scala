@@ -271,6 +271,11 @@ class RunnerSpec extends AnyFunSuite {
     assert(Seq("denstream", "centroids").map(rows) == before)
     assert(!Files.exists(Paths.get(s"$state/denstream_backup")))
     assert(!Files.exists(Paths.get(s"$state/centroids_backup")))
+    // and leaves no staged attempt behind
+    val staging = Paths.get(s"$state/_staging")
+    assert(!Files.exists(staging) ||
+      scala.util.Using.resource(Files.list(staging))(_.count()) == 0,
+      s"train left staged dirs under $staging")
   }
 
   test("a failing incident scoring writes no incidents and no marker") {

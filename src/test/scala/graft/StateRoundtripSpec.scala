@@ -324,10 +324,10 @@ class StateRoundtripSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(a.resolve("data.txt"), "writer-A")
     java.nio.file.Files.writeString(b.resolve("data.txt"), "writer-B")
     // A publishes first and wins
-    graft.state.ModelStore.publishExclusiveFrom(root, "v2", a)
+    graft.state.ModelStore.publishExclusive(root, "v2", a)
     // B's publish fails loudly (first-writer-wins) ...
     val e = intercept[Exception] {
-      graft.state.ModelStore.publishExclusiveFrom(root, "v2", b)
+      graft.state.ModelStore.publishExclusive(root, "v2", b)
     }
     assert(e.getMessage.contains("rebase"), e.getMessage)
     // ... and the winner's published content is A's, whole — not torn,
@@ -341,7 +341,7 @@ class StateRoundtripSpec extends AnyFunSuite {
     // so ownership is the rule)
     val c = graft.state.ModelStore.newAttempt(root, "v3")
     java.nio.file.Files.writeString(c.resolve("data.txt"), "writer-C")
-    graft.state.ModelStore.publishExclusiveFrom(root, "v3", c)
+    graft.state.ModelStore.publishExclusive(root, "v3", c)
     val d = graft.state.ModelStore.newAttempt(root, "v3") // in-flight
     java.nio.file.Files.writeString(d.resolve("data.txt"), "writer-D")
     val retired = graft.state.ModelStore.vacuum(root, keep = Set("v3"))
@@ -406,11 +406,11 @@ class StateRoundtripSpec extends AnyFunSuite {
     // (2) the publish fast-fail is typed
     val a = graft.state.ModelStore.newAttempt(root, "v1")
     java.nio.file.Files.writeString(a.resolve("data.txt"), "A")
-    graft.state.ModelStore.publishExclusiveFrom(root, "v1", a)
+    graft.state.ModelStore.publishExclusive(root, "v1", a)
     val b = graft.state.ModelStore.newAttempt(root, "v1")
     java.nio.file.Files.writeString(b.resolve("data.txt"), "B")
     intercept[graft.state.CasConflictException] {
-      graft.state.ModelStore.publishExclusiveFrom(root, "v1", b)
+      graft.state.ModelStore.publishExclusive(root, "v1", b)
     }
     // (3) the TRUE race loser — one that passed both existence checks
     // and then lost the Files.move arbiter (a non-empty directory
@@ -456,7 +456,7 @@ class StateRoundtripSpec extends AnyFunSuite {
     graft.state.Catalog.commit(ptr("tab_b"), root, 1L)
     // a loser that passes the liveTxn fast-fail but loses the publish
     // (simulated: a catalog_t3_backup blocker is invisible to liveTxn's
-    // numeric parse but trips publishExclusiveFrom's existence check):
+    // numeric parse but trips publishExclusive's existence check):
     // its staged pointer dir must NOT survive as an orphan — vacuum
     // maps catalog_t3.attempt-* to the WINNER'S kept name, so an
     // orphan would outlive every sweep
@@ -481,7 +481,7 @@ class StateRoundtripSpec extends AnyFunSuite {
     // replaces an empty-dir target) — refused loudly
     val empty = graft.state.ModelStore.newAttempt(root, "v_empty")
     val e = intercept[IllegalArgumentException] {
-      graft.state.ModelStore.publishExclusiveFrom(root, "v_empty", empty)
+      graft.state.ModelStore.publishExclusive(root, "v_empty", empty)
     }
     assert(e.getMessage.contains("non-empty"), e.getMessage)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.functions.{array, col}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamHarness
@@ -37,8 +37,7 @@ class StreamHarnessSpec extends AnyFunSuite {
   }
 
   private def source = StreamHarness.fourBatchSource(
-    spark.range(0, 40).toDF("id"), "id", new StructType().add("id", LongType),
-    "harnessspec")
+    spark.range(0, 40).toDF("id"), "id", "harnessspec")
 
   private def causedBy(t: Throwable, msg: String): Boolean =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
@@ -86,6 +85,26 @@ class StreamHarnessSpec extends AnyFunSuite {
       }
       assert(e.getMessage == "finish boom")
     }
+  }
+
+  test("fourBatchSource streams a frame back with its own schema, " +
+      "made nullable, over four triggers") {
+    val df = spark.range(0, 40).toDF("id")
+      .withColumn("v", array(col("id").cast("float"),
+        (col("id") * 2).cast("float")))
+    assert(!df.schema("id").nullable)
+    assert(df.schema("v").dataType.simpleString == "array<float>")
+    val src = StreamHarness.fourBatchSource(df, "id", "harnessspec_arr")
+    assert(src.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("id" -> "bigint", "v" -> "array<float>"))
+    assert(src.schema.forall(_.nullable))
+    val batches = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    StreamHarness.runForeachBatch(src) { (b, id) => batches.put(id, b.count()) }
+    assert(batches.size == 4, batches.toString)
+    assert(batches.values().stream().allMatch(_ == 10L), batches.toString)
+    val rows = StreamHarness.runToMemory(src, "append")(_.orderBy("id"))
+      .collect().toSeq
+    assert(rows == df.orderBy("id").collect().toSeq)
   }
 
   test("runToMemory's frame is collectable after its sink view is dropped") {
