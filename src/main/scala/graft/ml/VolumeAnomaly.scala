@@ -1,8 +1,9 @@
 package graft.ml
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Per-cluster volume time-series features + batch-relative anomaly
   * ranking (reference `src/ml/volume_analyzer.py`).
@@ -19,12 +20,27 @@ import org.apache.spark.sql.functions._
   * The engine's score is −|z_dev| (lower = more anomalous, same ordering
   * contract), which passes the identical gate without a driver-side forest
   * — a pure shuffle-once DataFrame plan (SURVEY.md §7.3 justification).
+  *
+  * The incremental batch scores on the driver instead, from bounded
+  * per-cluster state ([[ClusterVolume]], [[scoreBatch]]): the last
+  * `WindowSize` counts are all [[features]] reads of a cluster's
+  * history, so the state scores a batch as the whole history would.
   */
 object VolumeAnomaly {
 
+  /** The rolling window of [[features]], in batches per cluster. */
+  val WindowSize = 5
+
+  /** The batch-relative gate of every scorer (volume_analyzer.py:125-156):
+    * flag a score-z below `ZThresh`, emit none when more than `MaxRatio`
+    * of the evaluated clusters flag, keep the worst `Cap`. */
+  val ZThresh = -1.0
+  val Cap = 3
+  val MaxRatio = 0.3
+
   /** counts: (cluster_id, batch_ts, log_count) — one row per cluster per
     * batch. Returns latest-batch features per cluster. */
-  def features(counts: DataFrame, windowSize: Int = 5): DataFrame = {
+  def features(counts: DataFrame, windowSize: Int = WindowSize): DataFrame = {
     val byCluster = Window.partitionBy("cluster_id").orderBy("batch_ts")
     val lastN = byCluster.rowsBetween(-(windowSize - 1), 0)
     counts
@@ -86,8 +102,8 @@ object VolumeAnomaly {
       .select("cluster_id", "batch_ts", "log_count", "score", "score_z")
 
   /** Batch-relative ranking by score = −|z_dev| through [[zGate]]. */
-  def rankAnomalies(feats: DataFrame, zThresh: Double = -1.0,
-      cap: Int = 3, maxRatio: Double = 0.3,
+  def rankAnomalies(feats: DataFrame, zThresh: Double = ZThresh,
+      cap: Int = Cap, maxRatio: Double = MaxRatio,
       zdevRound: Option[Int] = None): DataFrame =
     zGate(zdevScored(feats, zdevRound), zThresh, cap, maxRatio)
 
@@ -98,8 +114,8 @@ object VolumeAnomaly {
     * one row per cluster (driver-scale by construction — guarded), scoring
     * distributes via a broadcast model. Engine score = −IF score so lower
     * = more anomalous, matching [[scoredFeatures]]'s ordering contract. */
-  def rankAnomaliesIF(feats: DataFrame, zThresh: Double = -1.0,
-      cap: Int = 3, maxRatio: Double = 0.3, nTrees: Int = 100,
+  def rankAnomaliesIF(feats: DataFrame, zThresh: Double = ZThresh,
+      cap: Int = Cap, maxRatio: Double = MaxRatio, nTrees: Int = 100,
       seed: Long = 42L, contamination: Double = 0.05): DataFrame = {
     val spark = feats.sparkSession
     // the fit's collect AND the scoring pass both consume feats — lazy
@@ -149,4 +165,117 @@ object VolumeAnomaly {
         when(col("is_open"), lit("refresh")).otherwise(lit("create"))
           .as("action"),
         lit("NEW").as("status"), lit("SRE").as("assigned_role"))
+
+  /** One row of the `volume_state` table: a cluster's last ≤ `WindowSize`
+    * non-zero counts, oldest first (the reference's E1 fetch,
+    * cluster_ops.py:39-53), and whether it has a `NEW`/`OPEN` incident.
+    * Nothing closes an incident, so `open` never reverts. */
+  final case class ClusterVolume(clusterId: Int, counts: Vector[Long],
+      open: Boolean)
+
+  /** [[stateDF]]'s schema as parquet reads it back (every column
+    * nullable), for schema-given loads through ModelStore. */
+  val StateSchema: StructType = StructType(Seq(
+    StructField("cluster_id", IntegerType),
+    StructField("counts", ArrayType(LongType)),
+    StructField("open", BooleanType)))
+
+  def stateDF(spark: SparkSession, state: Seq[ClusterVolume]): DataFrame = {
+    import spark.implicits._
+    state.map(v => (v.clusterId, v.counts: Seq[Long], v.open))
+      .toDF("cluster_id", "counts", "open")
+  }
+
+  def fromStateRows(rows: Seq[Row]): Seq[ClusterVolume] =
+    rows.map(r => ClusterVolume(r.getInt(0), r.getSeq[Long](1).toVector,
+      r.getBoolean(2)))
+
+  /** `state` after a batch counted `counts` (cluster id → non-zero
+    * count): each count joins its cluster's window, and a cluster new
+    * to the state gets a row. Sorted by cluster id. */
+  def observe(state: Seq[ClusterVolume],
+      counts: Seq[(Int, Long)]): Seq[ClusterVolume] = {
+    val batch = counts.toMap
+    val known = state.map(_.clusterId).toSet
+    (state ++ batch.keys.filterNot(known)
+        .map(ClusterVolume(_, Vector.empty, open = false)))
+      .map(v => batch.get(v.clusterId).fold(v)(n =>
+        v.copy(counts = (v.counts :+ n).takeRight(WindowSize))))
+      .sortBy(_.clusterId)
+  }
+
+  /** One cluster's latest-batch row of [[features]]. */
+  final case class Feature(clusterId: Int, logCount: Long, velocity: Long,
+      rollMean: Double, rollStd: Double, zDev: Double) {
+    /** The score [[rankAnomalies]] ranks by: −|z_dev|. */
+    def score: Double = -math.abs(zDev)
+  }
+
+  /** `avg` and `stddev_pop` of `xs`, folded in order as Spark's
+    * `Average` (a double sum over the count) and `CentralMomentAgg`
+    * (Welford's update) fold their input. */
+  private def avgStdPop(xs: Iterable[Double]): (Double, Double) = {
+    var sum, n, mean, m2 = 0.0
+    xs.foreach { x =>
+      sum += x
+      n += 1.0
+      val delta = x - mean
+      val deltaN = delta / n
+      mean += deltaN
+      m2 += delta * (delta - deltaN)
+    }
+    (sum / n, math.sqrt(m2 / n))
+  }
+
+  /** [[features]]' row, bit for bit, for a cluster whose history ends in
+    * `counts` (oldest first, non-empty). Spark evaluates a sliding row
+    * frame by folding the frame's rows afresh, oldest first, for every
+    * output row, so the same fold over the last `WindowSize` counts
+    * gives the same `roll_mean` and `roll_std`. */
+  def featureOf(clusterId: Int, counts: Seq[Long]): Feature = {
+    val last = counts.last
+    val (rollMean, rollStd) =
+      avgStdPop(counts.takeRight(WindowSize).map(_.toDouble))
+    val velocity =
+      if (counts.length > 1) last - counts(counts.length - 2) else 0L
+    Feature(clusterId, last, velocity, rollMean, rollStd,
+      (last - rollMean) / (rollStd + 1e-5))
+  }
+
+  /** [[rankAnomalies]] over driver-side features: the flagged ones,
+    * worst first. The batch's score mean and deviation are folded in
+    * `feats` order, where Spark merges per-partition partial aggregates,
+    * so `score_z` may differ in its last bits: the flag set differs
+    * only for a `score_z` within those bits of `ZThresh`. */
+  def rankLocal(feats: Seq[Feature]): Seq[Feature] = {
+    val (mu, sigma) = avgStdPop(feats.map(_.score))
+    val flagged =
+      feats.filter(f => (f.score - mu) / (sigma + 1e-5) < ZThresh)
+    // a score is never NaN and every zero score is −0.0, so the total
+    // order sorts as Spark does
+    if (flagged.length > feats.length * MaxRatio) Seq.empty
+    else flagged.sortBy(f => (f.score, f.clusterId))(
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+      .take(Cap)
+  }
+
+  /** One batch scored on the driver from the volume state: the batch's
+    * non-zero `counts` join `state`, every counted cluster runs through
+    * [[featureOf]] and [[rankLocal]], and the flagged ones split into
+    * refresh and create by `open`. That is what [[features]] →
+    * [[rankAnomalies]] → [[mergeIncidents]] give over the full history
+    * and the open incidents. Returns the incident rows (cluster_id,
+    * action, status, assigned_role) and the next state, in which every
+    * flagged cluster is open. */
+  def scoreBatch(state: Seq[ClusterVolume],
+      counts: Seq[(Int, Long)]): (Seq[Row], Seq[ClusterVolume]) = {
+    val counted = observe(state, counts)
+    val flagged = rankLocal(counted.collect {
+      case v if v.counts.nonEmpty => featureOf(v.clusterId, v.counts)
+    }).map(_.clusterId)
+    val open = counted.filter(_.open).map(_.clusterId).toSet
+    (flagged.map(c =>
+        Row(c, if (open(c)) "refresh" else "create", "NEW", "SRE")),
+      counted.map(v => v.copy(open = v.open || flagged.contains(v.clusterId))))
+  }
 }

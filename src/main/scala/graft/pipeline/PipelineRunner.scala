@@ -6,9 +6,11 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession,
   functions => F}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-import graft.ml.{Centroids, DenStream}
+import graft.ml.{Centroids, DenStream, VolumeAnomaly}
+import graft.ml.VolumeAnomaly.ClusterVolume
 import graft.state.ModelStore
 import graft.util.Par
 
@@ -47,7 +49,7 @@ object PipelineRunner {
     StructField("batch_timestamp", TimestampType)))
 
   /** `incidents` as parquet reads it back: the rows of
-    * [[graft.ml.VolumeAnomaly.mergeIncidents]] plus their creation time. */
+    * [[graft.ml.VolumeAnomaly.scoreBatch]] plus their creation time. */
   val IncidentsSchema: StructType = StructType(Seq(
     StructField("cluster_id", IntegerType),
     StructField("action", StringType),
@@ -107,36 +109,42 @@ object PipelineRunner {
     * incident merge + batch commit marker.
     *
     * Every plan runs exactly once and every table is read with its
-    * fixed schema (no inference job). The batch's Spark jobs, in order
-    * (10 to 12; budget, pinned by RunnerSpec: at most 12):
-    *   1. load `denstream` and `centroids` state and collect them — 2
-    *      jobs that overlap
+    * fixed schema (no inference job). The batch's incidents are scored
+    * on the driver from `volume_state`, the bounded per-cluster state
+    * under `outDir` ([[graft.ml.VolumeAnomaly.scoreBatch]]), so no job
+    * reads the history or the incidents table. The batch's Spark jobs,
+    * in order (7 or 8; budget, pinned by RunnerSpec: at most 8):
+    *   1. load `denstream`, `centroids` and `volume_state` and collect
+    *      them — 3 jobs that overlap. An absent `volume_state` is
+    *      rebuilt from the sinks instead ([[volumeState]]): no job while
+    *      neither sink exists, as on the first batch after `train`
     *   2. score the id range and write `log_embeddings_incr`; the
     *      per-cluster counts are observed metrics of that write — 1 job
-    *   3. these two overlap:
-    *      - append the non-noise counts to `cluster_volume_history` from
-    *        a one-partition local frame — 1 job
-    *      - score incidents over the history as listed before that
-    *        append, plus the same counts: volume features and
-    *        `VolumeAnomaly`'s scored checkpoint (1 job), then the merge
-    *        against open `incidents` and the collect of the ≤ 3 flagged
-    *        rows (3 to 5 jobs, one per adaptive query stage)
-    *   4. append those rows to `incidents` from a local frame — 1 job
-    *   5. append the `batch_order` commit marker — 1 job
-    * A failure in step 3's scoring writes no incidents and no marker. */
+    *   3. score the counts against the state on the driver — no job
+    *   4. three writes that overlap — 3 jobs: append the non-noise
+    *      counts to `cluster_volume_history`, append the incidents to
+    *      `incidents`, and stage the next `volume_state`
+    *   5. publish `volume_state` — renames, no job
+    *   6. append the `batch_order` commit marker — 1 job
+    * A failure before step 5 publishes no state and writes no marker:
+    * the retry scores from the state the failed attempt started with,
+    * so it counts the batch once. An append of step 4 that did land
+    * stays in its sink (ROADMAP item 2). */
   def incremental(spark: SparkSession, sfDir: String, stateDir: String,
       outDir: String, lo: Long, hi: Long): Unit = {
     // hyperparameters come from the persisted state itself — inference
     // can never drift from the trained epsilon (args are only fallback)
     var model: DenStream.Model = null
     var centroids: Array[Centroids.Centroid] = null
+    var volume: Seq[ClusterVolume] = null
     Par.inParallel(
       () => model = DenStream.fromStateDF(
         ModelStore.load(spark, stateDir, "denstream", DenStream.StateSchema)),
       () => centroids = ModelStore.load(spark, stateDir, "centroids",
           Centroids.StateSchema).collect()
         .map(r => Centroids.Centroid(r.getString(0),
-          r.getSeq[Float](1).toArray, r.getLong(2))))
+          r.getSeq[Float](1).toArray, r.getLong(2))),
+      () => volume = volumeState(spark, outDir))
     val enriched = Enrich.incrementalBatch(spark, sfDir, model, centroids,
       lo, hi)
     // per-cluster counts as observed metrics of the write, noise (-1)
@@ -155,37 +163,25 @@ object PipelineRunner {
     require(counts.map(_._2).sum == rows,
       s"per-cluster counts ${counts.mkString(",")} do not sum to $rows rows")
 
-    // this batch's volume rows (A7), stamped once on the driver: the
-    // history append writes them and the scoring reads them from memory
-    val stamp = java.time.Instant.now()
-    val batch = spark.createDataFrame(
-        counts.collect { case (c, n) if c >= 0 && n > 0 => Row(c, n) }
-          .asJava, StructType(HistorySchema.init))
-      .withColumn(HistorySchema.last.name, F.lit(stamp))
-    val historyDir = s"$outDir/cluster_volume_history"
-    // incidents over the full history (E1 last-5 window feeds features)
-    val history = historyWith(spark, historyDir, batch)
-      .withColumn("batch_ts", F.unix_micros(F.col("batch_timestamp")))
-      .select("cluster_id", "batch_ts", "log_count")
-    val feats = graft.ml.VolumeAnomaly.features(history)
-    val flagged = graft.ml.VolumeAnomaly.rankAnomalies(feats)
-    // absent table = no open incidents; any other read failure propagates
-    // (a corrupt incidents table must not silently become "create all")
-    val open =
-      if (Files.exists(Paths.get(s"$outDir/incidents")))
-        spark.read.schema(IncidentsSchema).parquet(s"$outDir/incidents")
-          .filter(F.col("status").isin("NEW", "OPEN"))
-          .select("cluster_id").distinct()
-      else flagged.select("cluster_id").limit(0)
-    // at most `rankAnomalies`' cap rows: collect once and write what was
-    // collected, so the scoring plan is not run a second time for a count
-    var incidents: Array[Row] = null
-    Par.inParallel(
-      () => batch.coalesce(1).write.mode("append").parquet(historyDir),
-      () => incidents =
-        graft.ml.VolumeAnomaly.mergeIncidents(flagged, open).collect())
-    appendStamped(spark, incidents.toSeq, IncidentsSchema,
-      s"$outDir/incidents")
+    // this batch's volume rows (A7) score against the state, on the
+    // driver (E1 window + I4 features + C2 merge)
+    val counted = counts.filter { case (c, n) => c >= 0 && n > 0 }
+    val (incidents, next) = VolumeAnomaly.scoreBatch(volume, counted)
+    var staged: Path = null
+    try Par.inParallel(
+      () => appendStamped(spark, counted.map { case (c, n) => Row(c, n) },
+        HistorySchema, s"$outDir/cluster_volume_history"),
+      () => appendStamped(spark, incidents, IncidentsSchema,
+        s"$outDir/incidents"),
+      () => staged = ModelStore.stage(
+        VolumeAnomaly.stateDF(spark, next).coalesce(1), outDir,
+        "volume_state"))
+    catch { case t: Throwable =>
+      // the batch failed: it is retried from the state it started with
+      if (staged != null) ModelStore.discard(staged)
+      throw t
+    }
+    ModelStore.publish(outDir, "volume_state", staged)
 
     // batch commit marker (A9/I1)
     spark.createDataFrame(Seq((lo, hi, "COMPLETED")))
@@ -196,16 +192,40 @@ object PipelineRunner {
       s"incidents=${incidents.length}")
   }
 
-  /** The volume history a batch scores: the history under `dir` as
-    * listed now, plus the batch's own rows `batch` (in [[HistorySchema]]).
-    * The file listing is fixed here, before the append of `batch` to
-    * `dir` starts, so that append can run beside the scoring without
-    * its rows being counted twice. */
-  private[graft] def historyWith(spark: SparkSession, dir: String,
-      batch: DataFrame): DataFrame =
-    if (Files.exists(Paths.get(dir)))
-      spark.read.schema(HistorySchema).parquet(dir).unionByName(batch)
-    else batch
+  /** The `volume_state` a batch of `outDir` starts from: the published
+    * table, with ModelStore's fallback to its backup, or else the state
+    * rebuilt from the sinks it summarizes — the last `WindowSize` counts
+    * per cluster of `cluster_volume_history` (the reference's E1 fetch)
+    * and the clusters with a `NEW`/`OPEN` row in `incidents`. A sink
+    * that does not exist reads as empty, with no job. */
+  private def volumeState(spark: SparkSession,
+      outDir: String): Seq[ClusterVolume] =
+    if (Seq("volume_state", "volume_state_backup")
+        .exists(ModelStore.exists(outDir, _)))
+      VolumeAnomaly.fromStateRows(ModelStore.load(spark, outDir,
+        "volume_state", VolumeAnomaly.StateSchema).collect().toSeq)
+    else {
+      def read(name: String, schema: StructType)(f: DataFrame => Array[Row]) =
+        if (!Files.exists(Paths.get(outDir, name))) Array.empty[Row]
+        else f(spark.read.schema(schema).parquet(s"$outDir/$name"))
+      var last, open: Array[Row] = null
+      Par.inParallel(
+        () => last = read("cluster_volume_history", HistorySchema)(
+          _.withColumn("rn", F.row_number().over(Window
+              .partitionBy("cluster_id")
+              .orderBy(F.col("batch_timestamp").desc)))
+            .filter(F.col("rn") <= VolumeAnomaly.WindowSize)
+            .select("cluster_id", "rn", "log_count").collect()),
+        () => open = read("incidents", IncidentsSchema)(
+          _.filter(F.col("status").isin("NEW", "OPEN"))
+            .select("cluster_id").distinct().collect()))
+      // rn 1 is the newest count: a window lists its counts oldest first
+      val windows = last.groupBy(_.getInt(0)).map { case (c, rs) =>
+        c -> rs.sortBy(-_.getInt(1)).map(_.getLong(2)).toVector }
+      val isOpen = open.map(_.getInt(0)).toSet
+      (windows.keySet ++ isOpen).toSeq.sorted.map(c => ClusterVolume(c,
+        windows.getOrElse(c, Vector.empty), isOpen(c)))
+    }
 
   /** Append in-memory `rows` (every column of `schema` but the last) as
     * ONE part file, stamped with `current_timestamp()` in the last
