@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ml.Distance
+import graft.state.PartitionedStore
 
 /** IVF (inverted-file) approximate nearest-neighbor index — the
   * k-means-partitioned scale path alongside [[SimSearch.knnLsh]].
@@ -470,65 +471,36 @@ object Ivf {
     require(extraClash.isEmpty,
       s"saveIndex: extraCols ${extraClash.mkString(", ")} collide with " +
         "the stored layout (id, qvec, qnorm, list_id)")
-    // attempt-private staging (ModelStore.newAttempt): staged bytes are
-    // immune to a concurrent writer to the same name
-    val stage = graft.state.ModelStore.newAttempt(root, name)
-    // the three staged tables are independent scans — overlap their
-    // driver actions (guide §2.6), publish strictly after all three
-    graft.util.Par.inParallel(
-      // extraCols: filterable attribute payload stored NEXT TO the
-      // codes (the filtered-search deployment shape, q134): a metadata
+    PartitionedStore.save(root, name, table,
+      // extraCols: filterable attribute payload stored NEXT TO the codes
+      // (the filtered-search deployment shape, q134): a metadata
       // predicate then evaluates scan-local on the probed list files —
       // no side lookup, no join — and parquet pushes it down
-      () => index
-        .select(Seq("id", "qvec", "qnorm").++(extraCols).:+("list_id")
-          .map(col): _*)
-        .write.partitionBy("list_id")
-        .parquet(stage.resolve("lists").toString),
-      () => centroids.write.parquet(stage.resolve("centroids").toString),
-      // per-list membership Bloom over the row ids — the metadata a
-      // DELETE/UPDATE-by-id consults to name the lists to rewrite
-      // WITHOUT re-deriving the rows' vectors (no false negatives, so a
-      // Bloom-negative list provably holds no target id): the
-      // [[graft.llm.Layout.fileBlooms]] move applied to the inverted
-      // file. Footer-stats-sized (nlist × 64 words).
-      () => idBlooms(index).write.parquet(stage.resolve("idbloom").toString))
-    graft.state.ModelStore.publish(root, name, stage)
+      index.select(Seq("id", "qvec", "qnorm").++(extraCols).:+("list_id")
+        .map(col): _*),
+      onePerPartition = false, "centroids" -> centroids)
   }
 
+  /** How a stored index lays out a version: the lists partitioned by
+    * `list_id` and their id-Bloom ([[idBlooms]]) keyed by `list_id`,
+    * with the centroid table carried beside them. */
+  val table: PartitionedStore.Table = PartitionedStore.Table("lists",
+    "list_id", PartitionedStore.Sidecar("idbloom", "list_id", idBlooms))
+
   /** Per-list Bloom over row IDS (k=3, 64 words — [[graft.llm.Layout]]'s
-    * parameters): the membership metadata [[purgeIndexByIds]] and
-    * [[maintainIndex]] consult to locate an id's list exactly (no false
-    * negatives) without needing the row's vector — removal by id is
-    * therefore immune to the drifted-vector hazard of re-assigning a
-    * request's vectors under the centroids ([[purgeIndex]]'s documented
-    * precondition). */
+    * parameters), saved beside the lists: the membership metadata a
+    * DELETE/UPDATE-by-id consults to name the lists to rewrite WITHOUT
+    * re-deriving the rows' vectors (the [[Layout.fileBlooms]] move
+    * applied to the inverted file; nlist × 64 words). [[maintainIndex]]
+    * locates an id's list with it exactly (no false negatives), so
+    * removal by id is immune to the drifted-vector hazard of
+    * re-assigning a request's vectors under the centroids
+    * ([[purgeIndex]]'s precondition, whose drift audit it also
+    * prunes). */
   def idBlooms(index: DataFrame): DataFrame =
     graft.llm.Sketch.bloomBuild(
       index.select(col("list_id"), col("id").cast("string").as("k")),
       "k", Layout.BloomK, Layout.BloomWords, groupCols = Seq("list_id"))
-
-  /** The stored per-list id-Bloom as a driver metadata cache
-    * (nlist × 64 longs — the [[graft.llm.Layout.loadBloomCache]]
-    * precedent); empty map if the stored index predates the Bloom
-    * (pre-r14 format) — callers must treat that as "every list may
-    * hold the id". */
-  def loadIdBloomCache(spark: org.apache.spark.sql.SparkSession,
-      root: String, name: String = "ivfsq"): Map[Int, Array[Long]] = {
-    val base = baseName(root, name)
-    val p = java.nio.file.Paths.get(root, base, "idbloom")
-    if (!java.nio.file.Files.isDirectory(p)) Map.empty
-    else spark.read.parquet(p.toString)
-      .select(col("list_id").cast("int"), col("word").cast("int"),
-        col("bits"))
-      .collect()
-      .groupBy(_.getInt(0))
-      .map { case (l, rows) =>
-        val dense = new Array[Long](Layout.BloomWords)
-        rows.foreach(r => dense(r.getInt(1)) = r.getLong(2))
-        l -> dense
-      }
-  }
 
   /** Compact DELTA rows into the stored index and republish — the
     * maintenance step that closes the deployment loop build
@@ -592,65 +564,11 @@ object Ivf {
     * inference widens it). */
   def loadIndex(spark: org.apache.spark.sql.SparkSession, root: String,
       name: String = "ivfsq"): (DataFrame, DataFrame) = {
-    val base = baseName(root, name)
+    val base = PartitionedStore.resolve(root, name)
     (spark.read.parquet(s"$root/$base/lists")
        .withColumn("list_id", col("list_id").cast("int")),
       spark.read.parquet(s"$root/$base/centroids"))
   }
-
-  /** The stored list ids of an index version, from the DIRECTORY
-    * layout (file-count-sized — the on-disk inverted file is the
-    * catalog). Shared by [[purgeIndex]] and [[maintainIndex]]. */
-  /** The removal-arm id-Bloom consult, ROUTED like
-    * [[graft.llm.Layout.consultBlooms]] (r14 verdict item 5): the
-    * driver bit-test (nlist × 64 longs cache, pure word ops) while
-    * `allLists` fits under [[graft.llm.Layout.BloomDriverMaxFilesKey]],
-    * the distributed membership join above it — the idbloom table has
-    * the layout Bloom's exact schema, just keyed by list_id, so the
-    * join is [[graft.llm.Layout.bloomMembershipJoin]] verbatim.
-    * Returns every list that may hold any of `ids` (no false
-    * negatives); bit-identical between paths (CompactionSpec pins it;
-    * ProfileIdBloomConsult measures nlist = 10⁵). A stored index
-    * predating the idbloom sidecar (pre-r14) degrades to "every list
-    * may hold the id" on the driver path only — the join path requires
-    * the sidecar. */
-  def consultIdBlooms(spark: org.apache.spark.sql.SparkSession,
-      root: String, name: String, allLists: Seq[Int],
-      ids: Seq[Long]): Seq[Int] = {
-    require(ids.nonEmpty, "consultIdBlooms: empty id set")
-    val maxDriver = spark.conf
-      .getOption(Layout.BloomDriverMaxFilesKey).map(_.toLong)
-      .getOrElse(Layout.BloomDriverMaxFilesDefault)
-    if (allLists.size <= maxDriver) {
-      val cache = loadIdBloomCache(spark, root, name)
-      val idPos = ids.map(id => graft.llm.Sketch.bloomPositions(
-        id.toString, Layout.BloomK, Layout.BloomWords))
-      allLists.filter(l => cache.get(l).forall(bits => idPos.exists(ps =>
-        graft.llm.Sketch.bloomContainsAt(bits, ps))))
-    } else {
-      val base = baseName(root, name)
-      val bloomDf = spark.read.parquet(s"$root/$base/idbloom")
-        .select(col("list_id").cast("long").as("file_id"),
-          col("word"), col("bits"))
-      Layout.bloomMembershipJoin(spark, bloomDf, ids.map(_.toString))
-        .select(col("file_id")).distinct()
-        .collect().map(_.getLong(0).toInt).toSeq.sorted
-    }
-  }
-
-  private def storedListIds(root: String, base: String): Seq[Int] =
-    scala.util.Using.resource(java.nio.file.Files.list(
-        java.nio.file.Paths.get(root, base, "lists"))) { st =>
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("list_id="))
-        .map(_.stripPrefix("list_id=").toInt).toSeq
-    }
-
-  private def baseName(root: String, name: String): String =
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(root, name)))
-      name
-    else s"${name}_backup"
 
   /** Right-to-be-forgotten PURGE of the stored IVF index — deletion
     * propagated to the DERIVED artifact (q238 deletes the rows; a
@@ -663,14 +581,15 @@ object Ivf {
     * those list directories rewrite (partition-pruned scan + broadcast
     * anti-join); every other list carries into the new version
     * byte-for-byte at the filesystem level, and the pair publishes
-    * through [[graft.state.ModelStore.publishExclusive]] (first-writer-
-    * wins; a reader is always on a complete pair). Centroids are KEPT:
+    * through [[PartitionedStore.commit]] (first-writer-wins; a reader
+    * is always on a complete pair). Centroids are KEPT:
     * they are small aggregates of the historical fit — the index must
     * stop RETURNING purged rows immediately, while re-fitting is a
     * separate scheduled rebuild (the standard unlearning split).
     * Returns (touched, untouched) list ids. 100 TB shape: bytes
-    * rewritten ∝ the tombstones' list fan-out, not index size. */
-  /** PRECONDITION (r13 ADVICE): the request's vectors must be
+    * rewritten ∝ the tombstones' list fan-out, not index size.
+    *
+    * PRECONDITION (r13 ADVICE): the request's vectors must be
     * BIT-IDENTICAL copies of the stored embeddings — the touch set is
     * named by re-assigning them under the stored centroids, so a
     * vector that drifted (re-derived, re-quantized, a different float
@@ -695,30 +614,19 @@ object Ivf {
       .select(col("list_id")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     require(touched.nonEmpty, "purgeIndex: empty tombstone set")
-    // all stored lists, from the DIRECTORY layout (file-count-sized —
-    // the on-disk inverted file is the catalog)
-    val base = baseName(root, name)
-    val allLists = storedListIds(root, base)
-    val untouched = allLists.filterNot(touched.contains).sorted
     // drift audit (see PRECONDITION above): a tombstone id found in an
     // UNTOUCHED list means the request's vector assigned differently
     // than the stored row's — fail loudly instead of leaking. Request-
-    // sized collect (the RTBF request is bounded by construction).
-    val tombIds = tombVecs.select(col(idCol).cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    val idBloomCache = loadIdBloomCache(spark, root, name)
-    val tombPos = tombIds.map(id => graft.llm.Sketch.bloomPositions(
-      id.toString, Layout.BloomK, Layout.BloomWords))
-    val suspect =
-      if (idBloomCache.nonEmpty)
-        untouched.filter(l => idBloomCache.get(l).exists(bits =>
-          tombPos.exists(ps =>
-            graft.llm.Sketch.bloomContainsAt(bits, ps))))
-      else untouched // pre-Bloom store: honest full audit scan
+    // sized collect (the RTBF request is bounded by construction); the
+    // audit scans only the untouched lists whose id-Bloom may hold a
+    // tombstone (every untouched list of a pre-Bloom store)
+    val tombIds = broadcast(tombVecs.select(col(idCol).cast("long").as("id")))
+    val suspect = PartitionedStore.consultPartitions(spark, root, name,
+      table, tombIds.distinct().collect().map(_.getLong(0).toString).toSeq)
+      ._2.filterNot(l => touched.contains(l.toInt))
     if (suspect.nonEmpty) {
       val leaked = lists.filter(col("list_id").isin(suspect: _*))
-        .join(broadcast(tombVecs.select(col(idCol).cast("long").as("id"))),
-          Seq("id"), "left_semi").count()
+        .join(tombIds, Seq("id"), "left_semi").count()
       require(leaked == 0,
         s"purgeIndex: $leaked tombstoned id(s) live outside the " +
           "assigned touch set — the request's vectors drifted from the " +
@@ -726,39 +634,11 @@ object Ivf {
           "instead")
     }
     val cleaned = lists.filter(col("list_id").isin(touched: _*))
-      .join(broadcast(tombVecs.select(col(idCol).cast("long").as("id"))),
-        Seq("id"), "left_anti")
-      .localCheckpoint() // rows write + recomputed id-Blooms scan it
-    val stage = graft.state.ModelStore.newAttempt(root, purgedName)
-    // independent staged artifacts overlap (guide §2.6); the carry
-    // loop stays sequenced after the lists write (the writer owns its
-    // output dir until commit), publish strictly after all
-    graft.util.Par.inParallel(
-      () => {
-        cleaned.select(lists.columns.map(col): _*)
-          .repartition(col("list_id"))
-          .write.partitionBy("list_id")
-          .parquet(stage.resolve("lists").toString)
-        untouched.foreach { l =>
-          graft.util.Fs.copyRecursively(
-            java.nio.file.Paths.get(root, base, "lists", s"list_id=$l"),
-            stage.resolve("lists").resolve(s"list_id=$l"))
-        }
-      },
-      () => cents.write.parquet(stage.resolve("centroids").toString),
-      // id-Bloom metadata splits like the lists: carried lists keep
-      // their stored rows, touched lists recompute from survivors (only
-      // when the incumbent carries Blooms — a pre-Bloom store stays
-      // pre-Bloom, never a partial map whose missing lists would read
-      // as negatives)
-      () => if (idBloomCache.nonEmpty) {
-        val touchedCol = col("list_id").isin(touched: _*)
-        spark.read.parquet(s"$root/$base/idbloom").filter(!touchedCol)
-          .unionByName(idBlooms(cleaned))
-          .write.parquet(stage.resolve("idbloom").toString)
-      })
-    graft.state.ModelStore.publishExclusive(root, purgedName, stage)
-    (touched, untouched)
+      .join(tombIds, Seq("id"), "left_anti")
+      .select(lists.columns.map(col): _*)
+    val untouched = PartitionedStore.commit(spark, root, name, purgedName,
+      table, touched.map(_.toLong), cleaned)
+    (touched, untouched.map(_.toInt))
   }
 
   /** CDC-DRIVEN INCREMENTAL MAINTENANCE of the stored IVF-SQ index —
@@ -784,8 +664,8 @@ object Ivf {
     * Only the union of removal-touched and addition-target lists
     * rewrites (partition-pruned scan + broadcast anti-join + union);
     * every other list carries byte-for-byte, id-Blooms split with the
-    * rewrite, and the pair publishes first-writer-wins under an
-    * attempt-private stage. Centroids are KEPT (the [[purgeIndex]]
+    * rewrite, and the pair publishes first-writer-wins
+    * ([[PartitionedStore.commit]]). Centroids are KEPT (the [[purgeIndex]]
     * unlearning split: serve fresh now, re-fit on schedule). Returns
     * (touched, untouched) list ids. 100 TB shape: feed is
     * commit-sized (broadcast), assignment is map-only, bytes
@@ -805,22 +685,20 @@ object Ivf {
       s"maintainIndex: unknown op '${badOps.headOption.map(_.get(0))
         .getOrElse("")}' (expected insert/delete/update)")
     val (lists, cents) = loadIndex(spark, root, name)
-    val base = baseName(root, name)
-    require(java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(root, base, "idbloom")),
+    require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root,
+        PartitionedStore.resolve(root, name), table.bloom.dir)),
       s"maintainIndex: stored index '$name' carries no per-list " +
         "id-Blooms — rebuild it with saveIndex first")
-    val allLists = storedListIds(root, base)
     // removal arm: EVERY feed id leaves its current list (delete, the
     // update pre-image, and any re-delivered insert's stored version) —
-    // located by the ROUTED id-Bloom consult ([[consultIdBlooms]]:
+    // located by the ROUTED id-Bloom consult (PartitionedStore.consult:
     // driver bit-test while nlist fits the threshold, distributed
     // membership join above it), feed-sized collect
     val feedIds = feed.select(col("id").cast("long")).distinct()
       .collect().map(_.getLong(0))
     require(feedIds.nonEmpty, "maintainIndex: empty feed")
-    val removalTouched =
-      consultIdBlooms(spark, root, name, allLists, feedIds.toSeq)
+    val (_, removalTouched) = PartitionedStore.consultPartitions(spark,
+      root, name, table, feedIds.map(_.toString).toSeq)
     // addition arm: post-images assigned under the STORED centroids,
     // quantized into the stored layout
     val post = feed.filter(col("op").isin("insert", "update"))
@@ -840,36 +718,14 @@ object Ivf {
       s"maintainIndex: feed post-images are missing stored column(s) " +
         s"${missing.mkString(", ")} — the stored index carries " +
         s"(${storedCols.mkString(", ")})")
-    val touched = (removalTouched ++ addTouched).distinct.sorted
-    val untouched = allLists.filterNot(touched.contains).sorted
+    val touched = (removalTouched.map(_.toInt) ++ addTouched).distinct.sorted
     import spark.implicits._
     val rewritten = lists.filter(col("list_id").isin(touched: _*))
       .join(broadcast(feedIds.toSeq.toDF("id")), Seq("id"), "left_anti")
       .select(storedCols.map(col): _*)
       .unionByName(additions.select(storedCols.map(col): _*))
-      .localCheckpoint() // rows write + recomputed id-Blooms scan it
-    val stage = graft.state.ModelStore.newAttempt(root, newName)
-    // independent staged artifacts overlap (guide §2.6); carry after
-    // the lists write, publish strictly after all
-    graft.util.Par.inParallel(
-      () => {
-        rewritten.repartition(col("list_id"))
-          .write.partitionBy("list_id")
-          .parquet(stage.resolve("lists").toString)
-        untouched.foreach { l =>
-          graft.util.Fs.copyRecursively(
-            java.nio.file.Paths.get(root, base, "lists", s"list_id=$l"),
-            stage.resolve("lists").resolve(s"list_id=$l"))
-        }
-      },
-      () => cents.write.parquet(stage.resolve("centroids").toString),
-      () => {
-        val touchedCol = col("list_id").isin(touched: _*)
-        spark.read.parquet(s"$root/$base/idbloom").filter(!touchedCol)
-          .unionByName(idBlooms(rewritten))
-          .write.parquet(stage.resolve("idbloom").toString)
-      })
-    graft.state.ModelStore.publishExclusive(root, newName, stage)
-    (touched, untouched)
+    val untouched = PartitionedStore.commit(spark, root, name, newName,
+      table, touched.map(_.toLong), rewritten)
+    (touched, untouched.map(_.toInt))
   }
 }

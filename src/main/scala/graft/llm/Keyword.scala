@@ -194,10 +194,7 @@ object Keyword {
     * prod is missing mid-publish, the ModelStore crash-window rule). */
   def loadPostings(spark: org.apache.spark.sql.SparkSession, root: String,
       name: String = "postings"): DataFrame = {
-    val base =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(root, name)))
-        name
-      else s"${name}_backup"
+    val base = graft.state.PartitionedStore.resolve(root, name)
     spark.read.parquet(s"$root/$base/posts")
       .select(col("token"), col("doc_id"), col("tf"))
   }

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.state.PartitionedStore
+
 /** Physical data-layout optimization — the scan-pruning family: Z-order
   * (Morton) clustering, per-file zone maps (min/max column statistics),
   * and measured pruning effectiveness. This is the layer under every
@@ -158,37 +160,21 @@ object Layout {
     * write emits one file per directory — file = unit of pruning, not
     * a pile of per-task shards. */
   def saveLayout(laid: DataFrame, root: String,
-      name: String = "events_z", fileCol: String = "file_z"): Unit = {
-    // attempt-private staging (ModelStore.newAttempt): a concurrent
-    // writer to the same name can race only at the publish rename,
-    // never at the staged bytes
-    val stage = graft.state.ModelStore.newAttempt(root, name)
-    // the three staged artifacts are independent scans of `laid` —
-    // overlap their driver actions (guide §2.6), publish after all
-    graft.util.Par.inParallel(
-      () => laid.select(col("event_id"), col("user_id"), col("ub"),
-          col("tb"), col("zkey"), col(fileCol))
-        .repartition(col(fileCol))
-        .write.partitionBy(fileCol)
-        .parquet(stage.resolve("rows").toString),
-      () => zoneMaps(laid, fileCol).write
-        .parquet(stage.resolve("zonemaps").toString),
-      () => fileBlooms(laid, fileCol).write
-        .parquet(stage.resolve("bloom").toString))
-    graft.state.ModelStore.publish(root, name, stage)
-  }
+      name: String = "events_z", fileCol: String = "file_z"): Unit =
+    PartitionedStore.save(root, name, table(fileCol),
+      laid.select(col("event_id"), col("user_id"), col("ub"), col("tb"),
+        col("zkey"), col(fileCol)),
+      onePerPartition = true)
 
-  /** The stored per-file Bloom written by [[saveLayout]], as the dense
-    * driver-side metadata cache a point-lookup planner consults:
-    * file_id → 64 packed words. Bounded BY CONSTRUCTION at file-count
-    * × words longs (the q223 zone-map-cache precedent). */
-  /** The pair-level crash-window rule, in ONE place: serve prod if it
-    * exists, else the backup pair (as in [[graft.llm.Ivf.loadIndex]]).
-    * Every stored-layout reader resolves through this. */
-  private def baseName(root: String, name: String): String =
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(root, name)))
-      name
-    else s"${name}_backup"
+  /** How a stored layout lays out a version: rows partitioned by
+    * `fileCol`, the per-file Bloom ([[fileBlooms]]) and the zone maps
+    * ([[zoneMaps]]) keyed by `file_id`. Point-lookup planners pass it
+    * to [[PartitionedStore.consult]]. */
+  def table(fileCol: String): PartitionedStore.Table =
+    PartitionedStore.Table("rows", fileCol,
+      PartitionedStore.Sidecar("bloom", "file_id", fileBlooms(_, fileCol)),
+      Seq(PartitionedStore.Sidecar("zonemaps", "file_id",
+        zoneMaps(_, fileCol))))
 
   /** Widen `df` to carry every field in `fields`, adding the missing
     * ones as typed NULLs — the one definition of schema-union widening
@@ -200,148 +186,6 @@ object Layout {
       .foldLeft(df)((d, f) =>
         d.withColumn(f.name, lit(null).cast(f.dataType)))
 
-  /** Driver-path cap for the Bloom consult: up to this many files the
-    * planner collects the Bloom table ([[loadBloomCache]], ~512 B/file)
-    * and probes it with pure bit ops; above it [[consultBlooms]]
-    * switches to the distributed membership join (r13 verdict item 4 —
-    * at 10⁵–10⁶ files the collected cache is a 50–500 MB driver object
-    * and the probe loop a single-threaded scan). Override per session
-    * via the conf key for tests/profiles. */
-  val BloomDriverMaxFilesKey = "spark.graft.layout.maxDriverBloomFiles"
-  val BloomDriverMaxFilesDefault = 4096L
-
-  /** The Bloom consult both mutation arms share ([[purgeUsers]] /
-    * [[updateRows]]): which stored files can contain any of `keys`
-    * (plus the full file set, for the copy-on-write carry split). Two
-    * physical strategies, ONE answer (LayoutSpec pins equality):
-    *
-    *  - small stores (≤ [[BloomDriverMaxFilesKey]] files): collect the
-    *    footer-sized Bloom table to the driver and bit-test — hashes
-    *    each key once, O(files·keys) word ops, no job;
-    *  - large stores: a DISTRIBUTED membership join — the Bloom table
-    *    stays a DataFrame, the keys' hashed (word, mask) positions
-    *    broadcast (request-sized: ≤ k rows per key), and containment
-    *    evaluates executor-parallel as `bits & mask = mask` word
-    *    matches counted per (file, key). The exchange carries only
-    *    Bloom-positive (file, key) groups; the driver receives just
-    *    the touched file ids. This is the 100 TB shape: no
-    *    file-count-sized driver state anywhere.
-    *
-    * Determinism: both paths test the same md5-derived positions
-    * ([[graft.llm.Sketch.bloomPositions]] ≡ the SQL `bloomPos`,
-    * LlmSpec-pinned), so the touched set is bit-identical. */
-  def consultBlooms(spark: org.apache.spark.sql.SparkSession,
-      root: String, name: String, keys: Seq[String])
-      : (Set[Long], Seq[Long]) = {
-    require(keys.nonEmpty, "consultBlooms: empty key set")
-    val maxDriver = spark.conf.getOption(BloomDriverMaxFilesKey)
-      .map(_.toLong).getOrElse(BloomDriverMaxFilesDefault)
-    val base = baseName(root, name)
-    val bloomDf = spark.read.parquet(s"$root/$base/bloom")
-    // the FILE CATALOG (distinct ids, 8 B each) is collected on both
-    // paths: the mutation arms carry untouched partitions with
-    // driver-side filesystem renames, so a file-count-bounded id list
-    // is inherent to the carry — what the join path removes is the
-    // 64-words-PER-file cache and the single-threaded probe loop
-    val allFiles = bloomDf.select(col("file_id")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    if (allFiles.size <= maxDriver) {
-      val blooms = loadBloomCache(spark, root, name)
-      val keyPos = keys.map(k =>
-        graft.llm.Sketch.bloomPositions(k, BloomK, BloomWords))
-      (allFiles, blooms.toSeq.collect { case (f, bits)
-        if keyPos.exists(ps =>
-          graft.llm.Sketch.bloomContainsAt(bits, ps)) => f }.sorted)
-    } else {
-      val touched = bloomMembershipJoin(spark, bloomDf, keys)
-        .select(col("file_id")).distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted
-      (allFiles, touched)
-    }
-  }
-
-  /** The distributed Bloom membership join both consult forms share:
-    * per key, its k bit positions grouped by word → broadcast (key,
-    * word, mask, n_words) rows; a file is positive for the key iff
-    * EVERY one of its words matches `bits & mask = mask`. Returns the
-    * positive (key, file_id) pairs as a DataFrame — the exchange
-    * carries only Bloom-positive groups. */
-  private[graft] def bloomMembershipJoin(
-      spark: org.apache.spark.sql.SparkSession, bloomDf: DataFrame,
-      keys: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val bpw = graft.llm.Sketch.BloomBitsPerWord
-    val probeRows = keys.distinct.flatMap { k =>
-      val byWord = graft.llm.Sketch.bloomPositions(k, BloomK, BloomWords)
-        .groupBy(p => p / bpw)
-        .map { case (w, ps) =>
-          (w, ps.map(p => 1L << (p % bpw).toInt).reduce(_ | _))
-        }.toSeq
-      byWord.map { case (w, m) => (k, w, m, byWord.size) }
-    }
-    bloomDf
-      .select(col("file_id"), col("word").cast("long"), col("bits"))
-      .join(broadcast(
-        probeRows.toDF("key", "word", "mask", "n_words")), Seq("word"))
-      .filter((col("bits").bitwiseAND(col("mask"))) === col("mask"))
-      .groupBy(col("file_id"), col("key"), col("n_words"))
-      .agg(count(lit(1)).as("n_hit"))
-      .filter(col("n_hit") === col("n_words"))
-      .select(col("key"), col("file_id"))
-  }
-
-  /** PER-KEY form of [[consultBlooms]] — the point-lookup PLANNER's
-    * consult (q235/q257): returns (file catalog, Bloom-positive
-    * (key, file) pairs). Same two paths behind the same file-count
-    * threshold, bit-identical pairs either way (LayoutSpec pins
-    * equality): the driver bit-test under [[BloomDriverMaxFilesKey]]
-    * files, else the distributed membership join — which also
-    * parallelizes the PROBE axis, the r14 read-side routing item (the
-    * planner loop was the one consult still pinned to the driver; its
-    * measured ×100 tail was exactly probes × tiles single-threaded).
-    * Driver state on the join path: the catalog (8 B/file, inherent to
-    * the carry) plus the PREDICTION itself — hit-sized, which the
-    * planner must hold anyway to build its partition IN-list. */
-  def consultBloomsPerKey(spark: org.apache.spark.sql.SparkSession,
-      root: String, name: String, keys: Seq[String])
-      : (Set[Long], Seq[(String, Long)]) = {
-    require(keys.nonEmpty, "consultBloomsPerKey: empty key set")
-    val maxDriver = spark.conf.getOption(BloomDriverMaxFilesKey)
-      .map(_.toLong).getOrElse(BloomDriverMaxFilesDefault)
-    val base = baseName(root, name)
-    val bloomDf = spark.read.parquet(s"$root/$base/bloom")
-    val allFiles = bloomDf.select(col("file_id")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    if (allFiles.size <= maxDriver) {
-      val blooms = loadBloomCache(spark, root, name)
-      val pairs = keys.distinct.flatMap { k =>
-        val ps = graft.llm.Sketch.bloomPositions(k, BloomK, BloomWords)
-        blooms.toSeq.collect { case (f, bits)
-          if graft.llm.Sketch.bloomContainsAt(bits, ps) => (k, f) }
-      }
-      (allFiles, pairs)
-    } else {
-      val pairs = bloomMembershipJoin(spark, bloomDf, keys)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      (allFiles, pairs)
-    }
-  }
-
-  def loadBloomCache(spark: org.apache.spark.sql.SparkSession,
-      root: String, name: String = "events_z")
-      : Map[Long, Array[Long]] = {
-    val base = baseName(root, name)
-    spark.read.parquet(s"$root/$base/bloom")
-      .select(col("file_id"), col("word").cast("int"), col("bits"))
-      .collect()
-      .groupBy(_.getLong(0))
-      .map { case (f, rows) =>
-        val dense = new Array[Long](BloomWords)
-        rows.foreach(r => dense(r.getInt(1)) = r.getLong(2))
-        f -> dense
-      }
-  }
-
   /** Load the stored layout pair saved by [[saveLayout]]; falls back to
     * the backup PAIR if prod is missing (the pair-level crash-window
     * rule, as in [[graft.llm.Ivf.loadIndex]]). Returns
@@ -350,7 +194,7 @@ object Layout {
   def loadLayout(spark: org.apache.spark.sql.SparkSession, root: String,
       name: String = "events_z", fileCol: String = "file_z",
       mergeSchema: Boolean = false): (DataFrame, DataFrame) = {
-    val base = baseName(root, name)
+    val base = PartitionedStore.resolve(root, name)
     // mergeSchema reconciles files written under different schema
     // versions (q248's evolved column): files missing an added column
     // read as typed NULLs — opt-in, since footer merging costs a pass
@@ -365,25 +209,6 @@ object Layout {
     * rewritten (Bloom-positive for some tombstone) and which were
     * carried over untouched at the filesystem level. */
   final case class PurgeResult(touched: Seq[Long], untouched: Seq[Long])
-
-  /** The stored file catalog of `name`, from the FILESYSTEM: one
-    * `rows/<fileCol>=N` partition dir per file. Equal to the zonemaps'
-    * `file_id` set by construction — [[saveLayout]]/`cowRewrite` write
-    * rows and metadata from the same frame and a file whose rows all
-    * vanish disappears from both — so callers that need only the
-    * catalog (the upsert's carry split) take a file-count-sized driver
-    * listing instead of a read+collect JOB over the zonemaps parquet
-    * (guide §6 file listing; measured r16: ~0.1 s per commit). */
-  private def storedFiles(root: String, name: String,
-      fileCol: String): Set[Long] = {
-    val rows = java.nio.file.Paths.get(root, baseName(root, name), "rows")
-    scala.util.Using.resource(java.nio.file.Files.list(rows)) { s =>
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith(s"$fileCol="))
-        .map(_.stripPrefix(s"$fileCol=").toLong).toSet
-    }
-  }
 
   // ------------------------------------------------------------------
   // Adaptive file fan-out: split-on-budget tiles (r13 verdict item 2).
@@ -428,7 +253,8 @@ object Layout {
   def loadManifest(spark: org.apache.spark.sql.SparkSession,
       root: String, name: String, legacyFiles: Int = 64)
       : Seq[(Long, Long, Long)] = {
-    val p = java.nio.file.Paths.get(root, baseName(root, name), "manifest")
+    val p = java.nio.file.Paths.get(root,
+      PartitionedStore.resolve(root, name), "manifest")
     if (java.nio.file.Files.isDirectory(p))
       spark.read.parquet(p.toString)
         .select(col("file_id"), col("zlo"), col("zhi"))
@@ -467,7 +293,6 @@ object Layout {
   def routeToStore(spark: org.apache.spark.sql.SparkSession,
       root: String, name: String, df: DataFrame, fileCol: String,
       legacyFiles: Int = 64): DataFrame = {
-    import spark.implicits._
     val manifest = loadManifest(spark, root, name, legacyFiles)
     // the inner range join silently DROPS any row outside manifest
     // coverage — so prove statically (O(tiles), driver-side) that no
@@ -475,12 +300,21 @@ object Layout {
     // Cheaper than counting routed rows per call, and catches the
     // corruption at its source (a torn manifest), not per delta
     requireFullCoverage(manifest, s"routeToStore($name)")
-    val man = manifest.toDF("__route_file", "__zlo", "__zhi")
+    assignTiles(df, fileCol, manifest)
+  }
+
+  /** Re-derive `fileCol` on `df` from its zkey: each row takes the id
+    * of the tile `(file_id, zlo, zhi)` whose range holds its zkey. One
+    * broadcast range join against footer-sized tiles; a row no tile
+    * covers is dropped. */
+  private def assignTiles(df: DataFrame, fileCol: String,
+      tiles: Seq[(Long, Long, Long)]): DataFrame = {
+    import df.sparkSession.implicits._
     df.drop(fileCol)
-      .join(broadcast(man),
+      .join(broadcast(tiles.toDF("__tile", "__zlo", "__zhi")),
         col("zkey") >= col("__zlo") && col("zkey") <= col("__zhi"))
-      .withColumn(fileCol, col("__route_file"))
-      .drop("__route_file", "__zlo", "__zhi")
+      .withColumn(fileCol, col("__tile"))
+      .drop("__tile", "__zlo", "__zhi")
   }
 
   /** What [[splitOnBudget]] did: the tiles that split (old ids), the
@@ -519,14 +353,10 @@ object Layout {
     require(budget >= 1, s"splitOnBudget: budget must be >= 1, got $budget")
     require(newName != name,
       s"splitOnBudget: new store must not shadow the incumbent '$name'")
-    import spark.implicits._
-    val base = baseName(root, name)
     val legacyW = Grid / legacyFiles
-    val man = loadManifest(spark, root, name, legacyFiles)
-      .map { case (f, zlo, zhi) => f -> (zlo, zhi) }.toMap
-    val counts = spark.read.parquet(s"$root/$base/zonemaps")
-      .select(col("file_id"), col("n_rows"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val manifest = loadManifest(spark, root, name, legacyFiles)
+    val man = manifest.map { case (f, zlo, zhi) => f -> (zlo, zhi) }.toMap
+    val counts = fileRows(spark, root, name)
     // a width-1 tile cannot refine further (one zkey cell)
     val oversized = counts.collect { case (f, n)
       if n > budget && (man(f)._2 - man(f)._1 + 1) > 1 => f }.toSeq.sorted
@@ -548,30 +378,9 @@ object Layout {
       f -> (0L until k).map(i => (tileId(zlo + i * cw, cw, legacyW),
         zlo + i * cw, zlo + i * cw + cw - 1))
     }.toMap
-    val (rows, _) = loadLayout(spark, root, name, fileCol,
-      mergeSchema = true)
-    val keep = rows.columns.toSeq
-    val tilesDf = children.values.flatten.toSeq
-      .toDF("__new_file", "__zlo", "__zhi")
-    val rewritten = rows.filter(col(fileCol).isin(oversized: _*))
-      .drop(fileCol)
-      .join(broadcast(tilesDf),
-        col("zkey") >= col("__zlo") && col("zkey") <= col("__zhi"))
-      .withColumn(fileCol, col("__new_file"))
-      .select(keep.map(col): _*)
-    val res = cowRewrite(spark, root, name, fileCol, counts.keySet,
-      oversized, rewritten, newName,
-      // the new manifest: carried tiles keep their entry, split tiles
-      // are replaced by their children (coverage is preserved — the
-      // children partition the parent range)
-      manifestOverride = Some(
-        (man.toSeq.collect { case (f, (zlo, zhi))
-           if !children.contains(f) => (f, zlo, zhi) } ++
-         children.values.flatten).sortBy(_._2)))
-    SplitResult(oversized,
-      children.map { case (f, cs) => f -> cs.map(_._1) },
-      res.touched.size.toLong + res.untouched.size.toLong -
-        oversized.size.toLong + children.valuesIterator.map(_.size).sum)
+    retile(spark, root, name, fileCol, newName, manifest, oversized,
+      children.values.flatten.toSeq,
+      children.map { case (f, cs) => f -> cs.map(_._1) })
   }
 
   /** The inverse maintenance commit, ONE-RUN K-WAY: every complete
@@ -593,13 +402,9 @@ object Layout {
       newName: String, legacyFiles: Int = 64): SplitResult = {
     require(newName != name,
       s"mergeOnBudget: new store must not shadow the incumbent '$name'")
-    import spark.implicits._
     val legacyW = Grid / legacyFiles
     val man = loadManifest(spark, root, name, legacyFiles)
-    val counts = spark.read
-      .parquet(s"$root/${baseName(root, name)}/zonemaps")
-      .select(col("file_id"), col("n_rows"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val counts = fileRows(spark, root, name)
     // plan state: live tile -> (zlo, zhi, rows, absorbed ORIGINAL tiles)
     var plan: Map[Long, (Long, Long, Long, Seq[Long])] = man.map {
       case (f, zlo, zhi) =>
@@ -633,26 +438,37 @@ object Layout {
     }.sortBy(_._2)
     require(merges.nonEmpty,
       "mergeOnBudget: no sibling set fits the budget — nothing to merge")
-    val merging = merges.flatMap(_._4)
+    retile(spark, root, name, fileCol, newName, man,
+      merges.flatMap(_._4), merges.map(m => (m._1, m._2, m._3)),
+      merges.map(m => m._1 -> m._4).toMap) // ancestor -> absorbed tiles
+  }
+
+  /** Stored row count per file of `name`, from its zone maps. */
+  private def fileRows(spark: org.apache.spark.sql.SparkSession,
+      root: String, name: String): Map[Long, Long] =
+    spark.read
+      .parquet(s"$root/${PartitionedStore.resolve(root, name)}/zonemaps")
+      .select(col("file_id"), col("n_rows"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** The re-tiling commit [[splitOnBudget]] and [[mergeOnBudget]] end
+    * in: only the `from` tiles rewrite (a partition-pruned scan), each
+    * row moving into the `to` tile its zkey falls in; every other file
+    * carries byte-for-byte; and the new manifest (`man` without `from`,
+    * plus `to` — coverage is preserved, since `to` partitions the range
+    * `from` covered) publishes in the same version. */
+  private def retile(spark: org.apache.spark.sql.SparkSession,
+      root: String, name: String, fileCol: String, newName: String,
+      man: Seq[(Long, Long, Long)], from: Seq[Long],
+      to: Seq[(Long, Long, Long)], mapping: Map[Long, Seq[Long]])
+      : SplitResult = {
     val (rows, _) = loadLayout(spark, root, name, fileCol,
       mergeSchema = true)
-    val keep = rows.columns.toSeq
-    val parentDf = merges.map(m => (m._1, m._2, m._3))
-      .toDF("__new_file", "__zlo", "__zhi")
-    val rewritten = rows.filter(col(fileCol).isin(merging: _*))
-      .drop(fileCol)
-      .join(broadcast(parentDf),
-        col("zkey") >= col("__zlo") && col("zkey") <= col("__zhi"))
-      .withColumn(fileCol, col("__new_file"))
-      .select(keep.map(col): _*)
-    val newMan = (man.filterNot { case (f, _, _) => merging.contains(f) }
-      ++ merges.map(m => (m._1, m._2, m._3))).sortBy(_._2)
-    val res = cowRewrite(spark, root, name, fileCol, counts.keySet,
-      merging, rewritten, newName, manifestOverride = Some(newMan))
-    SplitResult(merging,
-      merges.map(m => m._1 -> m._4).toMap, // ancestor -> absorbed tiles
-      res.touched.size.toLong + res.untouched.size.toLong -
-        merging.size.toLong + merges.size.toLong)
+    val res = cowRewrite(spark, root, name, fileCol, from,
+      assignTiles(rows.filter(col(fileCol).isin(from: _*)), fileCol, to),
+      newName, manifestOverride = Some(
+        (man.filterNot(t => from.contains(t._1)) ++ to).sortBy(_._2)))
+    SplitResult(from, mapping, res.untouched.size.toLong + to.size)
   }
 
   /** Right-to-be-forgotten DELETE executed on a stored layout, as
@@ -680,9 +496,10 @@ object Layout {
     require(purgedName != name,
       s"purgeUsers: purged store must not shadow the incumbent '$name'")
     // driver bit-test on small stores, distributed membership join on
-    // large ones — same touched set either way ([[consultBlooms]])
-    val (allFiles, touched) =
-      consultBlooms(spark, root, name, tombs.map(_.toString))
+    // large ones — same touched set either way
+    // ([[PartitionedStore.consult]])
+    val (_, touched) = PartitionedStore.consultPartitions(spark, root,
+      name, table(fileCol), tombs.map(_.toString))
     // mutation arms read with mergeSchema: they REWRITE files, so an
     // evolved column (q248) must survive the copy-on-write even when
     // the sampled footer predates the evolution
@@ -693,8 +510,7 @@ object Layout {
     val cleaned = rows.filter(col(fileCol).isin(touched: _*))
       .join(org.apache.spark.sql.functions.broadcast(
         tombs.toDF("user_id")), Seq("user_id"), "left_anti")
-    cowRewrite(spark, root, name, fileCol, allFiles, touched,
-      cleaned, purgedName)
+    cowRewrite(spark, root, name, fileCol, touched, cleaned, purgedName)
   }
 
   /** MERGE-insert executed on a stored layout, the other copy-on-write
@@ -723,14 +539,8 @@ object Layout {
       name: String, fileCol: String, delta: DataFrame,
       upsertName: String,
       preloaded: Option[DataFrame] = None): PurgeResult = {
-    // the merge needs only the file CATALOG (no probe — insert targets
-    // are pure zkey arithmetic): the stored partition dirs, read by a
-    // DRIVER listing (guide §6; r16: this was a read+collect JOB over
-    // the zonemaps parquet per commit). Same set as the zonemaps'
-    // file_id by construction: saveLayout/cowRewrite split rows and
-    // metadata together, so a file exists in rows/ iff it has a zone
-    // map; either way the answer is file-count-sized.
-    val allFiles = storedFiles(root, name, fileCol)
+    // no probe: insert targets are pure zkey arithmetic, and the commit
+    // takes the file catalog from a driver listing of the partition dirs
     val touched = delta.select(col(fileCol).cast("long"))
       .distinct().collect().map(_.getLong(0)).toSeq.sorted
     require(touched.nonEmpty, "upsertRows: empty delta")
@@ -783,8 +593,7 @@ object Layout {
         "left_outer")
     val merged = incumbent.select(all.map(col): _*)
       .unionByName(deltaFilled.select(all.map(col): _*))
-    cowRewrite(spark, root, name, fileCol,
-      allFiles ++ touched, touched, merged, upsertName)
+    cowRewrite(spark, root, name, fileCol, touched, merged, upsertName)
   }
 
   /** In-place UPDATE executed on a stored layout — the third
@@ -810,8 +619,8 @@ object Layout {
     require(assign.keys.forall(!core.contains(_)),
       "updateRows: layout/key columns are not updatable in place — " +
         "compose purgeUsers + upsertRows for a key-moving change")
-    val (allFiles, touched) =
-      consultBlooms(spark, root, name, keyUsers.map(_.toString))
+    val (_, touched) = PartitionedStore.consultPartitions(spark, root,
+      name, table(fileCol), keyUsers.map(_.toString))
     // a cohort entirely absent from the store (all Blooms negative)
     // would otherwise publish a byte-copy of the incumbent — a silent
     // no-op commit; fail fast like purgeUsers/upsertRows (r13 ADVICE)
@@ -838,8 +647,7 @@ object Layout {
       case (df, (c, e)) =>
         df.withColumn(c, when(isTarget, e).otherwise(col(c)))
     }.drop("__upd")
-    cowRewrite(spark, root, name, fileCol, allFiles, touched,
-      rewritten, updatedName)
+    cowRewrite(spark, root, name, fileCol, touched, rewritten, updatedName)
   }
 
   /** CHANGE DATA CAPTURE between two published store versions — the
@@ -1032,92 +840,26 @@ object Layout {
     }
   }
 
-  /** The shared copy-on-write core of [[purgeUsers]] and [[upsertRows]]:
-    * write `rewritten` (the new content of the `touched` files) as the
-    * staged rows, carry every untouched partition directory over at the
-    * filesystem level (never read, never re-encoded), split zone maps
-    * and Blooms the same way (stored metadata for carried files,
-    * recomputed from `rewritten` for touched ones — a touched file
-    * whose rows all vanish disappears from rows and metadata together),
-    * and publish the new store version through the pair-atomic
-    * [[graft.state.ModelStore]] rename. */
+  /** The copy-on-write commit every mutation arm ends in: `rewritten`
+    * (the new content of the `touched` files, layout columns first,
+    * then any evolved columns the caller's schema carries, q248)
+    * becomes version `newName` through [[PartitionedStore.commit]]: the
+    * untouched partition dirs carry byte-for-byte, zone maps and Blooms
+    * are recomputed for touched files only, and the tile manifest
+    * carries verbatim unless the commit re-tiles (split/merge pass the
+    * new one). */
   private def cowRewrite(spark: org.apache.spark.sql.SparkSession,
-      root: String, name: String, fileCol: String, allFiles: Set[Long],
-      touched: Seq[Long], rewritten: DataFrame, newName: String,
+      root: String, name: String, fileCol: String, touched: Seq[Long],
+      rewritten: DataFrame, newName: String,
       manifestOverride: Option[Seq[(Long, Long, Long)]] = None)
       : PurgeResult = {
-    // guard on the shared path (not just purgeUsers): an in-place
-    // newName == name would have the carry/metadata reads of the
-    // incumbent race its own prod→backup publish rename
-    require(newName != name,
-      s"cowRewrite: new store must not shadow the incumbent '$name'")
-    val untouched = (allFiles -- touched).toSeq.sorted
-    // attempt-PRIVATE staging (r13 ADVICE): racing commits to the same
-    // version name each stage in their own attempt dir, so a loser can
-    // neither delete nor half-overwrite the winner's staged bytes — the
-    // publishExclusive rename is the only arbiter
-    val stage = graft.state.ModelStore.newAttempt(root, newName)
-    // core layout columns first, then any evolved columns the caller's
-    // schema carries (q248) — carried files keep their stored schema
+    import spark.implicits._
     val core = Seq("event_id", "user_id", "ub", "tb", "zkey", fileCol)
     val keep = core ++ rewritten.columns.toSeq.filterNot(core.contains)
-    val rw = rewritten
-      .select(keep.map(col): _*)
-      .localCheckpoint() // rows write, zone maps and Blooms all scan it
-    val base = baseName(root, name)
-    val touchedCol = col("file_id").isin(touched: _*)
-    // the four staged artifacts (rows+carry, zone maps, Blooms,
-    // manifest) have no data dependency on each other — only on `rw`
-    // and the incumbent, both immutable here — so their driver actions
-    // OVERLAP (guide §2.6; r16: each commit paid them serially, and at
-    // bench scale every one is a small overhead-bound job). The carry
-    // loop stays sequenced AFTER the rows write inside one thunk: the
-    // writer checks its output path for nonexistence and owns its
-    // _temporary dir, so carried partition dirs may only land once the
-    // write committed. Publish still happens strictly after all four.
-    graft.util.Par.inParallel(
-      () => {
-        rw.repartition(col(fileCol))
-          .write.partitionBy(fileCol)
-          .parquet(stage.resolve("rows").toString)
-        // carry-over arm: untouched partition dirs move at the fs level
-        untouched.foreach { f =>
-          graft.util.Fs.copyRecursively(
-            java.nio.file.Paths.get(root, base, "rows", s"$fileCol=$f"),
-            stage.resolve("rows").resolve(s"$fileCol=$f"))
-        }
-      },
-      // metadata follows the same split: carried rows keep stored maps,
-      // rewritten files recompute from survivors (file-count-sized work)
-      () => spark.read.parquet(s"$root/$base/zonemaps").filter(!touchedCol)
-        .unionByName(zoneMaps(rw, fileCol))
-        .write.parquet(stage.resolve("zonemaps").toString),
-      () => spark.read.parquet(s"$root/$base/bloom").filter(!touchedCol)
-        .unionByName(fileBlooms(rw, fileCol))
-        .write.parquet(stage.resolve("bloom").toString),
-      // the tile manifest (split stores) rides every copy-on-write
-      // version: mutations don't re-tile, so it carries verbatim unless
-      // the commit IS a re-tiling (split/merge pass their new manifest)
-      () => {
-        val manOut = manifestOverride.orElse {
-          val p = java.nio.file.Paths.get(root, base, "manifest")
-          if (java.nio.file.Files.isDirectory(p))
-            Some(spark.read.parquet(p.toString)
-              .select(col("file_id"), col("zlo"), col("zhi"))
-              .collect()
-              .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-              .toSeq.sortBy(_._2))
-          else None
-        }
-        manOut.foreach { m =>
-          import spark.implicits._
-          m.toDF("file_id", "zlo", "zhi").coalesce(1)
-            .write.parquet(stage.resolve("manifest").toString)
-        }
-      })
-    // first-writer-wins: a concurrent writer that derived the same new
-    // version from the same base loses here and must rebase (OCC)
-    graft.state.ModelStore.publishExclusive(root, newName, stage)
+    val untouched = PartitionedStore.commit(spark, root, name, newName,
+      table(fileCol), touched, rewritten.select(keep.map(col): _*),
+      manifestOverride.map(m =>
+        "manifest" -> m.toDF("file_id", "zlo", "zhi").coalesce(1)).toMap)
     PurgeResult(touched, untouched)
   }
 }

@@ -2781,7 +2781,7 @@ object LlmQueries {
     * write serving rows from another would mis-prune), and this query
     * reads the incumbent time-sorted layout the way a point-lookup
     * planner actually runs: the ROUTED consult
-    * ([[graft.llm.Layout.consultBloomsPerKey]] — driver bit-test under
+    * ([[graft.state.PartitionedStore.consult]] — driver bit-test under
     * the file-count threshold, distributed membership join above it)
     * keeps for each probe user (`user_id % 17 = 0`, the deterministic
     * lookup batch) only the files whose filter contains it, and ONE
@@ -2801,26 +2801,8 @@ object LlmQueries {
     import s.implicits._
     val root = mutStore.tStore(s, d) // the shared time-sorted incumbent
     val (rows, _) = Layout.loadLayout(s, root, "events_t", "file_t")
-    val probes: Array[Long] = rows.select($"user_id").distinct()
-      .filter($"user_id" % 17 === 0).orderBy($"user_id")
-      .collect().map(_.getLong(0))
-    require(probes.nonEmpty, s"q235: no probe users at $d")
-    // membership planning through the ROUTED consult: under the
-    // file-count threshold it is the driver's probe×file bit-test (no
-    // Spark job — the reader's move on a small store); above it the
-    // distributed membership join answers the same question
-    // executor-parallel on BOTH axes (the r14 read-side routing item)
-    val (allFiles, pred) = Layout.consultBloomsPerKey(s, root,
-      "events_t", probes.map(_.toString))
-    val filesTotal = allFiles.size.toLong
-    val pairs: Seq[(Long, Long)] = pred.map { case (k, f) => (k.toLong, f) }
-    val predDf = pairs.toDF("user_id", "file_t")
-    val candFiles = pairs.map(_._2).distinct.sorted
-    val scanned = rows.filter($"file_t".isin(candFiles: _*))
-      .join(broadcast(predDf), Seq("file_t", "user_id"))
-      .groupBy($"user_id")
-      .agg(countDistinct($"file_t").as("files_actual"),
-        count(lit(1)).as("n_rows"))
+    val (filesTotal, pairs, scanned) =
+      storedBloomLookup(s, d, root, "events_t", "file_t", rows, "q235")
     pairs.groupBy(_._1).view.mapValues(_.size.toLong).toSeq
       .toDF("user_id", "files_bloom")
       .join(scanned, Seq("user_id"))
@@ -2828,6 +2810,39 @@ object LlmQueries {
         lit(filesTotal).as("files_total"), $"n_rows")
       .orderBy($"user_id")
   }
+
+  /** The stored point lookup q235 and q257 share. The probe users
+    * (`user_id % 17 = 0`, the deterministic lookup batch) plan their
+    * files through the ROUTED consult: under the file-count threshold
+    * it is the driver's probe×file bit-test (no Spark job — the
+    * reader's move on a small store); above it the distributed
+    * membership join answers the same question executor-parallel on
+    * BOTH axes (the r14 read-side routing item). Then ONE scan over
+    * the union of predicted files, with a literal `fileCol IN (...)`
+    * partition filter, counts per probe the files that really hold it
+    * and its rows. Returns (files in the store, the (user, file)
+    * predictions, that per-user scan). */
+  private def storedBloomLookup(s: SparkSession, d: String, root: String,
+      name: String, fileCol: String, rows: DataFrame, who: String)
+      : (Long, Seq[(Long, Long)], DataFrame) = {
+    import s.implicits._
+    val probes = rows.select($"user_id").distinct()
+      .filter($"user_id" % 17 === 0).orderBy($"user_id")
+      .collect().map(_.getLong(0).toString).toSeq
+    require(probes.nonEmpty, s"$who: no probe users at $d")
+    val (allFiles, pred) = graft.state.PartitionedStore.consult(s, root,
+      name, Layout.table(fileCol), probes)
+    val pairs = pred.map { case (k, f) => (k.toLong, f) }
+    val scanned = rows
+      .filter(col(fileCol).isin(pairs.map(_._2).distinct.sorted: _*))
+      .join(broadcast(pairs.toDF("user_id", fileCol)),
+        Seq(fileCol, "user_id"))
+      .groupBy($"user_id")
+      .agg(countDistinct(col(fileCol)).as("files_actual"),
+        count(lit(1)).as("n_rows"))
+    (allFiles.size.toLong, pairs, scanned)
+  }
+
   /** The stored per-file Bloom replayed in SQL — build from `rel`'s
     * (fileCol, keyCol) pairs, probe every file with `probeCte`'s keys
     * — shared VERBATIM by q235/q238/q241 over the layout's user Blooms
@@ -3529,7 +3544,7 @@ object LlmQueries {
     * at it increment; and ONLY a group whose counter reaches zero
     * re-derives — via the caller's `repair`, a scan of just those
     * groups (q263 routes it through
-    * [[graft.llm.Layout.consultBloomsPerKey]], so the re-derivation
+    * [[graft.state.PartitionedStore.consult]], so the re-derivation
     * reads only the damaged groups' Bloom-predicted files — work ∝
     * damage, never view or table size). NULL values are ignored (a
     * MAX over a column is a view over its non-null rows). Returns
@@ -4123,7 +4138,7 @@ object LlmQueries {
     * EVERY instance of each cohort max, the counters hit zero, and
     * exactly those groups re-derive — through a partition-pruned scan
     * of the damaged users' Bloom-predicted files
-    * ([[graft.llm.Layout.consultBloomsPerKey]] — the round's routed
+    * ([[graft.state.PartitionedStore.consult]] — the round's routed
     * planner consult, reused as the IVM repair planner). The gated
     * output carries per-user (w_max, n_at_max) plus the audit the
     * oracle replays bit-for-bit: n_damaged (the cohort), files_scanned
@@ -4178,8 +4193,8 @@ object LlmQueries {
         var filesScanned = 0L
         var filesTotal = 0L
         def repairFrom(name: String)(users: Seq[Long]): DataFrame = {
-          val (allF, pred) = Layout.consultBloomsPerKey(s, root, name,
-            users.map(_.toString))
+          val (allF, pred) = graft.state.PartitionedStore.consult(s, root,
+            name, Layout.table("file_z"), users.map(_.toString))
           val files = pred.map(_._2).distinct.sorted
           filesScanned += files.size.toLong
           filesTotal = allF.size.toLong
@@ -4780,25 +4795,11 @@ object LlmQueries {
     val (rows, zm) = Layout.loadLayout(s, fx.root, "events_z_sp_up")
     val nRowsByFile = zm.select($"file_id", $"n_rows").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val probes: Array[Long] = rows.select($"user_id").distinct()
-      .filter($"user_id" % 17 === 0).orderBy($"user_id")
-      .collect().map(_.getLong(0))
-    require(probes.nonEmpty, s"q257: no probe users at $d")
-    // the ROUTED planner consult: driver bit-test under the threshold,
-    // distributed membership join above it — the tile count is exactly
-    // what the split grows with the data, so the read planner must
-    // scale past the driver the same way the mutation arms already do
-    val (allFiles, pred) = Layout.consultBloomsPerKey(s, fx.root,
-      "events_z_sp_up", probes.map(_.toString))
-    val filesTotal = allFiles.size.toLong
-    val pairs: Seq[(Long, Long)] = pred.map { case (k, f) => (k.toLong, f) }
-    val predDf = pairs.toDF("user_id", "file_z")
-    val candFiles = pairs.map(_._2).distinct.sorted
-    val scanned = rows.filter($"file_z".isin(candFiles: _*))
-      .join(broadcast(predDf), Seq("file_z", "user_id"))
-      .groupBy($"user_id")
-      .agg(countDistinct($"file_z").as("files_actual"),
-        count(lit(1)).as("n_rows"))
+    // the tile count is exactly what the split grows with the data, so
+    // the read planner must scale past the driver the same way the
+    // mutation arms already do
+    val (filesTotal, pairs, scanned) = storedBloomLookup(s, d, fx.root,
+      "events_z_sp_up", "file_z", rows, "q257")
     pairs.groupBy(_._1).toSeq.map { case (u, fs) =>
       (u, fs.size.toLong, fs.map(p => nRowsByFile(p._2)).sum) }
       .toDF("user_id", "files_bloom", "rows_pred")

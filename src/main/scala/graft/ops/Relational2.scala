@@ -58,21 +58,25 @@ object Relational2 {
     import s.implicits._
     // unique per-invocation staging dir: a fixed shared path would let
     // concurrent runs clobber each other between write and lazy re-read;
-    // the shared exit hook bounds the /tmp accumulation across runs
+    // the result is materialized before the dir is released
     val stagingPath = graft.util.Fs.tempRoot("graft_csv_stage")
     val staging = stagingPath.toString
-    events(s, d)
-      .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id",
-        $"event_type", $"value")
-      .write.mode("overwrite").option("header", "true").csv(staging)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts_us", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    s.read.schema(schema).option("header", "true").csv(staging)
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("cnt"), min($"ts_us").as("first_ts_us"))
-      .orderBy($"event_type")
+    try {
+      events(s, d)
+        .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id",
+          $"event_type", $"value")
+        .write.mode("overwrite").option("header", "true").csv(staging)
+      val schema = StructType(Seq(
+        StructField("event_id", LongType), StructField("ts_us", LongType),
+        StructField("user_id", LongType),
+        StructField("event_type", StringType),
+        StructField("value", DoubleType)))
+      s.read.schema(schema).option("header", "true").csv(staging)
+        .groupBy($"event_type")
+        .agg(count(lit(1)).as("cnt"), min($"ts_us").as("first_ts_us"))
+        .orderBy($"event_type")
+        .localCheckpoint()
+    } finally graft.util.Fs.releaseTempRoot(stagingPath)
   }
   val q72Sql: String =
     """SELECT event_type, COUNT(*) AS cnt,
@@ -301,17 +305,20 @@ object Relational2 {
   def q82JsonRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val stagingPath = graft.util.Fs.tempRoot("graft_json_stage")
-    events(s, d)
-      .select($"event_id", $"user_id", $"event_type", $"value")
-      .write.mode("overwrite").json(stagingPath.toString)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    s.read.schema(schema).json(stagingPath.toString)
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("cnt"), dsum($"value").as("sum_value"))
-      .orderBy($"event_type")
+    try {
+      events(s, d)
+        .select($"event_id", $"user_id", $"event_type", $"value")
+        .write.mode("overwrite").json(stagingPath.toString)
+      val schema = StructType(Seq(
+        StructField("event_id", LongType), StructField("user_id", LongType),
+        StructField("event_type", StringType),
+        StructField("value", DoubleType)))
+      s.read.schema(schema).json(stagingPath.toString)
+        .groupBy($"event_type")
+        .agg(count(lit(1)).as("cnt"), dsum($"value").as("sum_value"))
+        .orderBy($"event_type")
+        .localCheckpoint()
+    } finally graft.util.Fs.releaseTempRoot(stagingPath)
   }
   val q82Sql: String =
     """SELECT event_type, COUNT(*) AS cnt,

@@ -1769,9 +1769,14 @@ object StreamQueries {
     * commit whose version already published is SKIPPED (the store is
     * immutable-per-version; the publish was the transaction). */
   private[ops] final case class UpsertChain(root: String,
-    versions: Seq[String], feedDir: String,
-    audit: Seq[(Long, String, Long, Long)], nIns: Long, nRep: Long,
-    ftTouched: Long)
+      versions: Seq[String], feedDir: String,
+      audit: Seq[(Long, String, Long, Long)], nIns: Long, nRep: Long,
+      ftTouched: Long) {
+    /** Deletes the chain's store and feed roots, for a query that
+      * builds its own chain and has materialized its result. */
+    def release(): Unit = Seq(root, feedDir).foreach(p =>
+      graft.util.Fs.releaseTempRoot(java.nio.file.Paths.get(p)))
+  }
 
   /** The WRITE surfaces run their maintenance arm on every invocation,
     * on a fresh private root: q242 (the streamed upsert chain it is
@@ -1899,20 +1904,24 @@ object StreamQueries {
     // the streamed merge lifecycle runs per invocation; feeds are
     // q252's surface, not this oracle's
     val chain = buildUpsertChain(s, d, withFeeds = false)
-    // the streamed store must serve identically to q240's batch
-    // merge: scan the FINAL version back; audit rows pin the chain
-    require(chain.audit.map(_._3).sum == chain.nIns + chain.nRep,
-      "q242: commit chain lost delta rows")
-    val (fin, _) = Layout.loadLayout(s, chain.root, chain.versions.last)
-    val filesTotal = fin.select($"file_z").distinct().count()
-    fin.groupBy($"file_z")
-      .agg(count(lit(1)).as("n_rows"), sum($"user_id").as("u_mass"),
-        sum($"event_id").as("e_mass"))
-      .select($"file_z", $"n_rows", $"u_mass", $"e_mass",
-        lit(chain.nIns).as("n_inserted"), lit(chain.nRep).as("n_replaced"),
-        lit(chain.ftTouched).as("files_touched"),
-        lit(filesTotal).as("files_total"))
-      .orderBy($"file_z")
+    try {
+      // the streamed store must serve identically to q240's batch
+      // merge: scan the FINAL version back; audit rows pin the chain
+      require(chain.audit.map(_._3).sum == chain.nIns + chain.nRep,
+        "q242: commit chain lost delta rows")
+      val (fin, _) = Layout.loadLayout(s, chain.root, chain.versions.last)
+      val filesTotal = fin.select($"file_z").distinct().count()
+      fin.groupBy($"file_z")
+        .agg(count(lit(1)).as("n_rows"), sum($"user_id").as("u_mass"),
+          sum($"event_id").as("e_mass"))
+        .select($"file_z", $"n_rows", $"u_mass", $"e_mass",
+          lit(chain.nIns).as("n_inserted"),
+          lit(chain.nRep).as("n_replaced"),
+          lit(chain.ftTouched).as("files_touched"),
+          lit(filesTotal).as("files_total"))
+        .orderBy($"file_z")
+        .localCheckpoint()
+    } finally chain.release()
   }
 
   /** q247 — STREAMING incremental view maintenance: q244's fold kept
@@ -2005,12 +2014,14 @@ object StreamQueries {
     // the feed-emitting commit chain runs per invocation: the
     // writer-emitted CDC is this query's lifecycle
     val chain = buildUpsertChain(s, d, withFeeds = true)
-    s.read.option("recursiveFileLookup", "true")
+    try s.read.option("recursiveFileLookup", "true")
       .parquet(chain.feedDir)
       .groupBy($"commit_id", $"op", $"file_z")
       .agg(count(lit(1)).as("n"), sum($"event_id").as("e_mass"),
         sum($"user_id").as("u_mass"))
       .orderBy($"commit_id", $"op", $"file_z")
+      .localCheckpoint()
+    finally chain.release()
   }
 
   /** q255 — STREAMING TIME TRAVEL: AS OF reads over the streaming

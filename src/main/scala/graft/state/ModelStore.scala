@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
   * atomic-rename swap (`scripts/run_training_batch.py:30-36, 243-257`).
   * Engine form: state is ordinary parquet tables (micro-clusters,
   * centroids, anomaly baselines). Every write stages in a private
-  * attempt dir, `<root>/_staging/<name>.attempt-<uuid>` ([[newAttempt]]),
+  * attempt dir, `<root>/_staging/<name>.attempt-<uuid>` ([[stageWith]]),
   * which is then atomically moved over `<root>/<name>`, with the
   * previous production copy kept as `<name>_backup` ([[publish]]), or
   * moved only if `<name>` is new ([[publishExclusive]]). Concurrent
@@ -53,10 +53,9 @@ object ModelStore {
     * of `name`: concurrent attempts at the same version name stage side
     * by side and only the publish rename arbitrates, so a losing
     * attempt can neither delete nor half-overwrite the winner's staged
-    * bytes. The caller writes its tables under the returned path, then
-    * publishes via [[publish]] (blue/green) or [[publishExclusive]]
-    * (OCC). */
-  def newAttempt(root: String, name: String): Path = {
+    * bytes. Only [[stageWith]] opens one, so every attempt is either
+    * returned whole or deleted. */
+  private def newAttempt(root: String, name: String): Path = {
     val p = Paths.get(root, "_staging",
       s"$name$AttemptSep${java.util.UUID.randomUUID().toString}")
     Files.createDirectories(p)
@@ -78,7 +77,7 @@ object ModelStore {
 
   /** First-writer-wins publish from a staged attempt — the OCC commit
     * primitive for IMMUTABLE version names, which the copy-on-write
-    * mutation arms ([[graft.llm.Layout]]) and the catalog commit
+    * commits ([[PartitionedStore.commit]]) and the catalog commit
     * through. The existence check is the fast-fail; the arbiter is the
     * single `Files.move` WITHOUT replace-existing: of any number of
     * racing attempts at the same version name, exactly one rename lands
@@ -131,7 +130,8 @@ object ModelStore {
             "version and retry", e)
     }
 
-  private def children(p: Path): Seq[String] =
+  /** The entry names directly under `p`; empty if `p` is not a dir. */
+  private[state] def children(p: Path): Seq[String] =
     if (!Files.isDirectory(p)) Seq.empty
     else scala.util.Using.resource(Files.list(p)) { s =>
       import scala.jdk.CollectionConverters._
@@ -157,11 +157,7 @@ object ModelStore {
 
   private def loadWith(reader: DataFrameReader, root: String,
       name: String): DataFrame =
-    if (!Files.exists(Paths.get(root, name)) &&
-        Files.exists(Paths.get(root, s"${name}_backup")))
-      reader.parquet(s"$root/${name}_backup")
-    else
-      reader.parquet(s"$root/$name") // a missing table surfaces its error
+    reader.parquet(s"$root/${PartitionedStore.resolve(root, name)}")
 
   def exists(root: String, name: String): Boolean =
     Files.exists(Paths.get(root, name))

@@ -326,9 +326,10 @@ class CompactionSpec extends AnyFunSuite {
         s"id-Bloom missed ${holding -- touched.toSet}")
       // id-Blooms followed the rewrite: no false negatives on the
       // maintained store
-      val cache = Ivf.loadIdBloomCache(spark, root.toString, "ivfsq_m2")
+      val cache = graft.state.PartitionedStore.bloomCache(spark,
+        root.toString, "ivfsq_m2", Ivf.table)
       m2.select($"id", $"list_id").collect().foreach { r =>
-        assert(graft.llm.Sketch.bloomContains(cache(r.getInt(1)),
+        assert(graft.llm.Sketch.bloomContains(cache(r.getInt(1).toLong),
           r.getLong(0).toString, graft.llm.Layout.BloomK,
           graft.llm.Layout.BloomWords),
           s"idbloom false negative for id ${r.getLong(0)}")
@@ -363,14 +364,14 @@ class CompactionSpec extends AnyFunSuite {
       // commit under the forced join path publishes identical content
       val feedIds = feed.select($"id".cast("long")).distinct()
         .collect().map(_.getLong(0)).toSeq
-      val allLists = (0 until 4).toSeq
-      val drv = Ivf.consultIdBlooms(spark, root.toString, "ivfsq",
-        allLists, feedIds)
-      val key = graft.llm.Layout.BloomDriverMaxFilesKey
+      def consultIdBlooms(): Seq[Long] =
+        graft.state.PartitionedStore.consultPartitions(spark,
+          root.toString, "ivfsq", Ivf.table, feedIds.map(_.toString))._2
+      val drv = consultIdBlooms()
+      val key = graft.state.PartitionedStore.BloomDriverMaxFilesKey
       spark.conf.set(key, "0") // force the join path
       try {
-        val dist = Ivf.consultIdBlooms(spark, root.toString, "ivfsq",
-          allLists, feedIds)
+        val dist = consultIdBlooms()
         assert(drv.sorted == dist.sorted,
           s"id-Bloom consult diverged: driver=$drv join=$dist")
         Ivf.maintainIndex(spark, root.toString, feed, "ivfsq",

@@ -108,10 +108,11 @@ class FixturesSpec extends AnyFunSuite {
     }
   }
 
-  test("a second invocation of q130, q134, q253 and q254 leaves no new " +
-      "graft_ dir") {
-    val names = Seq("q130_ivf_compaction", "q134_filtered_knn",
-      "q253_governed_rtbf", "q254_index_maintain")
+  test("a second run of q72, q82, q130, q134, q242 or q252-q254 leaves no " +
+      "new graft_ dir") {
+    val names = Seq("q72_csv_roundtrip", "q82_json_roundtrip",
+      "q130_ivf_compaction", "q134_filtered_knn", "q242_stream_upsert",
+      "q252_stream_cdc", "q253_governed_rtbf", "q254_index_maintain")
     names.foreach(n => SparkEntry.queries(n)(spark, sf).collect())
     val added = names.map { n =>
       val before = graftDirs()

@@ -225,8 +225,8 @@ class LayoutSpec extends AnyFunSuite {
     // the bloom table landed inside the SAME atomically-published dir
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(
       root.toString, "events_t", "bloom")))
-    val cache = graft.llm.Layout.loadBloomCache(spark, root.toString,
-      "events_t")
+    val cache = graft.state.PartitionedStore.bloomCache(spark,
+      root.toString, "events_t", graft.llm.Layout.table("file_t"))
     val truth = laid.select($"file_t", $"user_id").distinct().collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(truth.nonEmpty)
@@ -392,10 +392,11 @@ class LayoutSpec extends AnyFunSuite {
       .filter($"user_id" % 17 === 0).orderBy($"user_id")
       .collect().map(_.getLong(0).toString).toSeq
     assert(probes.nonEmpty)
-    val key = graft.llm.Layout.BloomDriverMaxFilesKey
-    def consult(): (Set[Long], Seq[Long]) =
-      graft.llm.Layout.consultBlooms(spark, root.toString, "events_z",
-        probes)
+    val key = graft.state.PartitionedStore.BloomDriverMaxFilesKey
+    val table = graft.llm.Layout.table("file_z")
+    def consult(): (Seq[Long], Seq[Long]) =
+      graft.state.PartitionedStore.consultPartitions(spark, root.toString,
+        "events_z", table, probes)
     val (allD, drv) = consult() // default: driver path (64 files)
     spark.conf.set(key, "0") // force EVERY store onto the join path
     try {
@@ -421,9 +422,9 @@ class LayoutSpec extends AnyFunSuite {
     // the PER-KEY consult (the q235/q257 point-lookup planner) is
     // path-invariant too: the join path must name for every probe
     // exactly the (key, file) pairs the driver bit-test names
-    def perKey(): (Set[Long], Set[(String, Long)]) = {
-      val (af, pairs) = graft.llm.Layout.consultBloomsPerKey(spark,
-        root.toString, "events_z", probes)
+    def perKey(): (Seq[Long], Set[(String, Long)]) = {
+      val (af, pairs) = graft.state.PartitionedStore.consult(spark,
+        root.toString, "events_z", table, probes)
       (af, pairs.toSet)
     }
     val (pAllD, pDrv) = perKey() // driver path
@@ -434,9 +435,9 @@ class LayoutSpec extends AnyFunSuite {
       assert(pDrv == pJoin,
         s"per-key predictions diverged: ${pDrv.diff(pJoin).take(3)} / " +
           s"${pJoin.diff(pDrv).take(3)}")
-      // and the union of per-key pairs is exactly consultBlooms' set
-      val (_, union) = graft.llm.Layout.consultBlooms(spark,
-        root.toString, "events_z", probes)
+      // and the union of per-key pairs is exactly the set consult's
+      val (_, union) = graft.state.PartitionedStore.consultPartitions(
+        spark, root.toString, "events_z", table, probes)
       assert(pJoin.map(_._2) == union.toSet,
         "per-key union diverged from the union consult")
     } finally spark.conf.unset(key)

@@ -701,8 +701,8 @@ class PlanAuditSpec extends AnyFunSuite {
     graft.llm.Layout.saveLayout(laid, root.toString, "events_t", "file_t")
     val (rows, _) = graft.llm.Layout.loadLayout(spark, root.toString,
       "events_t", "file_t")
-    val cache = graft.llm.Layout.loadBloomCache(spark, root.toString,
-      "events_t")
+    val cache = graft.state.PartitionedStore.bloomCache(spark,
+      root.toString, "events_t", graft.llm.Layout.table("file_t"))
     val probes = rows.select(col("user_id")).distinct()
       .filter(col("user_id") % 17 === 0).collect().map(_.getLong(0))
     assert(probes.nonEmpty)
@@ -750,8 +750,8 @@ class PlanAuditSpec extends AnyFunSuite {
       "file_z", budget, "events_z_sp")
     val (rows, _) = graft.llm.Layout.loadLayout(spark, root.toString,
       "events_z_sp")
-    val cache = graft.llm.Layout.loadBloomCache(spark, root.toString,
-      "events_z_sp")
+    val cache = graft.state.PartitionedStore.bloomCache(spark,
+      root.toString, "events_z_sp", graft.llm.Layout.table("file_z"))
     val probes = rows.select(col("user_id")).distinct()
       .filter(col("user_id") % 17 === 0).collect().map(_.getLong(0))
     assert(probes.nonEmpty)

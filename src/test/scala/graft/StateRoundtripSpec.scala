@@ -318,11 +318,11 @@ class StateRoundtripSpec extends AnyFunSuite {
     // interleaved: under the old shared _staging/<name> path, writer
     // B's stage began by deleting A's staged bytes (the r13 ADVICE
     // hazard); attempt dirs make staging writer-private by construction
-    val a = graft.state.ModelStore.newAttempt(root, "v2")
-    val b = graft.state.ModelStore.newAttempt(root, "v2")
+    val a = graft.state.ModelStore.stageWith(root, "v2")(p =>
+      java.nio.file.Files.writeString(p.resolve("data.txt"), "writer-A"))
+    val b = graft.state.ModelStore.stageWith(root, "v2")(p =>
+      java.nio.file.Files.writeString(p.resolve("data.txt"), "writer-B"))
     assert(a != b, "attempts must be private per writer")
-    java.nio.file.Files.writeString(a.resolve("data.txt"), "writer-A")
-    java.nio.file.Files.writeString(b.resolve("data.txt"), "writer-B")
     // A publishes first and wins
     graft.state.ModelStore.publishExclusive(root, "v2", a)
     // B's publish fails loudly (first-writer-wins) ...
@@ -339,11 +339,11 @@ class StateRoundtripSpec extends AnyFunSuite {
     // abandoned attempts sweep with it; a kept name's IN-FLIGHT attempt
     // survives (the sweeper cannot distinguish in-flight from abandoned,
     // so ownership is the rule)
-    val c = graft.state.ModelStore.newAttempt(root, "v3")
-    java.nio.file.Files.writeString(c.resolve("data.txt"), "writer-C")
+    val c = graft.state.ModelStore.stageWith(root, "v3")(p =>
+      java.nio.file.Files.writeString(p.resolve("data.txt"), "writer-C"))
     graft.state.ModelStore.publishExclusive(root, "v3", c)
-    val d = graft.state.ModelStore.newAttempt(root, "v3") // in-flight
-    java.nio.file.Files.writeString(d.resolve("data.txt"), "writer-D")
+    val d = graft.state.ModelStore.stageWith(root, "v3")(p => // in-flight
+      java.nio.file.Files.writeString(p.resolve("data.txt"), "writer-D"))
     val retired = graft.state.ModelStore.vacuum(root, keep = Set("v3"))
     assert(retired == Seq("v2"), retired.toString)
     assert(!java.nio.file.Files.exists(b),
@@ -404,11 +404,11 @@ class StateRoundtripSpec extends AnyFunSuite {
       graft.state.Catalog.commit(ptr("tab_b"), root, 0L)
     }
     // (2) the publish fast-fail is typed
-    val a = graft.state.ModelStore.newAttempt(root, "v1")
-    java.nio.file.Files.writeString(a.resolve("data.txt"), "A")
+    val a = graft.state.ModelStore.stageWith(root, "v1")(p =>
+      java.nio.file.Files.writeString(p.resolve("data.txt"), "A"))
     graft.state.ModelStore.publishExclusive(root, "v1", a)
-    val b = graft.state.ModelStore.newAttempt(root, "v1")
-    java.nio.file.Files.writeString(b.resolve("data.txt"), "B")
+    val b = graft.state.ModelStore.stageWith(root, "v1")(p =>
+      java.nio.file.Files.writeString(p.resolve("data.txt"), "B"))
     intercept[graft.state.CasConflictException] {
       graft.state.ModelStore.publishExclusive(root, "v1", b)
     }
@@ -417,8 +417,8 @@ class StateRoundtripSpec extends AnyFunSuite {
     // target) — is wrapped as the typed conflict, not a raw
     // FileSystemException whose message is just a path (the r14 ADVICE
     // medium: that loser used to escape the rebase loop entirely)
-    val c = graft.state.ModelStore.newAttempt(root, "v9")
-    java.nio.file.Files.writeString(c.resolve("data.txt"), "C")
+    val c = graft.state.ModelStore.stageWith(root, "v9")(p =>
+      java.nio.file.Files.writeString(p.resolve("data.txt"), "C"))
     val winner = java.nio.file.Paths.get(root, "v9")
     java.nio.file.Files.createDirectories(winner)
     java.nio.file.Files.writeString(winner.resolve("data.txt"), "W")
@@ -479,10 +479,82 @@ class StateRoundtripSpec extends AnyFunSuite {
     // publishing an EMPTY attempt would break the non-empty-directory
     // invariant the rename arbiter depends on (POSIX rename silently
     // replaces an empty-dir target) — refused loudly
-    val empty = graft.state.ModelStore.newAttempt(root, "v_empty")
+    val empty = graft.state.ModelStore.stageWith(root, "v_empty")(_ => ())
     val e = intercept[IllegalArgumentException] {
       graft.state.ModelStore.publishExclusive(root, "v_empty", empty)
     }
     assert(e.getMessage.contains("non-empty"), e.getMessage)
+  }
+
+  /** The attempt dirs left under `<root>/_staging`. */
+  private def staged(root: String): Seq[String] = {
+    val p = java.nio.file.Paths.get(root, "_staging")
+    if (!java.nio.file.Files.isDirectory(p)) Seq.empty
+    else scala.util.Using.resource(java.nio.file.Files.list(p)) { s =>
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.map(_.getFileName.toString).toSeq
+    }
+  }
+
+  test("a Layout or Ivf write that fails mid-commit publishes nothing, " +
+      "keeps the incumbent and leaves no staged attempt") {
+    import spark.implicits._
+    import graft.llm.{Ivf, Layout, Quantize}
+    val root = graft.util.Fs.tempRoot("graft_failed_commit").toString
+    def rowsOf(df: org.apache.spark.sql.DataFrame, key: String) =
+      df.orderBy(key).collect().map(_.toSeq).toSeq
+    def failsCleanly(incumbent: => Seq[Seq[Any]], published: String*)(
+        write: => Unit): Unit = {
+      val before = incumbent
+      val e = intercept[Exception](write)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("injected")),
+        s"failed for another reason: $e")
+      published.foreach(v =>
+        assert(!ModelStore.exists(root, v), s"failed write published $v"))
+      assert(incumbent == before, "the incumbent changed")
+      assert(staged(root).isEmpty, s"attempts left: ${staged(root)}")
+    }
+    try {
+      // Layout: an upsert whose delta column raises while the rewritten
+      // rows are materialized
+      Layout.saveLayout(Layout.eventLayout(graft.ops.Tables.events(spark, sf)),
+        root)
+      def layoutRows = rowsOf(Layout.loadLayout(spark, root)._1, "event_id")
+      val (stored, _) = Layout.loadLayout(spark, root)
+      failsCleanly(layoutRows, "events_z_bad", "events_z_bad_backup") {
+        Layout.upsertRows(spark, root, "events_z", "file_z",
+          stored.limit(5).withColumn("boom",
+            raise_error(lit("injected")).cast("string")), "events_z_bad")
+      }
+      // Ivf save: a compaction whose delta column raises in the lists
+      // write, while the centroid and id-Bloom writes run beside it
+      val e = spark.read.parquet(s"$sf/embeddings.parquet")
+      val cents = Ivf.fitCentroids(e.filter(pmod($"vec_id", lit(10)) === 0),
+        "vec_id", "embedding", nlist = 4)
+      Ivf.saveIndex(Quantize.withInt8(
+        Ivf.assignIndex(e, "vec_id", "embedding", cents), "v").drop("v"),
+        cents, root)
+      def indexRows = rowsOf(Ivf.loadIndex(spark, root)._1, "id")
+      val delta = Quantize.withInt8(Ivf.assignIndex(e.limit(4), "vec_id",
+        "embedding", cents), "v").drop("v")
+      failsCleanly(indexRows, "ivfsq_backup") {
+        Ivf.compactIndex(spark, root, delta.withColumn("qnorm",
+          raise_error(lit("injected")).cast(delta.schema("qnorm").dataType)))
+      }
+      // Ivf copy-on-write: the carry of an untouched list fails on a
+      // dangling link, which parquet readers skip as a hidden file
+      scala.util.Using.resource(java.nio.file.Files.list(
+          java.nio.file.Paths.get(root, "ivfsq", "lists"))) { ls =>
+        ls.filter(_.getFileName.toString.startsWith("list_id=")).forEach(d =>
+          java.nio.file.Files.createSymbolicLink(
+            d.resolve(".injected"), d.resolve("missing")))
+      }
+      val feed = e.limit(1).select(lit("delete").as("op"),
+        $"vec_id".as("id"), lit(null).cast("array<double>").as("vec"))
+      failsCleanly(indexRows, "ivfsq_bad", "ivfsq_bad_backup") {
+        Ivf.maintainIndex(spark, root, feed, "ivfsq", "ivfsq_bad")
+      }
+    } finally graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
   }
 }
