@@ -808,20 +808,7 @@ object Dedup {
     // degrades to a shuffle join instead of an 8GB broadcast failure.
     val total = allIds match {
       case Some(ids) =>
-        val universe = ids.toDF("id")
-        // the fail-silent contract above, made loud on demand: under the
-        // debug flag, a paired id outside allIds (caller derived pairs
-        // from a different table) fails here instead of silently
-        // corrupting keeper assignment downstream. One anti-join over the
-        // (small, checkpointed) label set — cheap, but off by default.
-        if (pairs.sparkSession.conf
-            .get("spark.graft.dedup.checkUniverse", "false").toBoolean) {
-          val stray = labels.join(universe, Seq("id"), "left_anti").count()
-          require(stray == 0L,
-            s"connectedComponents: $stray paired id(s) absent from allIds " +
-              "— pairs must derive from the same table as allIds")
-        }
-        universe.join(labels, Seq("id"), "left")
+        ids.toDF("id").join(labels, Seq("id"), "left")
           .select(col("id"),
             coalesce(col("label"), col("id")).as("label"))
       case None => labels
@@ -832,7 +819,7 @@ object Dedup {
   // ---------------- Embedding near-dup ----------------
 
   /** Cosine near-dup pairs. Brute pair space — correct baseline; at scale
-    * block first with [[SimSearch.withLshBucket]] and join on bucket. */
+    * block first with [[SimSearch.lshBucket]] and join on bucket. */
   def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
     val a = df.select(col(idCol).as("id_a"),
@@ -864,7 +851,7 @@ object Dedup {
     * `bucket` is the LSH blocking expression applied to the (double-cast)
     * vector column: q91 passes the SQL-derivable 4-coordinate sign bucket
     * (oracle-checkable in DuckDB); production can pass
-    * [[SimSearch.withLshBucket]]'s murmur hyperplanes.
+    * [[SimSearch.lshBucket]]'s murmur hyperplanes.
     *
     * Plan shape at 100 TB: the rep table is a partial AGGREGATE (not a
     * window), so map-side combine sends only distinct contents across

@@ -41,10 +41,8 @@ object Ivf {
     * bound the argmin switches to [[assignExprPacked]]: the SAME map-only
     * per-row scan, but the centroid table travels as ONE array literal
     * (data, not unrolled code) folded with an `aggregate` HOF, so plan
-    * size stays O(1) in nlist. Conf-tunable only so the parity spec can
-    * force the packed path at test-sized nlist. */
-  val InlineMaxNlistKey = "spark.graft.ivf.maxInlineNlist"
-  val InlineMaxNlistDefault = 256
+    * size stays O(1) in nlist. */
+  private val MaxInlineNlist = 256
 
   /** Deterministic k-means: returns (listId, centroid) table. The
     * centroid set is tiny (nlist × dim) and lives on the DRIVER between
@@ -103,7 +101,7 @@ object Ivf {
       var i = 0
       while (i < iters && cents.nonEmpty) {
         val updated = pts
-          .withColumn("list_id", argminExpr(spark, col("v"), cents))
+          .withColumn("list_id", argminExpr(col("v"), cents))
           .select(col("list_id"), posexplode(col("v")))
           .groupBy(col("list_id"), col("pos"))
           // decimal sum → mean: order-independent, so centroids are
@@ -141,12 +139,18 @@ object Ivf {
     * would not even analyze) — callers with an empty fit keep the old
     * crossJoin path's empty-in → empty-out behavior via [[assignIndex]]/
     * [[buildIndex]]'s limit(0). */
-  private[llm] def assignExpr(v: Column, cents: Seq[(Int, Seq[Double])]): Column =
+  private[graft] def assignExpr(v: Column,
+      cents: Seq[(Int, Seq[Double])]): Column =
     if (cents.isEmpty) lit(null).cast("int")
-    else array_min(array(cents.map { case (lid, c) =>
-      struct(Distance.sqEuclidean(v, typedLit(c)).as("d"),
-        lit(lid).as("list_id"))
-    }: _*)).getField("list_id")
+    else array_min(listsByDistance(v, cents)).getField("list_id")
+
+  /** The row's `(d, list_id)` struct per centroid
+    * ([[Distance.byDistance]]), with the same `Distance.sqEuclidean`
+    * doubles everywhere the IVF index ranks lists. */
+  private def listsByDistance(v: Column,
+      cents: Seq[(Int, Seq[Double])]): Column =
+    Distance.byDistance(cents.map { case (lid, c) =>
+      (lid, Distance.sqEuclidean(v, typedLit(c))) }, "list_id")
 
   /** [[assignExpr]]'s large-nlist twin: the SAME per-row map-only argmin
     * and the SAME tie-break (the ascending-list_id scan keeps the FIRST
@@ -155,7 +159,8 @@ object Ivf {
     * `typedLit` array-of-structs VALUE folded with an `aggregate` HOF —
     * plan/codegen size is O(1) in nlist instead of one unrolled struct
     * expression per list. Still no join, no shuffle at any nlist. */
-  private def assignExprPacked(v: Column, cents: Seq[(Int, Seq[Double])]): Column =
+  private[graft] def assignExprPacked(v: Column,
+      cents: Seq[(Int, Seq[Double])]): Column =
     if (cents.isEmpty) lit(null).cast("int")
     else aggregate(
       typedLit(cents.sortBy(_._1)),
@@ -177,26 +182,24 @@ object Ivf {
   /** Dispatch between the unrolled argmin (fastest: straight-line fused
     * codegen, right for the fitted nlist≈16..256 range) and the packed
     * fold (bounded plan size, right for production thousands-of-lists
-    * IVF). The conf exists so the parity spec can force the packed path
-    * at test-sized nlist; both paths are map-only. */
-  private def argminExpr(spark: org.apache.spark.sql.SparkSession,
-      v: Column, cents: Seq[(Int, Seq[Double])]): Column = {
-    val rawN = spark.conf.get(InlineMaxNlistKey, InlineMaxNlistDefault.toString)
-    val maxInline = rawN.trim.toIntOption.filter(_ >= 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"$InlineMaxNlistKey must be a non-negative integer, got '$rawN'"))
-    val chosen = if (cents.size <= maxInline) assignExpr(v, cents)
-      else assignExprPacked(v, cents)
-    // a NULL vector must assign a NULL list, identically on BOTH paths:
-    // unguarded, the unrolled array_min's nulls-first struct ordering
-    // would assign list 0 while the packed fold's null-propagating `<`
-    // would assign null — the dispatch threshold must never change
-    // results. (NaN-element vectors DO agree without a guard: both
-    // paths seat the smallest-list NaN candidate and let any finite
-    // distance beat it — see assignExprPacked's merge comment.)
-    if (cents.isEmpty) chosen
-    else when(v.isNotNull, chosen)
-  }
+    * IVF); both paths are map-only. */
+  private def argminExpr(v: Column, cents: Seq[(Int, Seq[Double])]): Column =
+    guarded(if (cents.size <= MaxInlineNlist) assignExpr else assignExprPacked,
+      v, cents)
+
+  /** `argmin` under the null guard every assign path shares: a NULL
+    * vector assigns a NULL list, identically on BOTH paths. Unguarded,
+    * the unrolled array_min's nulls-first struct ordering would assign
+    * list 0 while the packed fold's null-propagating `<` would assign
+    * null — the dispatch bound must never change results. (NaN-element
+    * vectors DO agree without a guard: both paths seat the
+    * smallest-list NaN candidate and let any finite distance beat it —
+    * see assignExprPacked's merge comment.) */
+  private[graft] def guarded(
+      argmin: (Column, Seq[(Int, Seq[Double])]) => Column, v: Column,
+      cents: Seq[(Int, Seq[Double])]): Column =
+    if (cents.isEmpty) argmin(v, cents)
+    else when(v.isNotNull, argmin(v, cents))
 
   /** Tag every row of `df` with its nearest-centroid list id using an
     * ALREADY FITTED centroid table — the deployment shape the
@@ -218,7 +221,7 @@ object Ivf {
     val tagged = df.select(col(idCol).as("id") +:
           col(vecCol).cast("array<double>").as("v") +:
           carryCols.map(col): _*)
-      .withColumn("list_id", argminExpr(df.sparkSession, col("v"), cents))
+      .withColumn("list_id", argminExpr(col("v"), cents))
     // no centroids (empty fit) → empty index, the old crossJoin behavior
     if (cents.isEmpty) tagged.limit(0) else tagged
   }
@@ -232,7 +235,7 @@ object Ivf {
     val cents = fitCentroidsLocal(df, idCol, vecCol, nlist, iters = 3)
     val index = df.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"))
-      .withColumn("list_id", argminExpr(spark, col("v"), cents))
+      .withColumn("list_id", argminExpr(col("v"), cents))
     (if (cents.isEmpty) index.limit(0) else index,
       cents.toDF("list_id", "c"))
   }
@@ -343,10 +346,8 @@ object Ivf {
     * serving path's coarse table). */
   private def probeListsExpr(v: Column, cents: Seq[(Int, Seq[Double])],
       nprobe: Int): Column =
-    slice(transform(array_sort(array(cents.map { case (lid, c) =>
-      struct(Distance.sqEuclidean(v, typedLit(c)).as("d"),
-        lit(lid).as("list_id"))
-    }: _*)), x => x.getField("list_id")), 1, nprobe)
+    slice(transform(array_sort(listsByDistance(v, cents)),
+      x => x.getField("list_id")), 1, nprobe)
 
   /** The SERVING-optimized IVF-SQ search: [[knnQuantized]]'s exact
     * semantics (bit-identical output — q112's oracle replays it) with

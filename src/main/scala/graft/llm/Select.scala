@@ -104,9 +104,8 @@ object Select {
     * differently. */
   def nearestCenter(vq: Column,
       centers: Seq[(Long, Array[Long])]): Column =
-    array_min(array(centers.map { case (cid, c) =>
-      struct(distFp(vq, c).as("d"), lit(cid).as("cid"))
-    }: _*))
+    array_min(graft.ml.Distance.byDistance(
+      centers.map { case (cid, c) => (cid, distFp(vq, c)) }, "cid"))
 
   /** Coverage report for a [[kCenterGreedy]] selection: every corpus
     * point (selected ones included — they cover themselves at distance
@@ -129,7 +128,7 @@ object Select {
   }
 
   /** Global coverage objective for a center set: the k-center quantity
-    * itself — the worst point-to-nearest-center distance. One map-only
+    * itself — the worst point-to-[[nearestCenter]] distance. One map-only
     * pass (centers literal, as everywhere in this family) + a 1-row
     * aggregate. Long-safe at any corpus size: only a max crosses the
     * aggregation, never a sum of distances. */
@@ -139,8 +138,7 @@ object Select {
     val spark = df.sparkSession
     import spark.implicits._
     quantized(df, idCol, vecCol)
-      .select(array_min(array(centers.map { case (_, c) =>
-        distFp($"vq", c) }: _*)).as("d"))
+      .select(nearestCenter($"vq", centers).getField("d").as("d"))
       .agg(max($"d").as("max_radius_fp"))
   }
 

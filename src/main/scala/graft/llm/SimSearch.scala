@@ -64,12 +64,6 @@ object SimSearch {
   def lshBuckets(vec: Array[Float], bits: Int, tables: Int): Array[Int] =
     Array.tabulate(tables)(t => (t << bits) | lshBucket(vec, bits, t))
 
-  def withLshBucket(df: DataFrame, vecCol: String, bits: Int = 8,
-      out: String = "bucket"): DataFrame = {
-    val f = udf((v: Array[Float]) => lshBucket(v, bits))
-    df.withColumn(out, f(col(vecCol).cast("array<float>")))
-  }
-
   /** Exact top-k cosine neighbors of `queries` among `candidates`. */
   def knnBrute(queries: DataFrame, candidates: DataFrame, qId: String,
       cId: String, vecCol: String, k: Int): DataFrame = {

@@ -52,28 +52,44 @@ object Centroids {
     }
   }
 
+  /** THE nearest-centre rule, shared by every sequential fold and
+    * per-row probe in the engine (the semantic-group folds, the frozen
+    * scorer, DenStream's learn and predict): the index of the centre in
+    * `0 until n` nearest to `q` — strict `<`, so the first minimum wins
+    * and a NaN distance never seats — if that distance is strictly below
+    * `threshold`, else -1 (no join). The probe is built once per centre
+    * table, so the kernel costs no allocation or boxing per row. */
+  def nearestWithin(q: Array[Float], n: Int, threshold: Double,
+      dist: Distance.CentreDist): Int = {
+    var best = -1
+    var bestD = Double.MaxValue
+    var i = 0
+    while (i < n) {
+      val d = dist(q, i)
+      if (d < bestD) { bestD = d; best = i }
+      i += 1
+    }
+    if (best >= 0 && bestD < threshold) best else -1
+  }
+
   /** Sequential fold with a pluggable pair distance — the reference's loop
-    * shape (compare to all live centroids, strict first-min argmin, strict
-    * `< threshold` join-else-found). [[foldAssign]] specializes it to
-    * Minkowski; q68 runs the same control flow under squared Euclidean so
-    * the fold is oracle-reproducible on exact-integer geometry. */
+    * shape (compare to all live centroids, [[nearestWithin]]'s first-min
+    * argmin, strict `< threshold` join-else-found). [[foldAssign]]
+    * specializes it to Minkowski; q68 runs the same control flow under
+    * squared Euclidean so the fold is oracle-reproducible on
+    * exact-integer geometry. `seed` is the centroids carried in from
+    * earlier input (the streaming fold's state store). */
   def foldAssignWith(rows: Iterator[(Long, Array[Float])], threshold: Double,
-      dist: Distance.PairDist)
+      dist: Distance.PairDist, seed: Seq[Centroid] = Nil)
       : (ArrayBuffer[Centroid], ArrayBuffer[(Long, String)]) = {
-    val cs = ArrayBuffer.empty[Centroid]
+    val cs = ArrayBuffer.from(seed)
+    val toCentre: Distance.CentreDist = (v, i) => dist(v, cs(i).center)
     val out = ArrayBuffer.empty[(Long, String)]
     rows.foreach { case (id, vec) =>
-      var best = -1
-      var bestD = Double.MaxValue
-      var i = 0
-      while (i < cs.length) {
-        val dd = dist(vec, cs(i).center)
-        if (dd < bestD) { bestD = dd; best = i }
-        i += 1
-      }
-      if (best >= 0 && bestD < threshold) {
-        cs(best).n += 1
-        out += ((id, cs(best).semanticId))
+      val k = nearestWithin(vec, cs.length, threshold, toCentre)
+      if (k >= 0) {
+        cs(k).n += 1
+        out += ((id, cs(k).semanticId))
       } else {
         val cent = Centroid(s"sem_grp_$id", vec, 1L)
         cs += cent
@@ -176,23 +192,18 @@ object Centroids {
   }
 
   /** Batch scoring against a frozen centroid table (the incremental path
-    * once state is loaded): broadcast nested-loop argmin, C4 shape.
+    * once state is loaded): a per-row [[nearestWithin]] probe of the
+    * captured centroids, C4 shape.
     * Null vectors (e.g. from null source text) score to null group. */
   def scoreAgainst(df: DataFrame, centroids: Array[Centroid],
       vecCol: String, threshold: Double, p: Double = 1.5): DataFrame = {
+    val toCentre: Distance.CentreDist =
+      (v, i) => Distance.minkowskiS(v, centroids(i).center, p)
     val score = udf { (vec: Array[Float]) =>
       if (vec == null) null
       else {
-        var best = -1
-        var bestD = Double.MaxValue
-        var i = 0
-        while (i < centroids.length) {
-          val dd = Distance.minkowskiS(vec, centroids(i).center, p)
-          if (dd < bestD) { bestD = dd; best = i }
-          i += 1
-        }
-        if (best >= 0 && bestD < threshold) centroids(best).semanticId
-        else null
+        val k = nearestWithin(vec, centroids.length, threshold, toCentre)
+        if (k >= 0) centroids(k).semanticId else null
       }
     }
     df.withColumn("semantic_group", score(col(vecCol).cast("array<float>")))

@@ -24,22 +24,41 @@ object DenStream {
   final case class MicroCluster(id: Int, center: Array[Double],
       var weight: Double, var lastT: Long)
 
+  /** Euclidean distance from an embedding to a micro-cluster centre. */
+  private def dist(v: Array[Float], c: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < v.length) { val d = v(i) - c(i); s += d * d; i += 1 }
+    math.sqrt(s)
+  }
+
+  /** predict_one over an `(id, center)` snapshot of the micro-clusters:
+    * the id of the [[Centroids.nearestWithin]] micro-cluster within
+    * `eps`, else -1 (noise; also for a null embedding from null source
+    * text). [[Model.predictOne]] and the [[withPredictions]] UDF both
+    * probe through it. */
+  private final class Snapshot(ids: Array[Int], centers: Array[Array[Double]],
+      eps: Double) extends Serializable {
+    private val toCentre: Distance.CentreDist = (v, i) => dist(v, centers(i))
+    def predict(vec: Array[Float]): Int =
+      if (vec == null) -1
+      else {
+        val k = Centroids.nearestWithin(vec, centers.length, eps, toCentre)
+        if (k >= 0) ids(k) else -1
+      }
+  }
+
   final class Model(val epsilon: Double, val lambda: Double,
       val clusters: ArrayBuffer[MicroCluster] = ArrayBuffer.empty) {
     private var nextId = 0
     private var clock = 0L
+    private val toCluster: Distance.CentreDist =
+      (v, i) => dist(v, clusters(i).center)
 
     /** Restore id allocation + decay clock after state reload. */
     private[DenStream] def resumeAt(id: Int, t: Long): Unit = {
       nextId = id
       clock = t
-    }
-
-    private def dist(v: Array[Float], c: Array[Double]): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < v.length) { val d = v(i) - c(i); s += d * d; i += 1 }
-      math.sqrt(s)
     }
 
     private def decay(mc: MicroCluster, t: Long): Unit = {
@@ -49,19 +68,18 @@ object DenStream {
       }
     }
 
+    /** Every micro-cluster decays to the new tick, then the vector joins
+      * the nearest within epsilon or founds a new one. Decay changes
+      * weights, never centres, so decaying first leaves the probe's
+      * answer unchanged. */
     def learnOne(vec: Array[Float]): Unit = {
       clock += 1
-      var best = -1
-      var bestD = Double.MaxValue
       var i = 0
-      while (i < clusters.length) {
-        decay(clusters(i), clock)
-        val d = dist(vec, clusters(i).center)
-        if (d < bestD) { bestD = d; best = i }
-        i += 1
-      }
-      if (best >= 0 && bestD < epsilon) {
-        val mc = clusters(best)
+      while (i < clusters.length) { decay(clusters(i), clock); i += 1 }
+      val k = Centroids.nearestWithin(vec, clusters.length, epsilon,
+        toCluster)
+      if (k >= 0) {
+        val mc = clusters(k)
         val w = mc.weight
         i = 0
         while (i < vec.length) {
@@ -77,18 +95,11 @@ object DenStream {
         clusters.filterInPlace(_.weight >= 0.1)
     }
 
+    private[DenStream] def snapshot: Snapshot = new Snapshot(
+      clusters.map(_.id).toArray, clusters.map(_.center).toArray, epsilon)
+
     /** predict_one: nearest micro-cluster within epsilon, else -1 (noise). */
-    def predictOne(vec: Array[Float]): Int = {
-      var best = -1
-      var bestD = Double.MaxValue
-      var i = 0
-      while (i < clusters.length) {
-        val d = dist(vec, clusters(i).center)
-        if (d < bestD) { bestD = d; best = i }
-        i += 1
-      }
-      if (best >= 0 && bestD < epsilon) clusters(best).id else -1
-    }
+    def predictOne(vec: Array[Float]): Int = snapshot.predict(vec)
   }
 
   /** Ordered training fold (reference training loop shape: bounded input,
@@ -122,26 +133,8 @@ object DenStream {
     * streams through executors. */
   def withPredictions(df: DataFrame, model: Model, vecCol: String,
       out: String = "cluster_id"): DataFrame = {
-    val centers = model.clusters.map(c => (c.id, c.center)).toArray
-    val eps = model.epsilon
-    val predict = udf { (vec: Array[Float]) =>
-      if (vec == null) -1 // null embedding (null source text) => noise
-      else {
-        var best = -1
-        var bestD = Double.MaxValue
-        var i = 0
-        while (i < centers.length) {
-          val c = centers(i)._2
-          var s = 0.0
-          var j = 0
-          while (j < vec.length) { val d = vec(j) - c(j); s += d * d; j += 1 }
-          val dd = math.sqrt(s)
-          if (dd < bestD) { bestD = dd; best = i }
-          i += 1
-        }
-        if (best >= 0 && bestD < eps) centers(best)._1 else -1
-      }
-    }
+    val snap = model.snapshot
+    val predict = udf((vec: Array[Float]) => snap.predict(vec))
     df.withColumn(out, predict(col(vecCol).cast("array<float>")))
   }
 

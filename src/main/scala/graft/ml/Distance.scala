@@ -27,6 +27,15 @@ object Distance {
   def minkowskiHof(a: Column, b: Column, p: Double): Column =
     pow(zsum(a, b, (x, y) => pow(abs(x - y), p)), 1.0 / p)
 
+  /** The column side of the nearest-centre rule: one `(d, <idName>)`
+    * struct per `(id, distance)` pair. Struct order compares `d` first,
+    * then the id, so `array_min` over the array is the nearest centre
+    * with ties to the smaller id, and `array_sort` ranks every centre by
+    * that same order. Built once per row from literal centres, it stays
+    * a map-only per-row expression: no join, no shuffle. */
+  def byDistance(ds: Seq[(Any, Column)], idName: String): Column =
+    array(ds.map { case (id, d) => struct(d.as("d"), lit(id).as(idName)) }: _*)
+
   /** Squared Euclidean (cheaper when only ordering matters). */
   def sqEuclidean(a: Column, b: Column): Column =
     graft.functions.VectorExprs.sqEuclidean(a, b)
@@ -64,6 +73,14 @@ object Distance {
     * call site primitive-returning. */
   trait PairDist extends Serializable {
     def apply(a: Array[Float], b: Array[Float]): Double
+  }
+
+  /** Distance from a query vector to centre `i` of the centre table the
+    * probe closes over — [[graft.ml.Centroids.nearestWithin]]'s argument.
+    * A SAM like [[PairDist]], taking the query as an argument, so one
+    * probe per table serves every row with no capture per row. */
+  trait CentreDist extends Serializable {
+    def apply(q: Array[Float], i: Int): Double
   }
 
   /** Plain-Scala twins for driver-side/fold code (same formulas). */

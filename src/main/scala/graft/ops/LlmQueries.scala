@@ -7151,7 +7151,7 @@ object LlmQueries {
   /** q56 — LSH-blocked embedding near-dup (the 100 TB path for q44's
     * brute baseline). The blocking hash is axis-aligned random-hyperplane
     * LSH (sign of 4 fixed coordinates → 16 buckets): same Charikar family
-    * as [[SimSearch.withLshBucket]]'s murmur hyperplanes, but expressible
+    * as [[SimSearch.lshBucket]]'s murmur hyperplanes, but expressible
     * in SQL — so the full blocked-pair semantics (bucket restriction +
     * cosine threshold) are hash-checked in DuckDB, not just
     * ScalaTest-gated. One shuffle on the bucket key; pair space is

@@ -575,10 +575,7 @@ object MlQueries {
   /** q32 — online semantic grouping (reference J2; rows-only). */
   def q32SemanticGroups(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val logs = Enrich.logView(s, d)
-      .withColumn("embed_text",
-        concat($"message", lit(". Parsed: "), $"parsed_data"))
-    val emb = Embed.withEmbedding(logs, "embed_text")
+    val emb = Enrich.withEmbedding(Enrich.logView(s, d))
     Centroids.assign(emb, "log_id", "embedding", threshold = 1.8)
       .groupBy($"semantic_group").agg(count(lit(1)).as("n"))
       .orderBy($"semantic_group")
@@ -640,10 +637,7 @@ object MlQueries {
     * (SURVEY.md §7.4 risk 1 scale-out path). */
   def q36SemanticSharded(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val logs = Enrich.logView(s, d)
-      .withColumn("embed_text",
-        concat($"message", lit(". Parsed: "), $"parsed_data"))
-    val emb = Embed.withEmbedding(logs, "embed_text")
+    val emb = Enrich.withEmbedding(Enrich.logView(s, d))
     Centroids.assignSharded(emb, "log_id", "embedding", threshold = 1.8,
         shards = 4)
       .groupBy($"semantic_group").agg(count(lit(1)).as("n"))

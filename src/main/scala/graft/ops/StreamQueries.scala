@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Dedup, Layout}
+import graft.pipeline.Enrich
 import graft.streaming.StreamOps
 import graft.streaming.StreamHarness.{fourBatchSource, runForeachBatch,
   runToMemory, tiledSource, tile4}
@@ -40,14 +41,9 @@ object StreamQueries {
     * event stream (state carried across micro-batches). */
   def q61StreamSemantic(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val logs = StreamOps.eventsStream(s, d)
-      .filter($"event_type".isin("error", "signup", "purchase"))
-      .withColumn("embed_text",
-        concat($"event_type", lit(" user="), $"user_id",
-          lit(". Parsed: "), $"props"))
-    val embedded = graft.ml.Embed.withEmbedding(logs, "embed_text")
-    val pairs = embedded
-      .select($"event_id".as("_1"), $"embedding".as("_2"))
+    val logs = Enrich.kept(Enrich.logColumns(StreamOps.eventsStream(s, d)))
+    val pairs = Enrich.withEmbedding(logs)
+      .select($"log_id".as("_1"), $"embedding".as("_2"))
       .as[(Long, Array[Float])]
     val out = StreamOps.statefulSemanticGroups(pairs, threshold = 1.8)
     runToMemory(out, "update") { sink =>
@@ -1769,12 +1765,12 @@ object StreamQueries {
     * commit whose version already published is SKIPPED (the store is
     * immutable-per-version; the publish was the transaction). */
   private[ops] final case class UpsertChain(root: String,
-      versions: Seq[String], feedDir: String,
+      versions: Seq[String], feedDir: Option[String],
       audit: Seq[(Long, String, Long, Long)], nIns: Long, nRep: Long,
       ftTouched: Long) {
     /** Deletes the chain's store and feed roots, for a query that
       * builds its own chain and has materialized its result. */
-    def release(): Unit = Seq(root, feedDir).foreach(p =>
+    def release(): Unit = (root +: feedDir.toSeq).foreach(p =>
       graft.util.Fs.releaseTempRoot(java.nio.file.Paths.get(p)))
   }
 
@@ -1817,7 +1813,8 @@ object StreamQueries {
     val nIns = auditHead.getLong(0)
     val nRep = auditHead.getLong(1)
     val ftTouched = auditHead.getLong(2)
-    val feedDir = graft.util.Fs.tempRoot("graft_chainfeed").toString
+    val feedDir = Option.when(withFeeds)(
+      graft.util.Fs.tempRoot("graft_chainfeed").toString)
     // audit keyed by batch id — idempotent under re-execution
     val audit = new java.util.concurrent.ConcurrentHashMap[
       Long, (String, Long, Long)]()
@@ -1858,11 +1855,11 @@ object StreamQueries {
         // the commit is about to supersede; overwrite to the
         // id-derived path = re-execution-safe. Only emitted when
         // the caller's lifecycle includes the feed surface (q252).
-        () => if (withFeeds)
+        () => feedDir.foreach(dir =>
           Layout.writerFeed(s, root, incumbent, "file_z", bb,
               preloaded = Some(inc))
             .withColumn("commit_id", lit(commitNo))
-            .write.mode("overwrite").parquet(s"$feedDir/c$commitNo"),
+            .write.mode("overwrite").parquet(s"$dir/c$commitNo")),
         // one action for both per-commit audit values
         () => {
           val h =
@@ -2015,7 +2012,7 @@ object StreamQueries {
     // writer-emitted CDC is this query's lifecycle
     val chain = buildUpsertChain(s, d, withFeeds = true)
     try s.read.option("recursiveFileLookup", "true")
-      .parquet(chain.feedDir)
+      .parquet(chain.feedDir.get)
       .groupBy($"commit_id", $"op", $"file_z")
       .agg(count(lit(1)).as("n"), sum($"event_id").as("e_mass"),
         sum($"user_id").as("u_mass"))

@@ -41,12 +41,17 @@ object Enrich {
       col("props").as("parsed_data"),
       col("event_type"))
 
+  /** The rows the reference enriches: warning and error levels, over
+    * any [[logColumns]] frame. */
+  def kept(logs: DataFrame): DataFrame =
+    logs.filter(col("level").isin("warning", "error"))
+
   /** The embedding of the text exactly as the reference composes it
-    * (H2). One expression, with no text column of its own: over the
-    * training sample's `orderBy.limit` it then plans as one top-k pass
-    * over `events`, where a separate text column would plan a range
-    * sort with its own sampling scan. */
-  private def withEmbedding(logs: DataFrame): DataFrame =
+    * (H2), over any [[logColumns]] frame. One expression, with no text
+    * column of its own: over the training sample's `orderBy.limit` it
+    * then plans as one top-k pass over `events`, where a separate text
+    * column would plan a range sort with its own sampling scan. */
+  def withEmbedding(logs: DataFrame): DataFrame =
     logs.withColumn("embedding", Embed.embedCol(
       concat(col("message"), lit(". Parsed: "), col("parsed_data"))))
 
@@ -68,8 +73,7 @@ object Enrich {
     // (CalibrateSpec sweep: eps=1.0 → homogeneity .99 vs event_type); the
     // reference's 0.9 / 0.35 are MiniLM-space values (model.py:10-15,
     // run_incremental_batch.py:49) and do not transfer (SURVEY §7.4 r3).
-    val logs = logView(spark, sfDir)
-      .filter(col("level").isin("warning", "error"))
+    val logs = kept(logView(spark, sfDir))
       .orderBy("log_id")
       .limit(limit)
     val embedded = withEmbedding(logs)
@@ -107,8 +111,7 @@ object Enrich {
   def score(logs: DataFrame, model: DenStream.Model,
       centroids: Array[Centroids.Centroid],
       semThreshold: Double = DefaultSemThreshold): DataFrame = {
-    val kept = logs.filter(col("level").isin("warning", "error"))
-    val withSem = Centroids.scoreAgainst(withEmbedding(kept), centroids,
+    val withSem = Centroids.scoreAgainst(withEmbedding(kept(logs)), centroids,
       "embedding", semThreshold)
     DenStream.withPredictions(withSem, model, "embedding")
   }

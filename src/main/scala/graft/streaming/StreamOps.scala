@@ -56,10 +56,10 @@ object StreamOps {
     statefulSemanticGroupsWith(events, threshold,
       graft.ml.Distance.minkowskiS(_, _, p))
 
-  /** [[statefulSemanticGroups]] with a pluggable pair distance — the same
-    * parameterization as `Centroids.foldAssignWith`; q86 runs it under
-    * squared Euclidean so the streaming state machinery is
-    * oracle-checkable. */
+  /** [[statefulSemanticGroups]] with a pluggable pair distance: each
+    * micro-batch is `Centroids.foldAssignWith` seeded with the state's
+    * centroids; q86 runs it under squared Euclidean so the streaming
+    * state machinery is oracle-checkable. */
   def statefulSemanticGroupsWith(events: Dataset[(Long, Array[Float])],
       threshold: Double,
       dist: graft.ml.Distance.PairDist): Dataset[SemAssign] = {
@@ -70,32 +70,16 @@ object StreamOps {
         GroupStateTimeout.NoTimeout) {
         (_: Int, rows: Iterator[(Long, Array[Float])],
          state: GroupState[CentroidState]) =>
-          val existing = state.getOption
+          val seed = state.getOption
             .map(_.centroids.map(c =>
               Centroids.Centroid(c._1, c._2.toArray, 0L)))
-            .getOrElse(Seq.empty)
-          val buf = scala.collection.mutable.ArrayBuffer(existing: _*)
-          val sorted = rows.toArray.sortBy(_._1) // strict id order in batch
-          val out = scala.collection.mutable.ArrayBuffer.empty[SemAssign]
-          sorted.foreach { case (id, vec) =>
-            var best = -1
-            var bestD = Double.MaxValue
-            var i = 0
-            while (i < buf.length) {
-              val dd = dist(vec, buf(i).center)
-              if (dd < bestD) { bestD = dd; best = i }
-              i += 1
-            }
-            if (best >= 0 && bestD < threshold)
-              out += SemAssign(id, buf(best).semanticId)
-            else {
-              buf += Centroids.Centroid(s"sem_grp_$id", vec, 1L)
-              out += SemAssign(id, s"sem_grp_$id")
-            }
-          }
+            .getOrElse(Nil)
+          // strict id order within the batch, the state's centroids first
+          val (cs, out) = Centroids.foldAssignWith(
+            rows.toArray.sortBy(_._1).iterator, threshold, dist, seed)
           state.update(CentroidState(
-            buf.toSeq.map(c => (c.semanticId, c.center.toSeq))))
-          out.iterator
+            cs.toSeq.map(c => (c.semanticId, c.center.toSeq))))
+          out.iterator.map { case (id, g) => SemAssign(id, g) }
       }
   }
 

@@ -263,21 +263,19 @@ class EdgeCasesSpec extends AnyFunSuite {
     val inline = assigned(Ivf.assignIndex(df, "id", "vec", cents))
     assert(inline.find(_._1 == 98L).exists(_._2 == -1),
       "null vector must assign a null list")
-    // force the packed aggregate-HOF path (production thousands-of-lists
-    // shape) at test-sized nlist and demand identical assignments —
-    // including identical (distance, list_id) tie-breaks and the
-    // null/NaN degenerates
-    spark.conf.set(Ivf.InlineMaxNlistKey, "0")
-    try {
-      val packed = assigned(Ivf.assignIndex(df, "id", "vec", cents))
-      assert(packed == inline)
-      // conf validation mirrors maxFitRows
-      spark.conf.set(Ivf.InlineMaxNlistKey, "many")
-      val bad = intercept[IllegalArgumentException] {
-        Ivf.assignIndex(df, "id", "vec", cents).collect()
-      }
-      assert(bad.getMessage.contains(Ivf.InlineMaxNlistKey))
-    } finally spark.conf.unset(Ivf.InlineMaxNlistKey)
+    // both argmin expressions through the same null guard the index
+    // applies: the unrolled one is what assignIndex ran at this nlist;
+    // the packed aggregate-HOF one (production thousands-of-lists shape)
+    // must give identical assignments — including identical
+    // (distance, list_id) tie-breaks and the null/NaN degenerates
+    val centList = cents.collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
+    def assignedBy(argmin: (org.apache.spark.sql.Column,
+        Seq[(Int, Seq[Double])]) => org.apache.spark.sql.Column) =
+      assigned(df.select($"id",
+        Ivf.guarded(argmin, $"vec", centList).as("list_id")))
+    assert(assignedBy(Ivf.assignExpr) == inline)
+    assert(assignedBy(Ivf.assignExprPacked) == inline)
   }
 
   test("q98 driver-fit guard points at the q26 aggregation") {

@@ -120,6 +120,17 @@ class FixturesSpec extends AnyFunSuite {
       n -> (graftDirs() -- before)
     }.filter(_._2.nonEmpty)
     assert(added.isEmpty, s"second invocations left dirs: $added")
+    // q255 reads its upsert chain as a store fixture, so its second run
+    // builds nothing: on a fresh dataset key, its first run (the chain's
+    // build) must leave no graft_ dir but fixture dirs
+    val copy = Fs.tempRoot("graft_fixtures_spec_sf")
+    try {
+      Fs.copyRecursively(Paths.get(sf), copy)
+      val before = graftDirs()
+      SparkEntry.queries("q255_stream_asof")(spark, copy.toString).collect()
+      val left = graftDirs() -- before -- fixtureDirs()
+      assert(left.isEmpty, s"q255's chain build left dirs: $left")
+    } finally Fs.releaseTempRoot(copy)
   }
 
   test("q258 and q260 publish no version on the shared split store") {

@@ -110,6 +110,27 @@ class MlSpec extends AnyFunSuite {
     assert(m.predictOne(Array(0f, 10f)) == -1) // noise
   }
 
+  test("DenStream.withPredictions equals predictOne row for row") {
+    import spark.implicits._
+    val m = new DenStream.Model(epsilon = 1.5, lambda = 0.0)
+    m.learnOne(Array(1f, 0f)); m.learnOne(Array(-1f, 0f)) // ids 0, 1
+    val vecs: Seq[(Long, Array[Float])] = Seq(
+      1L -> Array(0f, 0f),     // equidistant: the first micro-cluster
+      2L -> Array(1f, 1.5f),   // exactly epsilon from cluster 0: noise
+      3L -> null,              // null embedding: noise
+      4L -> Array(0.9f, 0.1f),
+      5L -> Array(-1.2f, 0f),
+      6L -> Array(10f, 10f))   // far from both: noise
+    val expected = Map(1L -> 0, 2L -> -1, 3L -> -1, 4L -> 0, 5L -> 1,
+      6L -> -1)
+    assert(vecs.map { case (id, v) => id -> m.predictOne(v) }.toMap
+      == expected)
+    val udfSide = DenStream.withPredictions(vecs.toDF("id", "vec"), m, "vec")
+      .select("id", "cluster_id").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(udfSide == expected)
+  }
+
   test("DenStream decay halves weight after 1/lambda steps shape") {
     val m = new DenStream.Model(epsilon = 0.1, lambda = 0.1)
     m.learnOne(Array(1f, 0f))

@@ -55,6 +55,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(got(3L) == "sem_grp_1", s"state not carried: $got")
   }
 
+  test("the 4-trigger streaming fold equals foldAssignWith over the " +
+      "id-ordered input") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val rows = (1L to 40L).map(i => i -> Array(math.sin(i.toDouble).toFloat,
+      math.cos(2.0 * i).toFloat, (i % 5) / 5f))
+    val expected = graft.ml.Centroids.foldAssignWith(rows.iterator,
+      threshold = 0.8, graft.ml.Distance.minkowskiS(_, _, 1.5))._2.toMap
+    // the fold both joins and founds across the input
+    assert(expected.values.toSet.size > 1 && expected.values.toSet.size < 40)
+    val input = MemoryStream[(Long, Array[Float])]
+    val out = StreamOps.statefulSemanticGroups(input.toDS(), threshold = 0.8)
+    val q = out.writeStream
+      .outputMode("update")
+      .format("memory").queryName("sem_fold")
+      .start()
+    // four ascending id ranges, each arriving in reverse id order
+    rows.grouped(10).foreach { batch =>
+      input.addData(batch.reverse: _*)
+      q.processAllAvailable()
+    }
+    q.stop()
+    val got = spark.table("sem_fold").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    spark.catalog.dropTempView("sem_fold")
+    assert(got == expected)
+  }
+
   test("streaming exact dedup suppresses later-batch copies and emits " +
       "the batch-min id once per content") {
     import spark.implicits._
